@@ -11,7 +11,7 @@ from dataclasses import dataclass, field
 # Number of host-hash buckets used for partitioning/bucketing frontier, seen
 # and documents tables (SURVEY.md §1).  At 10^10-URL scale this would be
 # O(10^3-10^4); at sandbox scale keep it small enough that every bucket gets
-# data but large enough to exercise the partition-addressable Bloom sidecars.
+# data but large enough to exercise host-hash clustering of the table files.
 NUM_HOST_BUCKETS = 32
 
 # Politeness: one crawl round models a fixed wall-clock window; a host with
@@ -22,7 +22,7 @@ ROUND_SECONDS = 30.0
 # BFS depth bound for the synthetic web fixture (FIXTURES.md §6).
 MAX_DEPTH = 4
 
-# Bloom sidecar sizing (SURVEY.md §2.3 A3): target false-positive rate.
+# Bloom filter target false-positive rate (SURVEY.md §2.3 A3).
 BLOOM_FP_RATE = 0.01
 
 # Arrow batch size for the fetch/parse mapInPandas stages.

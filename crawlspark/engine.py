@@ -5,8 +5,8 @@ One driver loop iteration = one crawl round:
   frontier snapshot → [cuckoo ban prefilter → broadcast robots join → robots
   path match] → [per-host priority ranking → crawl-delay budget admission] →
   [salted repartition → mapInPandas fetch/parse] → documents + edges appends →
-  [canonicalize extracted links → intra-round dedup → Bloom prefilter →
-  exact seen anti-join] → next frontier snapshot → atomic manifest commit.
+  [canonicalize extracted links → intra-round dedup → exact seen anti-join]
+  → next frontier snapshot → atomic manifest commit.
 
 Crawl-ordering determinism (BASELINE.json:14 "matching the reference's crawl
 ordering"): the reference is sequential, so a parallel engine reproduces its
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawlspark.config import BLOOM_FP_RATE, CrawlConfig
+from crawlspark.config import CrawlConfig
 from crawlspark.filters import CuckooFilter
 from crawlspark.functions.canon import canonicalize_udf, with_url_identity
 from crawlspark.functions.robots import allowed_series, path_of
@@ -119,12 +119,6 @@ def _signed64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-# Per-python-worker cache of deserialized filter structures. Bloom blobs are
-# keyed by their immutable (sidecar-path, round, bucket) identity, so entries
-# stay valid across rounds; Arrow batches after the first are pure probes.
-_WORKER_CACHE: dict = {}
-
-
 _SPANS_EXPR = (
     "transform(arrays_zip(kind, text, media_ref, offset), "
     "s -> struct(s.kind as kind, s.text as text, "
@@ -152,33 +146,19 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.storage = storage
-        # A3/A5 driver-side Bloom state is ONLY an int index
-        # {bucket: round of its latest merged blob parquet}: the blobs
-        # themselves live in the _filters/bloom sidecar and are read
-        # bucket-addressed by the executors that own the bucket. At the
-        # 10^10 design point the index is O(num_buckets) ints where the
-        # blob bytes are ~12 GB (filters.py docstring math).
-        self._bloom_index: dict[int, int] = {}
+        # A4 ban filter. Its contents are a pure function of the config and
+        # the round (banned hosts inserted here, deleted from unban_round on
+        # by _refresh_cuckoo), so a fresh run and a resume rebuild the same
+        # filter and nothing is checkpointed.
         self.cuckoo = CuckooFilter(capacity=max(64, cfg.web_hosts * 4))
+        for key in self._banned_host_keys():
+            self.cuckoo.insert(key)
         self.history: list[RoundMetrics] = []
         # pagerank-priority rank cache: (basis_round, ranks DataFrame). The
         # ranks are a pure function of the committed edges table at the
         # basis round, so the cache is a recompute-avoidance only — resume
         # or cache loss recomputes the identical frame.
         self._rank_cache: tuple[int, DataFrame] | None = None
-
-    def _bloom_capacity(self) -> int:
-        """Per-bucket Bloom capacity, sized from the A6 cardinality estimate
-        (approx_count_distinct over the frontier, committed in the round
-        manifest): a NEW bucket's filter is provisioned for ~4 rounds of
-        growth at the observed per-bucket rate, floored at 2^16. Existing
-        buckets keep their shape (the fold ORs into the previous blob);
-        undersizing only raises the FP rate, and the exact anti-join
-        backstop keeps correctness independent of the estimate (SURVEY.md
-        §2.3 exactness invariant)."""
-        est = int(getattr(self, "_last_distinct_est", 0) or 0)
-        per_bucket = -(-est * 4 // max(1, self.cfg.num_host_buckets))
-        return max(1 << 16, per_bucket)
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
@@ -209,81 +189,27 @@ class CrawlEngine:
         self._robots_cached = self.spark.createDataFrame(rows, schema)
         return self._robots_cached
 
-    def _banned_hosts(self) -> list[str]:
-        return [r["host"] for r in synthweb.robots_table(self.cfg) if r["banned"]]
+    def _banned_host_keys(self) -> list[int]:
+        return [
+            _signed64(synthweb.stable_hash("host:" + r["host"], self.cfg.seed))
+            for r in synthweb.robots_table(self.cfg)
+            if r["banned"]
+        ]
 
     def _refresh_cuckoo(self, rnd: int) -> None:
         """A4: deletable politeness bans. Hosts banned in the robots fixture
-        are inserted at bootstrap; from ``cfg.unban_round`` on they are
-        *deleted* (the operation a Bloom filter cannot do), after which their
-        URLs become eligible again. The exact ban state is
+        are in the filter from construction; from ``cfg.unban_round`` on they
+        are *deleted* (the operation a Bloom filter cannot do), after which
+        their URLs become eligible again. The exact ban state is
         ``robots.banned AND rnd < unban_round``; the cuckoo filter mirrors it
         and serves as the broadcastable executor-side prefilter."""
-        if rnd == 0:
-            for h in self._banned_hosts():
-                self.cuckoo.insert(_signed64(synthweb.stable_hash("host:" + h, self.cfg.seed)))
-        elif (
+        if (
             self.cfg.unban_round is not None
             and rnd >= self.cfg.unban_round
             and self.cuckoo.n_items > 0
         ):
-            for h in self._banned_hosts():
-                self.cuckoo.delete(_signed64(synthweb.stable_hash("host:" + h, self.cfg.seed)))
-
-    def _with_maybe_seen(self, cand: DataFrame, n_parts: int | None = None) -> DataFrame:
-        """A3 Bloom prefilter, partition-addressable: candidates are
-        co-partitioned with the filter by host-hash bucket, and each task
-        loads only its buckets' merged blobs from the sidecar parquet
-        (executor-cached under the immutable (round, bucket) key — a blob
-        file is never rewritten, so cache entries never invalidate). The
-        driver broadcasts ONLY the int index {bucket: latest_round}.
-
-        The repartition by host_hash doubles as the co-location the exact
-        anti-join (A2) wants on its probe side: HashPartitioning(host_hash)
-        satisfies the join's ClusteredDistribution(host_hash, url_hash), and
-        per-executor filter memory is the executor's bucket share, not the
-        whole structure."""
-        idx = {int(b): int(r) for b, r in self._bloom_index.items()}
-        bc = self.spark.sparkContext.broadcast(idx)
-        base = self.storage.bloom_base_path()
-        out_schema = T.StructType(
-            list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-
-        def probe(batches):
-            import numpy as np
-
-            from crawlspark.filters import load_bucket_blob
-
-            for pdf in batches:
-                res = np.zeros(len(pdf), dtype=bool)
-                if len(pdf):
-                    hh = pdf["host_hash"].to_numpy()
-                    uh = pdf["url_hash"].to_numpy()
-                    for b in np.unique(hh):
-                        r = bc.value.get(int(b))
-                        if r is None:
-                            continue  # bucket has no blob yet -> definitely new
-                        key = ("bloomblob", base, r, int(b))
-                        hit = _WORKER_CACHE.get(key)
-                        if hit is None:
-                            if len(_WORKER_CACHE) > 512:
-                                _WORKER_CACHE.clear()
-                            hit = _WORKER_CACHE[key] = (
-                                load_bucket_blob(base, r, int(b)),
-                            )
-                        f = hit[0]
-                        if f is not None:
-                            m = hh == b
-                            res[m] = f.contains_many(uh[m])
-                out = pdf.copy()
-                out["maybe_seen"] = res
-                yield out
-
-        parts = n_parts or max(
-            4, min(self.cfg.shuffle_partitions, self.cfg.num_host_buckets)
-        )
-        return cand.repartition(parts, "host_hash").mapInPandas(probe, out_schema)
+            for key in self._banned_host_keys():
+                self.cuckoo.delete(key)
 
     def _admission_flags_udf(self):
         """Fused A4 cuckoo ban probe + R2 robots path match: one Arrow
@@ -317,7 +243,7 @@ class CrawlEngine:
 
     # --------------------------------------------------------- bootstrap
     def bootstrap(self, seeds: list[str]) -> None:
-        """Round 0: seed list → canonical dedup'd frontier + seen + filters."""
+        """Round 0: seed list → canonical dedup'd frontier + seen."""
         cfg = self.cfg
         seeds_df = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
@@ -350,10 +276,6 @@ class CrawlEngine:
             "url_hash", "url_canon", "host_hash", F.lit(0).alias("first_round")
         )
         self.storage.write_round("seen", seen0, 0)
-        # A5: Bloom sidecar from round-0 seen
-        self._fold_into_bloom(self.storage.read_round("seen", 0), 0)
-        self._refresh_cuckoo(0)
-        self.storage.save_filters(0, dict(self._bloom_index), self.cuckoo.to_bytes())
         n = self.storage.read_round("frontier", 0).count()
         self.storage.commit_manifest(
             0, {"phase": "bootstrap", "frontier_size": n, "totals": {"seen": n}}
@@ -364,13 +286,13 @@ class CrawlEngine:
         exhausted) crawl as the crawl's next committed snapshot round.
 
         The injection is a full round in the manifest protocol — frontier
-        snapshot, seen append, Bloom fold, filter pickle, then the atomic
-        manifest commit LAST — so it inherits every resume guarantee the
-        fetch rounds have: a crash mid-injection leaves orphan dirs that a
-        re-run overwrites (write_round is overwrite-idempotent), and a crash
-        after the commit resumes cleanly at the next round. Because the
-        manifest's ``next_frontier_size`` becomes non-zero again, injecting
-        into an exhausted crawl re-opens it — ``run()`` simply continues.
+        snapshot, seen append, then the atomic manifest commit LAST — so it
+        inherits every resume guarantee the fetch rounds have: a crash
+        mid-injection leaves orphan dirs that a re-run overwrites
+        (write_round is overwrite-idempotent), and a crash after the commit
+        resumes cleanly at the next round. Because the manifest's
+        ``next_frontier_size`` becomes non-zero again, injecting into an
+        exhausted crawl re-opens it — ``run()`` simply continues.
 
         Semantics match bootstrap: seeds canonicalize, first-wins dedup by
         seed position, and anti-join against the EXACT seen table
@@ -387,14 +309,6 @@ class CrawlEngine:
             n = self.storage.manifest(0)["frontier_size"]
             return {"round": 0, "injected": n, "phase": "bootstrap"}
         rnd = latest["round"] + 1
-        # resume-shaped state load: the latest committed filter pickle is
-        # authoritative between runs (same path run() takes)
-        state = self.storage.load_filters(latest["round"])
-        self._bloom_index = {
-            int(b): int(r) for b, r in state["bloom_index"].items()
-        }
-        self.cuckoo = CuckooFilter.from_bytes(state["cuckoo"])
-
         cfg = self.cfg
         seeds_df = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
@@ -436,10 +350,6 @@ class CrawlEngine:
         )
         self.storage.write_round("seen", seen_add, rnd)
         n_new = self.storage.read_round("seen", rnd).count()
-        self._fold_into_bloom(self.storage.read_round("seen", rnd), rnd)
-        self.storage.save_filters(
-            rnd, dict(self._bloom_index), self.cuckoo.to_bytes()
-        )
         prev_size = latest.get(
             "next_frontier_size", latest.get("frontier_size", 0)
         )
@@ -455,59 +365,8 @@ class CrawlEngine:
                 "totals": totals,
             },
         )
-        self.storage.gc_bloom_rounds(self._bloom_index)
         new.unpersist()
         return {"round": rnd, "injected": n_new, "phase": "inject"}
-
-    def _fold_into_bloom(
-        self, seen_rows: DataFrame, rnd: int, n_parts: int | None = None
-    ) -> None:
-        """A5: fold the round's new (host_hash, url_hash) rows into the
-        per-bucket Bloom sidecar, fully distributed: each applyInPandas task
-        loads its OWN bucket's previous merged blob from the sidecar parquet
-        (round pointed to by the broadcast int index), ORs in the new hashes,
-        and emits the new merged blob; Spark executors write the result back
-        as this round's blob parquet. Filter bytes never transit the driver —
-        the only driver traffic is the list of touched bucket ids (ints, one
-        tiny column-pruned read-back) used to advance the index."""
-        cap, fp = self._bloom_capacity(), BLOOM_FP_RATE
-        idx = {int(b): int(r) for b, r in self._bloom_index.items()}
-        bc = self.spark.sparkContext.broadcast(idx)
-        base = self.storage.bloom_base_path()
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            from crawlspark.filters import BloomFilter, load_bucket_blob
-
-            b = int(pdf["host_hash"].iloc[0])
-            prev = bc.value.get(b)
-            f = load_bucket_blob(base, prev, b) if prev is not None else None
-            if f is None:
-                f = BloomFilter(cap, fp)
-            f.add_many(pdf["url_hash"].to_numpy())
-            return pd.DataFrame({"host_hash": [b], "blob": [f.to_bytes()]})
-
-        # pre-cluster by bucket at an explicit width: HashPartitioning on the
-        # group key satisfies the groupBy's clustering, so applyInPandas adds
-        # no second shuffle and small rounds spin up few python workers
-        # instead of spark.sql.shuffle.partitions of them (worker-attach is
-        # real fixed cost — see run_round's fetch sizing).
-        parts = n_parts or max(
-            4, min(self.cfg.shuffle_partitions, self.cfg.num_host_buckets)
-        )
-        blob_df = (
-            seen_rows.select("host_hash", "url_hash")
-            .repartition(parts, "host_hash")
-            .groupBy("host_hash")
-            .applyInPandas(build, "host_hash int, blob binary")
-        )
-        self.storage.write_bloom_round(blob_df, rnd)
-        touched = (
-            self.spark.read.parquet(self.storage.bloom_round_path(rnd))
-            .select("host_hash")
-            .collect()
-        )
-        for row in touched:
-            self._bloom_index[int(row[0])] = rnd
 
     # ------------------------------------------------------------- round
     def run_round(self, rnd: int) -> RoundMetrics:
@@ -536,9 +395,6 @@ class CrawlEngine:
         approx = int(
             prev_m.get("next_frontier_size", prev_m.get("frontier_size", 0)) or 0
         )
-        # A6 feed-forward: the previous round's HLL estimate sizes any NEW
-        # per-bucket Bloom filters this round's fold creates
-        self._last_distinct_est = int(prev_m.get("frontier_distinct_est", 0) or 0)
         round_parts = max(
             8,
             min(
@@ -797,27 +653,17 @@ class CrawlEngine:
         )
         tick("candidates_dedup")
 
-        # A3 Bloom prefilter → A2 exact anti-join backstop. The probe is
-        # co-partitioned with the sidecar blobs by host_hash and persisted so
-        # both branches read one materialization.
-        py_parts = max(
-            4,
-            min(
-                cfg.shuffle_partitions,
-                cfg.num_host_buckets,
-                -(-m.frontier_size * 4 // cfg.fetch_rows_per_partition),
-            ),
-        )
-        cand = self._with_maybe_seen(cand, n_parts=py_parts).persist()
-        definitely_new = cand.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = cand.filter(F.col("maybe_seen")).drop("maybe_seen")
+        # A2 exact seen anti-join: the one answer to "seen?" for every row.
         seen = self.storage.read_table("seen", upto_round=rnd - 1).select(
             "host_hash", "url_hash"
         )
-        confirmed_new = maybe.join(seen, ["host_hash", "url_hash"], "left_anti")
-        new = definitely_new.unionByName(confirmed_new).select(*FRONTIER_COLS).persist()
+        new = (
+            cand.join(seen, ["host_hash", "url_hash"], "left_anti")
+            .select(*FRONTIER_COLS)
+            .persist()
+        )
 
-        # S5 seen append + A5 sidecar fold
+        # S5 seen append
         seen_add = new.select(
             "url_hash", "url_canon", "host_hash",
             F.lit(rnd).alias("first_round"),
@@ -838,17 +684,6 @@ class CrawlEngine:
         # cached dataframes, not three jobs — per-round driver actions are
         # real fixed cost in local mode and pure overhead at small rounds.
         metrics_df = self._metrics_df(rnd, fetched, disallowed, deferred, new)
-
-        def _fold_and_save() -> None:
-            # A5 sidecar fold + filter checkpoint. Folds straight from the
-            # cached `new` frame (seen_add reads the cache the seen write
-            # above materialized) — re-reading the just-written seen parquet
-            # would pay disk+decode for rows already in block storage; at
-            # cluster scale that read-back is a full extra scan per round.
-            self._fold_into_bloom(seen_add, rnd, n_parts=py_parts)
-            self.storage.save_filters(
-                rnd, dict(self._bloom_index), self.cuckoo.to_bytes()
-            )
 
         def _round_stats() -> None:
             # ALL of the round's counters in ONE tagged-union aggregation job
@@ -890,9 +725,9 @@ class CrawlEngine:
                 F.sum(
                     (is_fr & ~F.col("b") & ~F.col("a")).cast("long")
                 ).alias("disallowed"),
-                # A6: frontier cardinality estimates (HLL) — sizes the Bloom
-                # sidecars at scale; the sketch ignores the other branches'
-                # NULLs, so values match a frontier-only aggregation exactly
+                # A6: frontier cardinality estimates (HLL), recorded in the
+                # manifest; the sketch ignores the other branches' NULLs, so
+                # values match a frontier-only aggregation exactly
                 F.approx_count_distinct(
                     F.when(is_fr, F.col("u"))
                 ).alias("distinct_est"),
@@ -918,7 +753,6 @@ class CrawlEngine:
 
         _parallel(
             lambda: self.storage.write_round("documents", docs, rnd),
-            _fold_and_save,
             lambda: self.storage.write_round("frontier", next_frontier, rnd),
             lambda: self.storage.write_round(
                 "metrics", metrics_df, rnd, cluster_by=None, num_files=1
@@ -952,9 +786,6 @@ class CrawlEngine:
                 "totals": totals,
             },
         )
-        # GC superseded Bloom blob rounds now that the manifest (and the
-        # filter pickle carrying this round's index) is committed.
-        self.storage.gc_bloom_rounds(self._bloom_index)
         # Post-commit table maintenance (both no-ops unless configured):
         # everything below this line only rewrites/reclaims storage layout —
         # table contents, crawl state and resume points are unchanged, so a
@@ -972,7 +803,7 @@ class CrawlEngine:
             self.storage.expire_frontier_snapshots(keep_upto=rnd)
         m.extras["next_frontier_size"] = next_size
         m.extras["timings"] = timings
-        for df in (fr, ranked, fetched, edges, cand, new):
+        for df in (fr, ranked, fetched, edges, new):
             df.unpersist()
         self.history.append(m)
         return m
@@ -1013,11 +844,6 @@ class CrawlEngine:
             start = 1
         else:
             start = latest["round"] + 1
-            state = self.storage.load_filters(latest["round"])
-            self._bloom_index = {
-                int(b): int(r) for b, r in state["bloom_index"].items()
-            }
-            self.cuckoo = CuckooFilter.from_bytes(state["cuckoo"])
 
         rounds_run = 0
         last = start - 1

@@ -1,28 +1,16 @@
-"""Membership structures (SURVEY.md §2.3, A3–A5): partitioned Bloom filter
-and a deletable cuckoo filter.
+"""Membership structures (SURVEY.md §2.3, A3–A4): a Bloom filter and a
+deletable cuckoo filter.
 
-Contract (BASELINE.json:6): "filters seen URLs via a partitioned Bloom filter
-(with cuckoo-filter fallback for deletable politeness bans) broadcast per
-host-hash partition". PySpark does not expose ``DataFrameStatFunctions
-.bloomFilter`` (Scala-only — SURVEY.md §0.3), so both structures are custom,
-numpy-vectorized, and serializable to bytes so they can be checkpointed with
-the round manifest (S6) and broadcast to executors.
+PySpark does not expose ``DataFrameStatFunctions.bloomFilter`` (Scala-only —
+SURVEY.md §0.3), so both structures are custom, numpy-vectorized, and
+serializable to bytes so they can be broadcast to executors.
 
-Exactness invariant (SURVEY.md §2.3): these are PREFILTERS only. A Bloom
-"maybe-seen" answer is always re-checked by the exact anti-join against the
-``seen`` table; a Bloom "definitely-new" answer is trusted (Bloom filters have
-no false negatives), which is what lets most genuinely-new URLs skip the
-shuffle join against a 10^10-row seen set.
-
-Scale design: ONE filter per host-hash bucket, not one global filter. At a
-10^10-URL frontier a single 1% FP Bloom is ~12 GB — too big to broadcast —
-but per-bucket filters are (a) individually small enough for the executors
-that own that bucket to load directly, (b) folded incrementally per round
-from only that bucket's new hashes (A5), and (c) partition-addressable for
-checkpoint lineage. The blobs live in a parquet sidecar written and read by
-executors (`load_bucket_blob`); the driver carries only the int index
-{bucket: latest_round} — filter bytes never transit the driver or a
-whole-structure broadcast (engine._fold_into_bloom / _with_maybe_seen).
+The engine answers "seen?" with the exact anti-join against the ``seen``
+table alone: a Bloom prefilter in front of it added a shuffle and two Python
+stages per round and never saved the seen-side work (BASELINE.md, "Exact
+anti-join only"). ``BloomFilter`` stays as a measured primitive
+(perfbench's ``filters.bloom_*`` microbenchmarks). The cuckoo filter holds
+the deletable politeness ban set (engine._admission_flags_udf).
 """
 
 from __future__ import annotations
@@ -31,7 +19,7 @@ import math
 
 import numpy as np
 
-__all__ = ["BloomFilter", "CuckooFilter", "PartitionedBloom", "load_bucket_blob"]
+__all__ = ["BloomFilter", "CuckooFilter"]
 
 _GOLDEN64 = np.uint64(0x9E3779B97F4A7C15)
 
@@ -87,7 +75,7 @@ class BloomFilter:
         hit = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return hit.all(axis=0).astype(bool)
 
-    # -- (de)serialization for checkpoint + broadcast ------------------------
+    # -- (de)serialization for broadcast --------------------------------------
     def to_bytes(self) -> bytes:
         head = np.array([self.n_bits, self.k, self.n_items], dtype=np.int64)
         return head.tobytes() + self.bits.tobytes()
@@ -99,82 +87,6 @@ class BloomFilter:
         f.n_bits, f.k, f.n_items = int(head[0]), int(head[1]), int(head[2])
         f.bits = np.frombuffer(blob[24:], dtype=np.uint8).copy()
         return f
-
-    def union_update(self, other: "BloomFilter") -> None:
-        """A5 incremental rebuild: fold a same-shape filter of the round's new
-        hashes into the cumulative filter (bitwise OR)."""
-        if other.n_bits != self.n_bits or other.k != self.k:
-            raise ValueError("bloom shape mismatch: rebuild required")
-        np.bitwise_or(self.bits, other.bits, out=self.bits)
-        self.n_items += other.n_items
-
-
-class PartitionedBloom:
-    """One BloomFilter per host-hash bucket (A3).
-
-    ``probe`` is the executor-side hot path: given parallel arrays
-    (bucket, url_hash) it answers maybe-seen per element, fully vectorized
-    (group by bucket via argsort, one contains_many per bucket present).
-    """
-
-    def __init__(self, num_buckets: int, capacity_per_bucket: int, fp_rate: float):
-        self.num_buckets = num_buckets
-        self.fp_rate = fp_rate
-        self.capacity = capacity_per_bucket
-        self.filters: dict[int, BloomFilter] = {}
-
-    def add(self, buckets: np.ndarray, keys: np.ndarray) -> None:
-        buckets = np.asarray(buckets, dtype=np.int64)
-        keys = np.asarray(keys, dtype=np.int64)
-        for b in np.unique(buckets):
-            f = self.filters.get(int(b))
-            if f is None:
-                f = self.filters[int(b)] = BloomFilter(self.capacity, self.fp_rate)
-            f.add_many(keys[buckets == b])
-
-    def probe(self, buckets: np.ndarray, keys: np.ndarray) -> np.ndarray:
-        buckets = np.asarray(buckets, dtype=np.int64)
-        keys = np.asarray(keys, dtype=np.int64)
-        out = np.zeros(len(keys), dtype=bool)
-        for b in np.unique(buckets):
-            f = self.filters.get(int(b))
-            if f is not None:
-                m = buckets == b
-                out[m] = f.contains_many(keys[m])
-        return out
-
-    def to_blobs(self) -> dict[int, bytes]:
-        return {b: f.to_bytes() for b, f in self.filters.items()}
-
-    @classmethod
-    def from_blobs(
-        cls,
-        blobs: dict[int, bytes],
-        num_buckets: int,
-        capacity_per_bucket: int,
-        fp_rate: float,
-    ) -> "PartitionedBloom":
-        p = cls(num_buckets, capacity_per_bucket, fp_rate)
-        p.filters = {int(b): BloomFilter.from_bytes(v) for b, v in blobs.items()}
-        return p
-
-
-def load_bucket_blob(bloom_base: str, rnd: int, bucket: int) -> "BloomFilter | None":
-    """Executor-side read of ONE bucket's merged Bloom blob from the sidecar
-    parquet written at round ``rnd`` (storage.write_bloom_round). This is the
-    map-side half of the partition-addressable design: a task that owns
-    bucket b reads only blob b — filter bytes never transit the driver or a
-    whole-dict broadcast. pyarrow dataset filtering prunes to the matching
-    row (blob files are written clustered by host_hash)."""
-    import pyarrow.dataset as pds
-
-    dset = pds.dataset(f"{bloom_base}/round={rnd:05d}", format="parquet")
-    tbl = dset.to_table(
-        columns=["blob"], filter=pds.field("host_hash") == int(bucket)
-    )
-    if tbl.num_rows == 0:
-        return None
-    return BloomFilter.from_bytes(tbl.column("blob")[0].as_py())
 
 
 class CuckooFilter:

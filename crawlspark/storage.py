@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-import pickle
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,8 +47,8 @@ class CrawlStorage:
     exists in this sandbox (SURVEY.md §0.3), so it is exercised by tests
     only up to the dispatch seam. The JSON round manifests remain the
     engine's commit point in both modes: Iceberg gives atomic appends per
-    table, but the crawl round spans five tables plus filter sidecars, and
-    the manifest is the single cross-table commit."""
+    table, but the crawl round spans five tables, and the manifest is the
+    single cross-table commit."""
 
     def __init__(
         self,
@@ -64,7 +63,6 @@ class CrawlStorage:
         self.num_buckets = num_buckets
         self._iceberg_created: set[str] = set()
         (self.root / "_manifests").mkdir(parents=True, exist_ok=True)
-        (self.root / "_filters").mkdir(parents=True, exist_ok=True)
         for t in TABLES:
             (self.root / t).mkdir(parents=True, exist_ok=True)
 
@@ -303,59 +301,3 @@ class CrawlStorage:
     def manifest(self, rnd: int) -> dict | None:
         p = self.root / "_manifests" / f"round-{rnd:05d}.json"
         return json.loads(p.read_text()) if p.exists() else None
-
-    # ----------------------------------------------------- filter sidecars
-    def bloom_round_path(self, rnd: int) -> str:
-        """Directory of the per-bucket Bloom blob parquet for round ``rnd``
-        (columns host_hash:int, blob:binary — the MERGED cumulative filter of
-        every bucket the round touched)."""
-        return str(self.root / "_filters" / "bloom" / f"round={rnd:05d}")
-
-    def bloom_base_path(self) -> str:
-        return str(self.root / "_filters" / "bloom")
-
-    def write_bloom_round(self, blob_df: DataFrame, rnd: int) -> None:
-        """A5: persist the round's merged per-bucket blobs, written by the
-        fold job's executors — filter bytes never pass through the driver.
-        Overwrite-idempotent like every round dir (exact-resume)."""
-        blob_df.write.mode("overwrite").parquet(self.bloom_round_path(rnd))
-
-    def gc_bloom_rounds(self, bloom_index: dict[int, int]) -> list[int]:
-        """Delete Bloom blob round dirs no bucket references anymore. Each
-        round's blob is the cumulative MERGE for its buckets, so once every
-        bucket that a round touched has been re-merged by a later round, the
-        old dir is garbage — at the 10^10 design point leaving them would
-        accumulate O(rounds x touched-buckets) filter bytes. Called only
-        AFTER the round manifest commits, when the in-memory index equals
-        the checkpointed one, so a crash can never orphan a referenced dir.
-        Returns the deleted round numbers."""
-        import shutil
-
-        live = set(bloom_index.values())
-        deleted = []
-        base = self.root / "_filters" / "bloom"
-        for d in sorted(base.glob("round=*")):
-            r = int(d.name.split("=")[1])
-            if r not in live:
-                shutil.rmtree(d, ignore_errors=True)
-                deleted.append(r)
-        return deleted
-
-    def save_filters(self, rnd: int, bloom_index: dict[int, int],
-                     cuckoo_blob: bytes) -> str:
-        """A5/S6: checkpoint the tiny driver-side filter state alongside the
-        round manifest: the Bloom *index* (bucket → round of its latest
-        merged blob parquet — ints only, the blobs themselves stay in
-        ``_filters/bloom/round=*``) and the cuckoo ban filter (host-level,
-        O(hosts-banned) bytes)."""
-        path = self.root / "_filters" / f"round-{rnd:05d}.pkl"
-        tmp = path.with_suffix(".tmp")
-        with open(tmp, "wb") as f:
-            pickle.dump({"bloom_index": bloom_index, "cuckoo": cuckoo_blob}, f)
-        os.replace(tmp, path)
-        return str(path)
-
-    def load_filters(self, rnd: int) -> dict:
-        path = self.root / "_filters" / f"round-{rnd:05d}.pkl"
-        with open(path, "rb") as f:
-            return pickle.load(f)

@@ -42,8 +42,8 @@ def canonical_url_stream(
 def streaming_seen_filter(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming URL-seen: dropDuplicatesWithinWatermark on url_hash — state
     is bounded by the watermark horizon; at 10^10 scale the horizon bounds
-    the state store instead of an ever-growing set (the batch engine's exact
-    Bloom+anti-join handles the unbounded-history case).
+    the state store instead of an ever-growing set (the batch engine's
+    exact anti-join handles the unbounded-history case).
 
     Why the WithinWatermark variant: plain ``dropDuplicates(["url_hash"])``
     only evicts state when the event-time column is PART of the dedup keys —

@@ -9,9 +9,11 @@ at 10^10 scale). The demo asserts the skewed run's wall time stays within
 2x the balanced run: the engine's salted fetch repartition (64x oversalt)
 and url_hash-keyed dedup window are the mechanisms under test.
 
-Per-round tables print for BASELINE.md; the balanced run's per-round
-numbers must be bit-identical to the round-2 recorded table (engine
-refactors change wall time, never results).
+Per-round tables print for BASELINE.md; at the default size (10,000 hosts,
+25,000 seeds) the balanced run's per-round numbers must be bit-identical to
+the round-2 recorded table (engine refactors change wall time, never
+results). Other ``--hosts``/``--seeds`` values crawl a different web, so
+that claim does not apply to them.
 
 ``--hosts``/``--seeds`` scale the synthetic web another order of magnitude
 with the identical plan/config shape (``--hosts 100000 --seeds 250000``
@@ -42,6 +44,17 @@ sys.path.insert(0, _REPO_ROOT)
 os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
+
+
+def positive_int(text: str) -> int:
+    """argparse type for counts that must be at least 1."""
+    try:
+        value = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value
 
 
 def make_spark(cores: int):
@@ -135,17 +148,17 @@ def run_demo(
         shutil.rmtree(root, ignore_errors=True)
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=positive_int, default=32)
     ap.add_argument("--skew-only", action="store_true")
     ap.add_argument("--balanced-only", action="store_true")
     # order-of-magnitude sweep knobs: 10x both (--hosts 100000 --seeds
     # 250000) crawls ~10^7 URLs with the identical plan/config shape, so
     # per-URL cost can be compared across 10^5 / 10^6 / 10^7 round sizes
-    ap.add_argument("--hosts", type=int, default=10_000,
+    ap.add_argument("--hosts", type=positive_int, default=10_000,
                     help="synthetic-web host count (URL space scales with it)")
-    ap.add_argument("--seeds", type=int, default=25_000,
+    ap.add_argument("--seeds", type=positive_int, default=25_000,
                     help="seed-list size")
     ap.add_argument(
         "--maintenance",
@@ -155,7 +168,7 @@ def main() -> None:
         "bit-identical to their plain twins (compaction exercised under "
         "hot-host file skew too)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     def check_maintenance_twin(name: str, results: dict) -> None:
         plain, maint = results[name], results[f"{name}_maintenance"]

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from crawlspark.filters import BloomFilter, CuckooFilter, PartitionedBloom
+from crawlspark.filters import BloomFilter, CuckooFilter
 
 
 def _keys(n, seed=0):
@@ -27,32 +27,13 @@ def test_bloom_fp_rate_bounded():
     assert fp < 0.03, f"false-positive rate {fp:.4f} exceeds 3x target"
 
 
-def test_bloom_roundtrip_and_union():
+def test_bloom_roundtrip():
     a = BloomFilter(capacity=1000, fp_rate=0.01)
-    b = BloomFilter(capacity=1000, fp_rate=0.01)
-    b.n_bits, b.k = a.n_bits, a.k  # same shape by construction
-    ka, kb = _keys(500, 3), _keys(500, 4)
+    ka = _keys(500, 3)
     a.add_many(ka)
-    b.add_many(kb)
-    a.union_update(b)
     restored = BloomFilter.from_bytes(a.to_bytes())
     assert restored.contains_many(ka).all()
-    assert restored.contains_many(kb).all()
-    assert restored.n_items == 1000
-
-
-def test_partitioned_bloom_probe_routing():
-    p = PartitionedBloom(num_buckets=8, capacity_per_bucket=1000, fp_rate=0.01)
-    keys = _keys(4000, 5)
-    buckets = np.abs(keys) % 8
-    p.add(buckets, keys)
-    assert p.probe(buckets, keys).all()
-    # same key probed in the WRONG bucket must usually miss (routing matters)
-    wrong = (buckets + 1) % 8
-    assert p.probe(wrong, keys).mean() < 0.05
-    # blob round-trip
-    p2 = PartitionedBloom.from_blobs(p.to_blobs(), 8, 1000, 0.01)
-    assert p2.probe(buckets, keys).all()
+    assert (restored.n_bits, restored.k, restored.n_items) == (a.n_bits, a.k, 500)
 
 
 def test_cuckoo_insert_lookup_delete():
@@ -79,109 +60,3 @@ def test_cuckoo_fp_rate_and_roundtrip():
     assert f.contains_many(probe).mean() < 0.01
     g = CuckooFilter.from_bytes(f.to_bytes())
     assert g.contains_many(keys).all()
-
-
-def test_bloom_sidecar_distributed_fold(spark, tmp_path):
-    """A5 distributed fold: per-bucket blobs are persisted as parquet rounds
-    by executors (never collected to the driver), each round's blob is the
-    cumulative merge, the probe answers from the bucket-addressed sidecar,
-    and the driver index holds only ints."""
-    import numpy as np
-    import pandas as pd
-
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.filters import load_bucket_blob
-    from crawlspark.storage import CrawlStorage
-
-    cfg = CrawlConfig(num_host_buckets=4, shuffle_partitions=4)
-    storage = CrawlStorage(spark, tmp_path)
-    eng = CrawlEngine(spark, cfg, storage)
-
-    def seen_df(hashes, bucket):
-        pdf = pd.DataFrame(
-            {
-                "host_hash": np.full(len(hashes), bucket, dtype=np.int32),
-                "url_hash": np.asarray(hashes, dtype=np.int64),
-                "url_canon": [f"http://h{bucket}.example/{h}" for h in hashes],
-                "first_round": np.zeros(len(hashes), dtype=np.int32),
-            }
-        )
-        return spark.createDataFrame(pdf)
-
-    r0 = list(range(1000, 1100))
-    r1 = list(range(5000, 5050))
-    eng._fold_into_bloom(seen_df(r0, bucket=2), 0)
-    assert eng._bloom_index == {2: 0}
-    eng._fold_into_bloom(seen_df(r1, bucket=2), 1)
-    assert eng._bloom_index == {2: 1}
-    assert all(isinstance(k, int) and isinstance(v, int)
-               for k, v in eng._bloom_index.items())
-
-    # round-1 blob is the MERGE: contains both rounds' hashes (no FN)
-    f = load_bucket_blob(storage.bloom_base_path(), 1, 2)
-    assert f.contains_many(np.asarray(r0 + r1, dtype=np.int64)).all()
-    # bucket-addressed read of an absent bucket
-    assert load_bucket_blob(storage.bloom_base_path(), 1, 3) is None
-
-    # probe path: seen hashes flagged maybe_seen, fresh ones pass through
-    cand = seen_df(r0[:10] + [999_999_999], bucket=2).withColumnRenamed(
-        "first_round", "depth"
-    )
-    probed = eng._with_maybe_seen(cand).toPandas().sort_values("url_hash")
-    flags = dict(zip(probed["url_hash"], probed["maybe_seen"]))
-    assert all(flags[h] for h in r0[:10])  # Bloom has no false negatives
-
-
-def test_bloom_sidecar_gc(spark, tmp_path):
-    """Superseded blob rounds are deleted once no bucket references them;
-    referenced rounds survive, and probing still answers from the live
-    blobs after GC."""
-    import numpy as np
-    import pandas as pd
-
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.storage import CrawlStorage
-
-    cfg = CrawlConfig(num_host_buckets=4, shuffle_partitions=4)
-    storage = CrawlStorage(spark, tmp_path)
-    eng = CrawlEngine(spark, cfg, storage)
-
-    def seen_df(hashes, bucket):
-        return spark.createDataFrame(pd.DataFrame({
-            "host_hash": np.full(len(hashes), bucket, dtype=np.int32),
-            "url_hash": np.asarray(hashes, dtype=np.int64),
-        }))
-
-    eng._fold_into_bloom(seen_df(range(100, 150), 1), 0)
-    eng._fold_into_bloom(seen_df(range(200, 250), 2), 1)  # bucket 2 only
-    eng._fold_into_bloom(seen_df(range(300, 350), 1), 2)  # bucket 1 re-merged
-    # round 0 only held bucket 1, which round 2 superseded -> GC'able;
-    # round 1 (bucket 2's latest) and round 2 must survive
-    deleted = storage.gc_bloom_rounds(eng._bloom_index)
-    assert deleted == [0]
-    import pathlib
-    left = sorted(p.name for p in (pathlib.Path(tmp_path) / "_filters" / "bloom").iterdir())
-    assert left == ["round=00001", "round=00002"]
-
-    from crawlspark.filters import load_bucket_blob
-    f1 = load_bucket_blob(storage.bloom_base_path(), 2, 1)
-    assert f1.contains_many(np.asarray(list(range(100, 150)) + list(range(300, 350)), dtype=np.int64)).all()
-
-
-def test_bloom_capacity_scales_with_estimate(spark, tmp_path):
-    """A6 feed-forward: the per-bucket capacity grows with the committed
-    frontier cardinality estimate, floored at 2^16 for small crawls, and a
-    bucket folded under a larger capacity still answers exactly (no FN)."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.storage import CrawlStorage
-
-    cfg = CrawlConfig(num_host_buckets=4, shuffle_partitions=4)
-    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
-    assert eng._bloom_capacity() == 1 << 16  # floor with no estimate
-    eng._last_distinct_est = 10_000_000
-    assert eng._bloom_capacity() == 10_000_000  # 4x growth over 4 buckets
-    eng._last_distinct_est = 100
-    assert eng._bloom_capacity() == 1 << 16  # floored again

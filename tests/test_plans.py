@@ -227,11 +227,11 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     """Per-round driver-job budget: every Spark job carries ~0.5-1 s of fixed
     scheduling latency in local mode, and at 10^10 scale each extra action is
     an extra cluster-wide barrier. The round loop runs ONE fused tagged-union
-    stats job (admission + fetch + candidate/new/deferred counters), folds
-    the Bloom sidecar from the cached new-URLs frame (no seen read-back), and
-    overlaps the tail sinks — 13 jobs/round measured. This pins the budget
-    (<=14) and flatness (round k and k+1 identical), so an accidental extra
-    .count()/.collect() in the hot loop fails loudly."""
+    stats job (admission + fetch + candidate/new/deferred counters), answers
+    "seen?" with one exact anti-join (no prefilter stages), and overlaps the
+    tail sinks — 10 jobs/round and 5 for the bootstrap measured. This pins
+    both budgets (<=11, <=5) and flatness (round k and k+1 identical), so an
+    accidental extra .count()/.collect() in the hot loop fails loudly."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
@@ -240,7 +240,6 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     cfg = CrawlConfig(max_depth=2, max_rounds=3, web_hosts=6,
                       shuffle_partitions=4)
     eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
-    eng.bootstrap(synthweb.seed_list(cfg, n=20))
 
     # The DAGScheduler's job-id counter sees jobs from ALL threads (the
     # tail sinks run in a thread pool, so thread-local job groups would
@@ -250,20 +249,23 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     def n_jobs() -> int:
         return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
+    nb = n_jobs()
+    eng.bootstrap(synthweb.seed_list(cfg, n=20))
     n0 = n_jobs()
     eng.run_round(1)
     n1 = n_jobs()
     eng.run_round(2)
     n2 = n_jobs()
+    assert n0 - nb <= 5, f"bootstrap launched {n0-nb} driver jobs (budget 5)"
     assert n1 - n0 == n2 - n1, f"per-round job count not flat: {n1-n0} vs {n2-n1}"
-    assert n1 - n0 <= 14, f"round launched {n1-n0} driver jobs (budget 14)"
+    assert n1 - n0 <= 11, f"round launched {n1-n0} driver jobs (budget 11)"
 
 
 def test_pagerank_priority_jobs_are_flat(spark, tmp_path):
     """priority_mode="pagerank" re-ranks the frontier each round from the
     accumulated edge graph — that must cost a FIXED number of extra jobs
     per round, never a count that grows with the round number or the graph
-    so far. Measured: 25/round steady state = bfs's 13 + 12 for the ranking
+    so far. Measured: 22/round steady state = bfs's 10 + 12 for the ranking
     (nodes count, eager localCheckpoints for the node base and each of the
     default 4 power iterations, and their materialization jobs); round 1
     pays a one-time +1 (first edges-table listing + ed-persist
@@ -291,7 +293,7 @@ def test_pagerank_priority_jobs_are_flat(spark, tmp_path):
     eng.run_round(3)
     n3 = n_jobs()
     assert n2 - n1 == n3 - n2, f"per-round job count not flat: {n2-n1} vs {n3-n2}"
-    assert n2 - n1 <= 26, f"round launched {n2-n1} driver jobs (budget 26)"
+    assert n2 - n1 <= 23, f"round launched {n2-n1} driver jobs (budget 23)"
 
 
 def test_decontaminate_broadcasts_bench_grams(spark):

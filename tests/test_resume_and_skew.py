@@ -76,10 +76,10 @@ def test_resume_exactness(spark, tmp_path, full_run):
 
 def test_resume_overwrites_orphan_round_dirs(spark, tmp_path, full_run):
     """Crash INSIDE a round (after some sinks wrote, before the manifest
-    commit): the next run must overwrite every orphan round dir — including
-    a garbage Bloom sidecar — and still produce the uninterrupted run's
-    exact state. Visibility is manifest-gated, so orphans are invisible
-    until their round re-commits."""
+    commit): the next run must overwrite every orphan round dir — and ignore
+    a garbage ``_filters/`` Bloom sidecar left by an older crawl — and still
+    produce the uninterrupted run's exact state. Visibility is
+    manifest-gated, so orphans are invisible until their round re-commits."""
     import pathlib
 
     full_store, full_sum, cfg, seeds = full_run
@@ -93,7 +93,8 @@ def test_resume_overwrites_orphan_round_dirs(spark, tmp_path, full_run):
         d = pathlib.Path(tmp_path / "part" / table / "round=00002")
         d.mkdir(parents=True, exist_ok=True)
         (d / "part-garbage.parquet").write_bytes(b"NOT A PARQUET FILE")
-    orphan_blob = pathlib.Path(part_store.bloom_round_path(2))
+    # stale sidecar from an older crawl version, which no read path uses
+    orphan_blob = tmp_path / "part" / "_filters" / "bloom" / "round=00002"
     orphan_blob.mkdir(parents=True, exist_ok=True)
     (orphan_blob / "part-garbage.parquet").write_bytes(b"NOT A PARQUET FILE")
 
@@ -165,7 +166,10 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path):
 
 def test_deletable_ban_equality(spark, tmp_path):
     """A4 cuckoo path: host banned until unban_round, then crawled; engine
-    must match the oracle on ordering, seen set and rounds."""
+    must match the oracle on ordering, seen set and rounds. The ban filter
+    is rebuilt from the config by every engine, so a crawl resumed by a
+    fresh engine must hold the uninterrupted engine's filter bytes at the
+    same round, before and after the unban, and still match the oracle."""
     cfg = CrawlConfig(
         max_depth=1,
         max_rounds=10,
@@ -175,8 +179,33 @@ def test_deletable_ban_equality(spark, tmp_path):
     )
     seeds = synthweb.seed_list(cfg, n=42)
     store = CrawlStorage(spark, tmp_path / "ban")
-    summary = CrawlEngine(spark, cfg, store).run(seeds)
+    full = CrawlEngine(spark, cfg, store)
+    cuckoo_at = {}
+    run_round = full.run_round
+
+    def recording_round(rnd):
+        m = run_round(rnd)
+        cuckoo_at[rnd] = full.cuckoo.to_bytes()
+        return m
+
+    full.run_round = recording_round
+    summary = full.run(seeds)
     _assert_matches_oracle(store, summary, cfg, seeds)
+    assert summary["rounds"] >= cfg.unban_round
+    assert cuckoo_at[1] != cuckoo_at[cfg.unban_round]  # the unban deleted
+
+    # resume after round 1, so the fresh engine runs a banned round (2)
+    # itself: a resume that forgot the ban would crawl host41 there
+    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path / "part"))
+    eng.bootstrap(seeds)
+    eng.run_round(1)
+    resumed = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path / "part"))
+    assert resumed.cuckoo.to_bytes() == cuckoo_at[1]
+    resumed_sum = resumed.run()
+    assert resumed.cuckoo.to_bytes() == cuckoo_at[resumed_sum["rounds"]]
+    _assert_matches_oracle(
+        CrawlStorage(spark, tmp_path / "part"), resumed_sum, cfg, seeds
+    )
 
 
 def test_salting_balances_hot_host_partitions(spark):

@@ -166,7 +166,7 @@ def test_streaming_seen_state_evicts_at_watermark(spark, tmp_path):
     first seen at t is suppressed inside the watermark horizon, but once the
     watermark passes t + delay its state is dropped — the SAME URL arriving
     later is admitted AGAIN. Bounded state means re-admission beyond the
-    horizon; the batch engine's exact Bloom+anti-join owns unbounded history.
+    horizon; the batch engine's exact anti-join owns unbounded history.
     Two runs over one checkpoint: run 1 ends with watermark 00:20 (> X's
     00:00:01 + 10 min expiry), run 2 re-sends X at 00:40."""
     from crawlspark.streaming import canonical_url_stream, streaming_seen_filter
