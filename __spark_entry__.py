@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -606,21 +605,28 @@ _ROBOTS_PATH_EXPR = (
 
 
 def q_robots_match(spark, sf_dir):
-    """R3/R2 prefix-rule subset through the ENGINE's allowed() (the same
-    function the crawl admission path and the sequential oracle share —
+    """R3/R2 prefix-rule subset through the ENGINE's JVM matcher
+    (``allowed_col``, the expression crawl admission evaluates; the
+    sequential oracle uses the equivalent ``allowed`` —
     crawlspark/functions/robots.py); the oracle expresses RFC 9309
     longest-prefix-match (ties impossible: rule lengths are distinct) in
     ANSI SQL over the same derived path column."""
-    from crawlspark.functions.robots import allowed
+    from crawlspark.functions.robots import allowed_col, pattern_regex
 
-    @F.pandas_udf("boolean")
-    def _allowed(paths: pd.Series) -> pd.Series:
-        return paths.map(lambda p: allowed(p, _ROBOTS_RULES))
-
+    rules = F.array(
+        *[
+            F.struct(
+                F.lit(r["allow"]).alias("allow"),
+                F.lit(r["prefix"]).alias("prefix"),
+                F.lit(pattern_regex(r["prefix"])).cast("string").alias("regex"),
+            )
+            for r in _ROBOTS_RULES
+        ]
+    )
     return (
         _t(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_ROBOTS_PATH_EXPR).alias("path"))
-        .withColumn("is_allowed", _allowed(F.col("path")))
+        .withColumn("is_allowed", allowed_col(F.col("path"), rules))
     )
 
 

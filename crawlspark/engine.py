@@ -2,11 +2,12 @@
 
 One driver loop iteration = one crawl round:
 
-  frontier snapshot → [cuckoo ban prefilter → broadcast robots join → robots
-  path match] → [per-host priority ranking → crawl-delay budget admission] →
-  [salted repartition → mapInPandas fetch/parse] → documents + edges appends →
-  [canonicalize extracted links → intra-round dedup → exact seen anti-join]
-  → next frontier snapshot → atomic manifest commit.
+  frontier snapshot → [broadcast robots join (cuckoo ban flag probed per
+  host at dim build) → JVM robots path match] → [per-host priority ranking →
+  crawl-delay budget admission] → [salted repartition → mapInPandas
+  fetch/parse] → documents + edges appends → [canonicalize extracted links
+  → intra-round dedup → exact seen anti-join] → next frontier snapshot →
+  atomic manifest commit.
 
 Crawl-ordering determinism (BASELINE.json:14 "matching the reference's crawl
 ordering"): the reference is sequential, so a parallel engine reproduces its
@@ -40,7 +41,9 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,7 +51,7 @@ from pyspark.sql import types as T
 from crawlspark.config import CrawlConfig
 from crawlspark.filters import CuckooFilter
 from crawlspark.functions.canon import canonicalize_udf, with_url_identity
-from crawlspark.functions.robots import allowed_series, path_of
+from crawlspark.functions.robots import allowed_col, path_col, pattern_regex
 from crawlspark.sources import synthweb
 from crawlspark.storage import CrawlStorage
 
@@ -154,6 +157,7 @@ class CrawlEngine:
         for key in self._banned_host_keys():
             self.cuckoo.insert(key)
         self.history: list[RoundMetrics] = []
+        self._robots_cached: DataFrame | None = None
         # pagerank-priority rank cache: (basis_round, ranks DataFrame). The
         # ranks are a pure function of the committed edges table at the
         # basis round, so the cache is a recompute-avoidance only — resume
@@ -162,36 +166,46 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
-        """Robots dim is round-invariant for a given config: build the
-        DataFrame once and reuse (the per-round rebuild re-ran the python
-        rule-table conversion and re-planned the broadcast every round)."""
-        if getattr(self, "_robots_cached", None) is not None:
+        """Broadcast robots dim, built once per engine (the rules are
+        round-invariant for a given config). Each rule carries its
+        ``pattern_regex`` and each host its cuckoo answer ``maybe_banned``,
+        probed here once per host. That answer stays valid for the dim's
+        lifetime: the filter changes only at ``unban_round``, from which on
+        ``bans_active`` masks it. The rows arrive as a pyarrow Table, so the
+        dim is a ``LocalRelation`` and broadcasting it needs no Python
+        worker."""
+        if self._robots_cached is not None:
             return self._robots_cached
         rows = synthweb.robots_table(self.cfg)
-        schema = T.StructType(
-            [
-                T.StructField("host", T.StringType()),
-                T.StructField(
-                    "rules",
-                    T.ArrayType(
-                        T.StructType(
-                            [
-                                T.StructField("allow", T.BooleanType()),
-                                T.StructField("prefix", T.StringType()),
-                            ]
-                        )
-                    ),
-                ),
-                T.StructField("crawl_delay", T.DoubleType()),
-                T.StructField("banned", T.BooleanType()),
-            ]
+        keys = np.fromiter(
+            (self._host_key(r["host"]) for r in rows), dtype=np.int64, count=len(rows)
         )
-        self._robots_cached = self.spark.createDataFrame(rows, schema)
+        maybe_banned = self.cuckoo.contains_many(keys)
+        dim = [
+            {
+                **r,
+                "rules": [
+                    {**rule, "regex": pattern_regex(rule["prefix"])}
+                    for rule in r["rules"] or []
+                ],
+                "maybe_banned": bool(mb),
+            }
+            for r, mb in zip(rows, maybe_banned)
+        ]
+        self._robots_cached = self.spark.createDataFrame(
+            pa.Table.from_pylist(dim),
+            "host string, rules array<struct<allow:boolean, prefix:string, "
+            "regex:string>>, crawl_delay double, banned boolean, "
+            "maybe_banned boolean",
+        )
         return self._robots_cached
+
+    def _host_key(self, host: str) -> int:
+        return _signed64(synthweb.stable_hash("host:" + host, self.cfg.seed))
 
     def _banned_host_keys(self) -> list[int]:
         return [
-            _signed64(synthweb.stable_hash("host:" + r["host"], self.cfg.seed))
+            self._host_key(r["host"])
             for r in synthweb.robots_table(self.cfg)
             if r["banned"]
         ]
@@ -202,7 +216,7 @@ class CrawlEngine:
         are *deleted* (the operation a Bloom filter cannot do), after which
         their URLs become eligible again. The exact ban state is
         ``robots.banned AND rnd < unban_round``; the cuckoo filter mirrors it
-        and serves as the broadcastable executor-side prefilter."""
+        and is probed per host at dim build (``_robots_df``)."""
         if (
             self.cfg.unban_round is not None
             and rnd >= self.cfg.unban_round
@@ -211,35 +225,24 @@ class CrawlEngine:
             for key in self._banned_host_keys():
                 self.cuckoo.delete(key)
 
-    def _admission_flags_udf(self):
-        """Fused A4 cuckoo ban probe + R2 robots path match: one Arrow
-        crossing per batch instead of two (SURVEY.md §4, UDF fusion)."""
-        blob = self.cuckoo.to_bytes()
-        bc = self.spark.sparkContext.broadcast(blob)
-        seed = self.cfg.seed
-
-        @F.pandas_udf("struct<maybe_banned:boolean,allowed:boolean>")
-        def _flags(
-            host: pd.Series, url_canon: pd.Series, rules: pd.Series
-        ) -> pd.DataFrame:
-            import numpy as np
-
-            f = CuckooFilter.from_bytes(bc.value)
-            keys = np.fromiter(
-                (
-                    _signed64(synthweb.stable_hash("host:" + (h or ""), seed))
-                    for h in host
-                ),
-                dtype=np.int64,
-                count=len(host),
-            )
-            banned = pd.Series(f.contains_many(keys), index=host.index)
-            paths = url_canon.map(lambda u: path_of(u) if u else "/")
-            return pd.DataFrame(
-                {"maybe_banned": banned, "allowed": allowed_series(paths, rules)}
-            )
-
-        return _flags
+    def _admission_frame(self, frontier: DataFrame, rnd: int) -> DataFrame:
+        """A4 ban + R2 robots admission flags, JVM-only: the frontier joins
+        the broadcast robots dim, and both flags are column expressions. The
+        exact ban state (robots.banned AND the unban clock) backstops the
+        cuckoo answer, so a false positive never bans."""
+        bans_active = self.cfg.unban_round is None or rnd < self.cfg.unban_round
+        fr = frontier.join(F.broadcast(self._robots_df()), "host", "left")
+        return fr.select(
+            *frontier.columns,
+            F.coalesce("crawl_delay", F.lit(1.0)).alias("crawl_delay"),
+            (
+                F.coalesce(F.col("maybe_banned") & F.col("banned"), F.lit(False))
+                & F.lit(bans_active)
+            ).alias("is_banned"),
+            allowed_col(path_col(F.col("url_canon")), F.col("rules")).alias(
+                "is_allowed"
+            ),
+        )
 
     # --------------------------------------------------------- bootstrap
     def bootstrap(self, seeds: list[str]) -> None:
@@ -405,30 +408,7 @@ class CrawlEngine:
         sp.conf.set("spark.sql.shuffle.partitions", str(round_parts))
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
-        robots = self._robots_df()
-        fr = frontier.join(F.broadcast(robots), "host", "left")
-        fr = fr.withColumn("crawl_delay", F.coalesce("crawl_delay", F.lit(1.0)))
-
-        # A4 cuckoo ban prefilter + R2 robots path match, fused into one
-        # Arrow crossing. The exact ban state (robots.banned AND the unban
-        # clock) backstops the cuckoo, so a false positive never bans.
-        bans_active = cfg.unban_round is None or rnd < cfg.unban_round
-        fr = fr.withColumn(
-            "_flags", self._admission_flags_udf()("host", "url_canon", "rules")
-        )
-        fr = (
-            fr.withColumn(
-                "is_banned",
-                F.col("_flags.maybe_banned")
-                & F.coalesce("banned", F.lit(False))
-                & F.lit(bans_active),
-            )
-            .withColumn(
-                "is_allowed", F.coalesce(F.col("_flags.allowed"), F.lit(True))
-            )
-            .drop("_flags")
-            .persist()
-        )
+        fr = self._admission_frame(frontier, rnd).persist()
         # Stats over this frame are NOT computed here: all of the round's
         # counters fold into ONE tagged-union aggregation job (_round_stats)
         # in the round-tail parallel group — nothing on the fetch path

@@ -10,7 +10,8 @@ table alone: a Bloom prefilter in front of it added a shuffle and two Python
 stages per round and never saved the seen-side work (BASELINE.md, "Exact
 anti-join only"). ``BloomFilter`` stays as a measured primitive
 (perfbench's ``filters.bloom_*`` microbenchmarks). The cuckoo filter holds
-the deletable politeness ban set (engine._admission_flags_udf).
+the deletable politeness ban set; the engine probes it once per host when it
+builds the robots dim (``CrawlEngine._robots_df``).
 """
 
 from __future__ import annotations

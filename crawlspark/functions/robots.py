@@ -4,18 +4,29 @@ Semantics: RFC 9309 longest-prefix match — among all rules whose prefix
 matches the URL path, the longest prefix wins; ties prefer Allow; no match →
 allowed. [typical — SURVEY.md §0.1 item 4; the reference checkout was empty.]
 
-The matcher is one pure function (`allowed`) shared by the sequential oracle,
-plus a pandas-vectorized batch form (`allowed_series`) used inside the Spark
-engine after the broadcast robots join (R1): rules arrive as the joined
-``rules`` array column, one Arrow batch at a time. Host budgets (P3) are pure
-column expressions (JVM-side) and live in scheduler.py.
+The reference matcher is one pure function (`allowed`), used by the
+sequential oracle, with a pandas batch form (`allowed_series`) for
+microbenchmarks. The Spark engine matches in the JVM instead: `allowed_col`
+is the same rule as a column expression over the broadcast robots dim's
+``rules`` array (R1), whose structs carry the `pattern_regex` of each
+wildcard pattern, so admission needs no Python worker. Host budgets (P3) are
+column expressions in ``engine.run_round``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
-__all__ = ["allowed", "allowed_series", "path_of"]
+__all__ = [
+    "allowed",
+    "allowed_col",
+    "allowed_series",
+    "path_col",
+    "path_of",
+    "pattern_regex",
+]
 
 
 def path_of(url_canon: str) -> str:
@@ -23,6 +34,67 @@ def path_of(url_canon: str) -> str:
     rest = url_canon.split("://", 1)[1]
     i = rest.find("/")
     return rest[i:] if i >= 0 else "/"
+
+
+def path_col(url_canon: Column) -> Column:
+    """`path_of` as a JVM expression; a null or empty URL gives ``/``."""
+    rest = F.substr(url_canon, F.instr(url_canon, "://") + 3)
+    slash = F.instr(rest, "/")
+    return F.when(slash > 0, F.substr(rest, slash)).otherwise("/")
+
+
+def _is_wildcard(pattern: str) -> bool:
+    return "*" in pattern or pattern.endswith("$")
+
+
+def pattern_regex(pattern: str | None) -> str | None:
+    """Regex equivalent of a `_pattern_matches` wildcard pattern, or None for
+    a literal prefix (matched with ``startswith``). Every character that is
+    not an ASCII letter or digit is escaped with a backslash, which both Java
+    and Python read as that literal character; ``*`` becomes ``.*`` and a
+    trailing ``$`` becomes the end-of-input anchor ``\\z``."""
+    if pattern is None or not _is_wildcard(pattern):
+        return None
+    anchored = pattern.endswith("$")
+    core = pattern[:-1] if anchored else pattern
+
+    def esc(seg: str) -> str:
+        return "".join(
+            c if c.isascii() and c.isalnum() else "\\" + c for c in seg
+        )
+
+    return "(?s)^" + ".*".join(esc(s) for s in core.split("*")) + (
+        "\\z" if anchored else ""
+    )
+
+
+def allowed_col(path: Column, rules: Column) -> Column:
+    """`allowed` as a JVM expression over an ``array<struct<allow, prefix,
+    regex>>`` column: one ``aggregate`` pass keeps the (length, allow) of the
+    best matching rule — longest pattern wins, a tie prefers Allow. A null
+    ``regex`` matches as a literal prefix; null prefixes are skipped; null or
+    empty rules mean allowed."""
+
+    def step(acc: Column, r: Column) -> Column:
+        prefix = r["prefix"]
+        hit = (
+            F.when(prefix.isNull(), F.lit(False))
+            .when(r["regex"].isNull(), path.startswith(prefix))
+            .otherwise(F.regexp(path, r["regex"]))
+        )
+        plen = F.length(prefix)
+        allow = F.coalesce(r["allow"], F.lit(False))
+        better = hit & (
+            (plen > acc["len"]) | ((plen == acc["len"]) & allow)
+        )
+        return F.when(
+            better, F.struct(plen.alias("len"), allow.alias("allow"))
+        ).otherwise(acc)
+
+    init = F.struct(F.lit(-1).alias("len"), F.lit(True).alias("allow"))
+    return F.coalesce(
+        F.aggregate(rules, init, step)["allow"], F.lit(True)
+    )
 
 
 def _pattern_matches(path: str, pattern: str) -> bool:
@@ -75,7 +147,7 @@ def allowed(path: str, rules) -> bool:
         prefix = r["prefix"]
         if prefix is None:
             continue
-        if ("*" in prefix or prefix.endswith("$")):
+        if _is_wildcard(prefix):
             hit = _pattern_matches(path, prefix)
         else:
             hit = path.startswith(prefix)

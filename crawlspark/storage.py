@@ -81,9 +81,13 @@ class CrawlStorage:
         """Append one round's partition. Overwrite-idempotent: a re-run of an
         uncommitted round replaces the orphan dir (exact-resume invariant).
         ``cluster_by`` renders Iceberg ``bucket(host_hash)`` clustering, so
-        same-bucket rows of `seen` and `frontier` land in aligned files."""
+        same-bucket rows of `seen` and `frontier` land in aligned files.
+        Without clustering the round still lands in at most ``num_files``
+        files."""
         if cluster_by is not None and cluster_by in df.columns:
             df = df.repartition(num_files, cluster_by)
+        elif cluster_by is None:
+            df = df.coalesce(num_files)
         if self.catalog:
             self._write_round_iceberg(table, df, rnd)
             return

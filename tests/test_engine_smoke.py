@@ -87,6 +87,14 @@ def test_metrics_totals_match_tables(crawl):
     assert summary["totals"]["fetched"] == docs_n
 
 
+def test_metrics_round_is_one_file(crawl):
+    """The metrics sink asks for one file per round and gets exactly one."""
+    _, storage, _, summary = crawl
+    for rnd in range(1, summary["rounds"] + 1):
+        parts = list((storage.root / "metrics" / f"round={rnd:05d}").glob("part-*"))
+        assert len(parts) == 1, (rnd, parts)
+
+
 def test_empty_and_invalid_seed_lists(spark, tmp_path):
     """Degenerate inputs: no seeds / only invalid (non-http, malformed)
     seeds must bootstrap an empty frontier and exhaust immediately."""

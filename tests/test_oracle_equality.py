@@ -82,6 +82,85 @@ def test_per_round_metrics_equality(crawl_run, oracle):
         assert got == want, f"round {om['round']}: {got} != {want}"
 
 
+# RFC 9309 wildcard rules the synthetic web never emits: a `$` anchor, a
+# `*` before a regex metacharacter (`?`), and a longer Allow (`*$`) that
+# overrides the first Disallow for paths like /x/p17.
+_WILDCARD_DISALLOW = [
+    {"allow": False, "prefix": "/*7$"},
+    {"allow": False, "prefix": "/*?a="},
+]
+_WILDCARD_RULES = _WILDCARD_DISALLOW + [{"allow": True, "prefix": "/*/p1*$"}]
+
+
+def test_wildcard_robots_match_oracle(spark, tmp_path, monkeypatch):
+    """R2 regex branch end to end: with `*`/`$` rules on every other host,
+    the engine's JVM matcher must reproduce the oracle's crawl, and some
+    URL must be skipped only because of a wildcard rule, and some must be
+    fetched only because a longer wildcard Allow overrides one."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.engine import CrawlEngine
+    from crawlspark.functions.canon import host_of
+    from crawlspark.functions.robots import allowed, path_of
+    from crawlspark.sources import synthweb
+    from crawlspark.storage import CrawlStorage
+
+    literal_table = synthweb.robots_table
+
+    def wildcard_table(cfg):
+        rows = literal_table(cfg)
+        for r in rows[::2]:
+            r["rules"] = _WILDCARD_RULES + r["rules"]
+        return rows
+
+    monkeypatch.setattr(synthweb, "robots_table", wildcard_table)
+    monkeypatch.setattr(oracle_crawler, "robots_table", wildcard_table)
+
+    cfg = CrawlConfig(max_depth=1, max_rounds=12, web_hosts=12, shuffle_partitions=4)
+    storage = CrawlStorage(spark, tmp_path / "wild")
+    seeds = synthweb.seed_list(cfg, n=60)
+    summary = CrawlEngine(spark, cfg, storage).run(seeds)
+    want = oracle_crawler.crawl(cfg, seeds)
+
+    seen = {
+        r["url_canon"] for r in storage.read_table("seen").select("url_canon").collect()
+    }
+    assert seen == want.seen
+    assert summary["rounds"] == want.rounds
+    rows = (
+        storage.read_table("documents")
+        .select("round", "fetch_time", "host", "host_rank", "doc_id")
+        .orderBy("round", "fetch_time", "host", "host_rank")
+        .collect()
+    )
+    assert [(r["round"], r["doc_id"]) for r in rows] == want.crawl_order
+    skipped = 0
+    for om in want.per_round:
+        em = storage.manifest(om["round"])
+        assert em["skipped_robots"] == om["skipped_robots"], om["round"]
+        skipped += em["skipped_robots"]
+    assert skipped > 0
+
+    # an unfetched seen URL was skipped by robots; find one that only a
+    # wildcard rule disallows
+    wild = {r["host"]: r["rules"] for r in wildcard_table(cfg)}
+    literal = {r["host"]: r["rules"] for r in literal_table(cfg)}
+    fetched = {r["doc_id"] for r in rows}
+    by_wildcard = [
+        u
+        for u in seen - fetched
+        if not allowed(path_of(u), wild[host_of(u)])
+        and allowed(path_of(u), literal[host_of(u)])
+    ]
+    assert by_wildcard, sorted(seen - fetched)
+    by_override = [
+        u
+        for u in fetched
+        if not allowed(path_of(u), _WILDCARD_DISALLOW)
+        and wild[host_of(u)] != literal[host_of(u)]
+    ]
+    assert by_override
+
+
 def test_indegree_priority_mode_matches_oracle(spark, tmp_path):
     """P1 is a pluggable policy: under priority_mode="indegree" (in-round
     link-count boost within a depth level — the cheap rendering of

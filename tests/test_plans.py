@@ -19,21 +19,26 @@ def _plan(df) -> str:
 
 
 def test_robots_join_is_broadcast(spark, tmp_path):
-    """R1: the robots dimension must broadcast, never shuffle the frontier."""
+    """R1: the robots dimension must broadcast, never shuffle the frontier.
+    Admission (R1/R2/A4) runs in the JVM even with Arrow off, as in the
+    test SparkSession: the dim is a LocalRelation, so its broadcast needs
+    no Python worker, and the admission frame plans no Python UDF node."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.storage import CrawlStorage
     from crawlspark.sources import synthweb
 
+    assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "false"
     cfg = CrawlConfig(web_hosts=6, shuffle_partitions=4)
     storage = CrawlStorage(spark, tmp_path)
     eng = CrawlEngine(spark, cfg, storage)
     eng.bootstrap(synthweb.seed_list(cfg, n=10))
-    frontier = storage.read_round("frontier", 0)
-    joined = frontier.join(F.broadcast(eng._robots_df()), "host", "left")
-    plan = _plan(joined)
-    assert "BroadcastHashJoin" in plan
+    dim = eng._robots_df()._jdf.queryExecution().optimizedPlan().toString()
+    assert dim.lstrip().startswith("LocalRelation"), dim
+    plan = _plan(eng._admission_frame(storage.read_round("frontier", 0), 1))
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan, plan
     assert "SortMergeJoin" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_round_partition_pruning(spark, tmp_path):

@@ -161,3 +161,81 @@ def test_pattern_matches_regex_model():
         assert _pattern_matches(path, pat) == expect, (pat, path)
 
     check()
+
+
+# Characters that are wildcards in a robots pattern or special in a regex.
+_WILD_ALPHABET = "ab/.p*$?+()[\\"
+
+
+@st.composite
+def _rule_set(draw):
+    """None, [] or up to 5 rules; prefixes over ``_WILD_ALPHABET`` (so `*`
+    and `$` land in the middle and at the end), some null, and some rules
+    repeated with the opposite verdict to force equal-length ties."""
+    if draw(st.booleans()) and draw(st.booleans()):
+        return draw(st.sampled_from([None, []]))
+    rules = []
+    for _ in range(draw(st.integers(1, 5))):
+        prefix = draw(
+            st.none() | st.text(alphabet=_WILD_ALPHABET, max_size=6).map(lambda s: "/" + s)
+        )
+        allow = draw(st.booleans())
+        rules.append({"allow": allow, "prefix": prefix})
+        if draw(st.booleans()):
+            rules.append({"allow": not allow, "prefix": prefix})
+    return rules
+
+
+_URL = st.tuples(
+    st.sampled_from(["http://h.example", "https://h.example:8080"]),
+    st.text(alphabet=_WILD_ALPHABET, max_size=10),
+).map(lambda t: t[0] + t[1])
+
+
+def test_allowed_col_matches_allowed(spark):
+    """Property: the JVM matcher (`allowed_col` over `path_col`) gives the
+    oracle's verdict (`allowed` over `path_of`) on wildcard, anchored and
+    regex-metacharacter patterns. Each Hypothesis example is a batch of
+    (url, rules) rows evaluated in ONE DataFrame."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from crawlspark.functions.robots import allowed_col, path_col, pattern_regex
+
+    rule_t = pa.struct(
+        [("allow", pa.bool_()), ("prefix", pa.string()), ("regex", pa.string())]
+    )
+    schema = pa.schema(
+        [("i", pa.int32()), ("url", pa.string()), ("rules", pa.list_(rule_t))]
+    )
+
+    @settings(max_examples=40, deadline=None)
+    @given(batch=st.lists(st.tuples(_URL, _rule_set()), min_size=1, max_size=40))
+    def check(batch):
+        rows = [
+            {
+                "i": i,
+                "url": url,
+                "rules": None
+                if rules is None
+                else [dict(r, regex=pattern_regex(r["prefix"])) for r in rules],
+            }
+            for i, (url, rules) in enumerate(batch)
+        ]
+        # a pyarrow Table keeps the batch a LocalRelation: no Python worker
+        got = {
+            r["i"]: (r["path"], r["allowed"])
+            for r in spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+            .select(
+                "i",
+                path_col(F.col("url")).alias("path"),
+                allowed_col(path_col(F.col("url")), F.col("rules")).alias("allowed"),
+            )
+            .collect()
+        }
+        for i, (url, rules) in enumerate(batch):
+            path = path_of(url)
+            assert got[i] == (path, allowed(path, rules)), (url, rules)
+
+    check()
+
