@@ -26,13 +26,17 @@ T32/(4*T8). Two scaling probes are reported:
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PARTS
 (default "queries,crawl,docproc").
+
+This file is also the crawl harness the scripts under jobs/ import:
+make_spark, warm_python_workers, run_crawl, silicon_ceiling and the
+positive_int argparse type.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import shutil
 import sys
 import tempfile
 import time
@@ -40,19 +44,37 @@ import time
 import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 
 
-def make_spark(cores: int, shuffle_partitions: int, aqe: bool = True):
+def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
+    """The one session factory of bench.py and the scripts under jobs/.
+    ``master`` is any Spark master string: ``local[N]`` or
+    ``local-cluster[n,cores,mem]``, whose executors read
+    ``spark.executor.memory``."""
     from pyspark.sql import SparkSession
 
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"crawlspark-bench-{cores}")
+    spark = (
+        SparkSession.builder.master(master)
+        .appName("crawlspark-bench")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", str(aqe).lower())
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "8g")
+        .config("spark.executor.memory", "4g")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def positive_int(text: str) -> int:
+    """argparse type for counts that must be at least 1."""
+    try:
+        value = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value
 
 
 def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
@@ -84,8 +106,7 @@ def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
         "events_ordered_agg",
         "robots_match",
     ]
-    spark = make_spark(cpus, max(8, cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_spark(f"local[{cpus}]", max(8, cpus), aqe=True)
     q = em.queries()
     out: dict[str, float] = {}
     try:
@@ -99,12 +120,13 @@ def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
     return out
 
 
-def _warm_python_workers(spark, cores: int) -> None:
+def warm_python_workers(spark) -> None:
     """Spin up the python worker pool and pay the heavy imports (pandas,
     numpy, pyarrow.dataset, crawlspark) BEFORE the timed section: worker
     attach + import measured ~1s x 32 workers on this VM and belongs to
     session setup, not crawl throughput (same treatment as docproc's
-    warm-up slice)."""
+    warm-up slice). The UDF is a closure, so it is pickled by value:
+    local-cluster executors receive the crawlspark zip, not this file."""
     from pyspark.sql import functions as F
 
     @F.pandas_udf("long")
@@ -118,6 +140,7 @@ def _warm_python_workers(spark, cores: int) -> None:
 
         return x
 
+    cores = spark.sparkContext.defaultParallelism
     (
         spark.range(0, cores * 4, 1, cores)
         .select(_warm("id"))
@@ -127,89 +150,43 @@ def _warm_python_workers(spark, cores: int) -> None:
     )
 
 
-def _run_crawl(cores: int) -> dict:
-    from crawlspark.config import CrawlConfig
+def run_crawl(spark, cfg, seeds: list[str], root: str):
+    """The one crawl-run harness: warm the python workers, crawl ``seeds``
+    under storage ``root`` until exhaustion or ``cfg.max_rounds``, and
+    summarize. Returns the engine (its ``history`` holds the per-round
+    metrics) and the summary dict every crawl probe reports."""
     from crawlspark.engine import CrawlEngine
-    from crawlspark.sources import synthweb
     from crawlspark.storage import CrawlStorage
 
-    spark = make_spark(cores, 8, aqe=False)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix=f"bench-crawl-{cores}-")
-    try:
-        cfg = CrawlConfig(
-            max_depth=2,
-            max_rounds=16,
-            web_hosts=250,
-            round_seconds=3000.0,
-            shuffle_partitions=cores,
-        )
-        engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        seeds = synthweb.seed_list(cfg, n=500)
-        _warm_python_workers(spark, cores)
-        t0 = time.time()
-        summary = engine.run(seeds)
-        wall = time.time() - t0
-        deduped = sum(m.deduped for m in engine.history)
-        fetched = summary["totals"]["fetched"]
-        return {
-            "cores": cores,
-            "wall_sec": round(wall, 2),
-            "fetched": fetched,
-            "deduped": deduped,
-            "seen": summary["totals"]["seen"],
-            "rounds": summary["rounds"],
-            "exhausted": summary["exhausted"],
-            "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
-        }
-    finally:
-        spark.stop()
-        shutil.rmtree(root, ignore_errors=True)
+    engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
+    warm_python_workers(spark)
+    t0 = time.time()
+    summary = engine.run(seeds)
+    wall = time.time() - t0
+    fetched = summary["totals"]["fetched"]
+    deduped = sum(m.deduped for m in engine.history)
+    return engine, {
+        "wall_sec": round(wall, 2),
+        "fetched": fetched,
+        "deduped": deduped,
+        "seen": summary["totals"]["seen"],
+        "rounds": summary["rounds"],
+        "exhausted": summary["exhausted"],
+        "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
+    }
 
 
-def _run_big_crawl(cores: int) -> dict:
-    """The big-round regime the contract metric describes (BASELINE.md scale
-    demonstration): thousands of hosts, effectively unbounded politeness
-    budget, rounds of 10^4-10^5 URLs where per-URL python fetch+parse work
-    dominates the fixed per-round cost. This is the configuration whose
-    local[32] throughput is the headline `value`."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
+def _crawl_at(cores: int, cfg, n_seeds: int) -> dict:
+    """One bench crawl at local[cores] over ``n_seeds`` generated seeds."""
     from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
 
-    spark = make_spark(cores, max(8, cores), aqe=False)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix=f"bench-bigcrawl-{cores}-")
+    spark = make_spark(f"local[{cores}]", cfg.shuffle_partitions)
     try:
-        cfg = CrawlConfig(
-            max_depth=3,
-            max_rounds=8,
-            web_hosts=2000,
-            round_seconds=1e9,  # politeness effectively unbounded: big rounds
-            shuffle_partitions=max(8, cores),
-        )
-        engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        seeds = synthweb.seed_list(cfg, n=4000)
-        _warm_python_workers(spark, cores)
-        t0 = time.time()
-        summary = engine.run(seeds)
-        wall = time.time() - t0
-        deduped = sum(m.deduped for m in engine.history)
-        fetched = summary["totals"]["fetched"]
-        return {
-            "cores": cores,
-            "wall_sec": round(wall, 2),
-            "fetched": fetched,
-            "deduped": deduped,
-            "seen": summary["totals"]["seen"],
-            "rounds": summary["rounds"],
-            "exhausted": summary["exhausted"],
-            "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
-        }
+        with tempfile.TemporaryDirectory(prefix=f"bench-crawl-{cores}-") as root:
+            _, summary = run_crawl(spark, cfg, synthweb.seed_list(cfg, n=n_seeds), root)
     finally:
         spark.stop()
-        shutil.rmtree(root, ignore_errors=True)
+    return {"cores": cores, **summary}
 
 
 def bench_big_crawl() -> dict:
@@ -222,7 +199,23 @@ def bench_big_crawl() -> dict:
     back-to-back runs flipped which level "won"). The symmetric order gives
     each level one early and one late slot; best-of-2 approximates the
     unthrottled rate. Determinism fields (rounds/fetched/seen equality
-    across ALL runs) are credit-invariant evidence."""
+    across ALL runs) are credit-invariant evidence.
+
+    The crawl is the big-round regime the contract metric describes
+    (BASELINE.md scale demonstration): thousands of hosts, effectively
+    unbounded politeness budget, rounds of 10^4-10^5 URLs where per-URL
+    python fetch+parse work dominates the fixed per-round cost."""
+    from crawlspark.config import CrawlConfig
+
+    def cfg(cores: int) -> CrawlConfig:
+        return CrawlConfig(
+            max_depth=3,
+            max_rounds=8,
+            web_hosts=2000,
+            round_seconds=1e9,  # politeness effectively unbounded: big rounds
+            shuffle_partitions=max(8, cores),
+        )
+
     # Time-guarded: the first two runs (one per level) always happen; the
     # mirrored pair is skipped if the part is already past its time share,
     # so a badly throttled VM still yields a complete JSON line instead of
@@ -233,7 +226,7 @@ def bench_big_crawl() -> dict:
     for c in (32, 8, 8, 32):
         if len(runs) >= 2 and time.time() - t0 > part_budget:
             break
-        runs.append(_run_big_crawl(c))
+        runs.append(_crawl_at(c, cfg(c), n_seeds=4000))
     r32s = [r for r in runs if r["cores"] == 32]
     r8s = [r for r in runs if r["cores"] == 8]
     r32 = max(r32s, key=lambda r: r["throughput_urls_per_sec"])
@@ -259,6 +252,18 @@ def bench_crawl() -> dict:
     (per-round checkpoint/commit costs don't shrink with cores — at 10^10
     scale rounds are minutes of compute and this term vanishes). The
     compute-bound scaling evidence is `docproc_scaling`."""
+    from crawlspark.config import CrawlConfig
+
+    def crawl(cores: int) -> dict:
+        cfg = CrawlConfig(
+            max_depth=2,
+            max_rounds=16,
+            web_hosts=250,
+            round_seconds=3000.0,
+            shuffle_partitions=cores,
+        )
+        return _crawl_at(cores, cfg, n_seeds=500)
+
     # One run per level. This VM is credit-throttled: whichever multi-minute
     # job runs first gets burst credits (same local[32] crawl measured 21s
     # cold vs 77-211s warm), so repeated runs measure credit state, not the
@@ -266,8 +271,8 @@ def bench_crawl() -> dict:
     # overhead, so this is the conservative position for local[8]). The
     # compute-bound scaling evidence is docproc_scaling, whose short runs
     # fit inside a burst window.
-    r32 = _run_crawl(32)
-    r8 = _run_crawl(8)
+    r32 = crawl(32)
+    r8 = crawl(8)
     eff = r32["throughput_urls_per_sec"] / (4 * r8["throughput_urls_per_sec"])
     return {
         "local8": r8,
@@ -279,24 +284,30 @@ def bench_crawl() -> dict:
     }
 
 
-def calibrate_hardware(work_sec: float = 2.0) -> dict:
-    """Measure the MACHINE's own 8→32 process-parallel scaling ceiling with a
-    pure-python CPU burn (multiprocessing, no Spark). On SMT hardware the
-    ceiling is well below 1.0 — Spark cannot scale better than the silicon,
-    so efficiency numbers below are reported alongside this ceiling."""
+def silicon_ceiling(n: int, work_sec: float = 2.0) -> tuple[int, int, float]:
+    """The MACHINE's own n→4n process-parallel scaling ceiling, from a
+    pure-python CPU burn in an mp.Pool (no Spark): work units done by n
+    processes, by 4n processes, and the efficiency (w4n / wn) / 4. On SMT
+    hardware the ceiling is well below 1.0, and Spark cannot scale better
+    than the silicon under it."""
     import multiprocessing as mp
 
-    def measure(n: int) -> float:
-        with mp.Pool(n) as p:
-            res = p.map(_burn, [work_sec] * n)
-        return sum(res)
+    def measure(k: int) -> int:
+        with mp.Pool(k) as p:
+            return int(sum(p.map(_burn, [work_sec] * k)))
 
-    w8, w32 = measure(8), measure(32)
-    eff = (w32 / w8) / 4
+    wn, w4n = measure(n), measure(4 * n)
+    return wn, w4n, round((w4n / wn) / 4, 3)
+
+
+def calibrate_hardware(work_sec: float = 2.0) -> dict:
+    """The 8→32 silicon ceiling that the efficiency numbers below are
+    reported against."""
+    w8, w32, eff = silicon_ceiling(8, work_sec)
     return {
-        "work_units_8procs": int(w8),
-        "work_units_32procs": int(w32),
-        "hardware_ceiling_efficiency": round(eff, 3),
+        "work_units_8procs": w8,
+        "work_units_32procs": w32,
+        "hardware_ceiling_efficiency": eff,
     }
 
 
@@ -322,8 +333,7 @@ def _run_docproc(cores: int, n_rows: int) -> float:
     from crawlspark.config import CrawlConfig
     from crawlspark.sources.synthweb import page
 
-    spark = make_spark(cores, cores, aqe=False)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_spark(f"local[{cores}]", cores)
     try:
         cfg = CrawlConfig(web_hosts=1000)
 

@@ -6,7 +6,7 @@ All values are pure data — no Spark imports here so the sequential oracle
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Number of host-hash buckets used for partitioning/bucketing frontier, seen
 # and documents tables (SURVEY.md §1).  At 10^10-URL scale this would be
@@ -24,9 +24,6 @@ MAX_DEPTH = 4
 
 # Bloom filter target false-positive rate (SURVEY.md §2.3 A3).
 BLOOM_FP_RATE = 0.01
-
-# Arrow batch size for the fetch/parse mapInPandas stages.
-ARROW_BATCH_ROWS = 4096
 
 
 @dataclass(frozen=True)
@@ -49,13 +46,6 @@ class CrawlConfig:
     # banned forever (their frontier entries are dropped, not deferred).
     unban_round: int | None = None
     shuffle_partitions: int = 32
-    # Adaptive fetch-stage parallelism: the mapInPandas fetch repartitions to
-    # ceil(frontier_size / fetch_rows_per_partition), clamped to
-    # [4, shuffle_partitions]. Python-stage tasks carry real per-task cost
-    # (worker attach + Arrow setup), so small rounds want few fat partitions
-    # — measured 2.4x round latency from oversizing — while big rounds open
-    # up to the full shuffle_partitions. AQE cannot re-plan Python stages.
-    fetch_rows_per_partition: int = 2000
     # Table maintenance (storage.compact_table / expire_frontier_snapshots,
     # the Iceberg rewrite_data_files / expire_snapshots analogs). Off by
     # default: at fixture scale the rewrite job costs more than the listing
@@ -93,12 +83,12 @@ class CrawlConfig:
     # re-ranks every round; at the 10^4-round design point k=O(10-100)
     # bounds the re-rank cost the way compact_seen_every bounds listings.
     pagerank_every: int = 1
-    # Scaling-calibration knob (jobs/compute_scaling.py): extra deterministic
-    # hash evaluations per fetched URL inside the distributed fetch stage —
-    # models real fetch/parse CPU cost (HTML parsing, tokenization) WITHOUT
-    # changing any output (spans, links, and every downstream table are
-    # byte-identical at any value). Raising it grows the crawl's parallel
-    # fraction, which is how the N-vs-4N efficiency criterion is separated
-    # from this VM's fixed-cost floor. 0 = off (production default).
+    # Scaling-calibration knob (jobs/executor_scaling.py --work): extra
+    # deterministic hash evaluations per fetched URL inside the distributed
+    # fetch stage — models real fetch/parse CPU cost (HTML parsing,
+    # tokenization) WITHOUT changing any output (spans, links, and every
+    # downstream table are byte-identical at any value). Raising it grows
+    # the crawl's parallel fraction, which separates the N-vs-4N efficiency
+    # criterion from the machine's fixed per-round cost. 0 = off (production
+    # default).
     fetch_cpu_work: int = 0
-    extra_spark_conf: dict = field(default_factory=dict)

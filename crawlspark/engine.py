@@ -83,6 +83,15 @@ FRONTIER_COLS = [
     "parent_hash",
 ]
 
+# Adaptive fetch-stage parallelism: the mapInPandas fetch repartitions to
+# ceil(frontier_size / rows target), clamped to [4, shuffle_partitions]; the
+# target is this many rows unless per-URL work is heavy (_fetch_rows_target).
+# Python-stage tasks carry real per-task cost (worker attach + Arrow setup),
+# so small rounds want few fat partitions — measured 2.4x round latency from
+# oversizing — while big rounds open up to the full shuffle_partitions. AQE
+# cannot re-plan Python stages.
+FETCH_ROWS_PER_PARTITION = 2000
+
 # mapInPandas fetch output: spans come back as parallel primitive arrays and
 # are zipped into array<struct> JVM-side (arrays_zip stays in codegen and
 # sidesteps pandas→Arrow nested-struct conversion cost).
@@ -245,22 +254,21 @@ class CrawlEngine:
         )
 
     # --------------------------------------------------------- bootstrap
-    def bootstrap(self, seeds: list[str]) -> None:
-        """Round 0: seed list → canonical dedup'd frontier + seen."""
-        cfg = self.cfg
-        seeds_df = self.spark.createDataFrame(
+    def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
+        """Seed list → frontier rows: canonicalized, depth 0 / priority 0.0,
+        discovered in round ``rnd``, first-wins deduplicated by seed
+        position (``d_rank``)."""
+        fr = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
         )
-        canon = canonicalize_udf()
-        fr = (
-            seeds_df.withColumn("url_canon", canon("url"))
-            .filter(F.col("url_canon").isNotNull())
+        fr = fr.withColumn("url_canon", canonicalize_udf()("url")).filter(
+            F.col("url_canon").isNotNull()
         )
-        fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
+        fr = with_url_identity(fr, num_buckets=self.cfg.num_host_buckets)
         fr = (
             fr.withColumn("depth", F.lit(0))
             .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_round", F.lit(0))
+            .withColumn("discovered_round", F.lit(rnd))
             .withColumn("d_time", F.lit(0.0))
             .withColumn("d_host", F.lit(""))
             .withColumn("d_rank", F.col("seed_pos"))
@@ -269,11 +277,15 @@ class CrawlEngine:
         )
         # A1 first-wins dedup on the discovery-order tuple
         w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        fr = (
+        return (
             fr.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select(*FRONTIER_COLS)
         )
+
+    def bootstrap(self, seeds: list[str]) -> None:
+        """Round 0: seed list → canonical dedup'd frontier + seen."""
+        fr = self._seed_frontier(seeds, 0)
         self.storage.write_round("frontier", fr, 0)
         seen0 = self.storage.read_round("frontier", 0).select(
             "url_hash", "url_canon", "host_hash", F.lit(0).alias("first_round")
@@ -312,32 +324,7 @@ class CrawlEngine:
             n = self.storage.manifest(0)["frontier_size"]
             return {"round": 0, "injected": n, "phase": "bootstrap"}
         rnd = latest["round"] + 1
-        cfg = self.cfg
-        seeds_df = self.spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
-        )
-        canon = canonicalize_udf()
-        fr = (
-            seeds_df.withColumn("url_canon", canon("url"))
-            .filter(F.col("url_canon").isNotNull())
-        )
-        fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
-        fr = (
-            fr.withColumn("depth", F.lit(0))
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_round", F.lit(rnd))
-            .withColumn("d_time", F.lit(0.0))
-            .withColumn("d_host", F.lit(""))
-            .withColumn("d_rank", F.col("seed_pos"))
-            .withColumn("d_pos", F.lit(0))
-            .withColumn("parent_hash", F.lit(None).cast("long"))
-        )
-        w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        fr = (
-            fr.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*FRONTIER_COLS)
-        )
+        fr = self._seed_frontier(seeds, rnd)
         seen = self.storage.read_table("seen", upto_round=rnd - 1).select(
             "host_hash", "url_hash"
         )
@@ -353,9 +340,7 @@ class CrawlEngine:
         )
         self.storage.write_round("seen", seen_add, rnd)
         n_new = self.storage.read_round("seen", rnd).count()
-        prev_size = latest.get(
-            "next_frontier_size", latest.get("frontier_size", 0)
-        )
+        prev_size = _next_frontier_size(latest) or 0
         totals = dict(latest.get("totals", {}))
         totals["seen"] = totals.get("seen", 0) + n_new
         self.storage.commit_manifest(
@@ -395,15 +380,10 @@ class CrawlEngine:
         # this round; results are partition-count invariant (pinned by the
         # cross-parallelism determinism tests).
         prev_m = self.storage.manifest(rnd - 1) or {}
-        approx = int(
-            prev_m.get("next_frontier_size", prev_m.get("frontier_size", 0)) or 0
-        )
+        approx = _next_frontier_size(prev_m) or 0
         round_parts = max(
             8,
-            min(
-                cfg.shuffle_partitions,
-                -(-approx * 4 // cfg.fetch_rows_per_partition),
-            ),
+            min(cfg.shuffle_partitions, -(-approx * 4 // FETCH_ROWS_PER_PARTITION)),
         )
         sp.conf.set("spark.sql.shuffle.partitions", str(round_parts))
 
@@ -745,8 +725,7 @@ class CrawlEngine:
         next_size = m.skipped_politeness + m.new_urls + (
             m.skipped_banned if cfg.unban_round is not None else 0
         )
-        prev = self.storage.manifest(rnd - 1) or {}
-        totals = dict(prev.get("totals", {}))
+        totals = dict(prev_m.get("totals", {}))
         totals["seen"] = totals.get("seen", 0) + m.new_urls
         totals["fetched"] = totals.get("fetched", 0) + m.fetched
         self.storage.commit_manifest(
@@ -828,9 +807,7 @@ class CrawlEngine:
         rounds_run = 0
         last = start - 1
         for rnd in range(start, self.cfg.max_rounds + 1):
-            prev = self.storage.manifest(rnd - 1)
-            size = prev.get("next_frontier_size", prev.get("frontier_size", 0))
-            if size == 0:
+            if not _next_frontier_size(self.storage.manifest(rnd - 1)):
                 break
             m = self.run_round(rnd)
             rounds_run += 1
@@ -842,8 +819,17 @@ class CrawlEngine:
             "rounds": last,
             "rounds_run_this_session": rounds_run,
             "totals": final.get("totals", {}),
-            "exhausted": (final.get("next_frontier_size", final.get("frontier_size", 1)) == 0),
+            "exhausted": _next_frontier_size(final) == 0,
         }
+
+
+def _next_frontier_size(manifest: dict | None) -> int | None:
+    """Size of the frontier snapshot a committed round hands to the next
+    one (a bootstrap manifest records it as ``frontier_size``); None without
+    a manifest."""
+    if not manifest:
+        return None
+    return manifest.get("next_frontier_size", manifest.get("frontier_size"))
 
 
 def _fetch_rows_target(cfg: CrawlConfig) -> int:
@@ -851,7 +837,7 @@ def _fetch_rows_target(cfg: CrawlConfig) -> int:
     CPU cost instead of a fixed row count.
 
     Light-work crawls (fetch_cpu_work=0) keep the measured-on-this-sandbox
-    default (CrawlConfig.fetch_rows_per_partition): python tasks shorter
+    default (FETCH_ROWS_PER_PARTITION): python tasks shorter
     than ~0.5 s lose to worker-attach overhead, so small rounds want few
     fat partitions. When per-URL work is heavy the same row count makes
     partitions far fatter than they need to be to amortize attach cost and
@@ -859,16 +845,17 @@ def _fetch_rows_target(cfg: CrawlConfig) -> int:
     probe measured round 3 running 16-wide on 32 cores at ~4 ms/URL). Here
     the target is sized so each partition carries >= TARGET_US of python
     work — comfortably above attach cost — using the fetch_cpu_work burn
-    calibration (~2 us per unit per URL, jobs/compute_scaling.py), floored
-    at 8 rows so pathological work levels never degenerate to 1-row tasks.
+    calibration (~2 us per unit per URL, BASELINE.md's round-5
+    parallel-fraction probe), floored at 8 rows so pathological work levels
+    never degenerate to 1-row tasks.
     Pure sizing: partition count never changes results (pinned by the
     cross-parallelism determinism tests and
     test_fetch_cpu_work_does_not_change_results)."""
     if cfg.fetch_cpu_work <= 0:
-        return cfg.fetch_rows_per_partition
+        return FETCH_ROWS_PER_PARTITION
     target_us = 100_000.0  # >= 100 ms of work per partition
     per_url_us = 2.0 * cfg.fetch_cpu_work
-    return max(8, min(cfg.fetch_rows_per_partition, int(target_us // per_url_us)))
+    return max(8, min(FETCH_ROWS_PER_PARTITION, int(target_us // per_url_us)))
 
 
 def _make_fetcher(cfg: CrawlConfig):

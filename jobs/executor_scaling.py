@@ -2,14 +2,15 @@
 
 BASELINE.json's north_rule asks for throughput scaling efficiency >= 0.8
 between N and 4N *executors*. bench.py's big-crawl probe approximates that
-with local[8] vs local[32] thread counts inside ONE JVM; this probe runs
-the SAME big-round crawl on Spark's `local-cluster[n, cores, mem]` master —
-n real executor JVMs with their own memory, python workers, netty shuffle
-and broadcast — at n=1 and n=4 executors x 8 cores. That is as close to a
-real two-size cluster as a single sandbox VM can get; the remaining gap to
-a real cluster is only that all executor JVMs share this machine's 16
-physical cores and its burst-credit throttle (BASELINE.md), which is why
-runs are interleaved (4,1,1,4 executors) best-of-2 like bench.py.
+with thread counts inside ONE JVM; this probe runs the SAME big-round crawl
+on Spark's `local-cluster[n, cores, mem]` master — n real executor JVMs
+with their own memory, python workers, netty shuffle and broadcast — at
+n=1 and n=4 executors. Each executor gets max(1, cpus // 4) cores, where
+cpus is SPARK_GRAFT_CPUS or else the CPUs this process may run on, so the
+4N level fills the machine without oversubscribing it. That is as close
+to a real two-size cluster as one machine can get; the remaining gap is
+that all executor JVMs share its cores, which is why runs are interleaved
+(4,1,1,4 executors) best-of-2 like bench.py.
 
 The package ships to executors via addPyFile(zip) — nothing relies on the
 repo being on the executors' filesystem path (same discipline as
@@ -18,15 +19,14 @@ jobs/submit_demo.sh).
 `--work` (default 2000) sets CrawlConfig.fetch_cpu_work: a deterministic
 per-URL CPU burn inside the distributed fetch stage with ZERO output
 effect (test_fetch_cpu_work_does_not_change_results) — the realistic
-parallel fraction that jobs/compute_scaling.py showed separates the
-engine's scaling from this VM's fixed-cost floor. Combined with real
-executor JVMs this is the contract's N→4N criterion in its most literal
-falsifiable form on one box. `--work 0` reproduces the round-3/4 bare
-probe. The same-slot mp.Pool silicon ceiling (cores → 4*cores processes)
-is measured FIRST so the efficiency can be read against what this
-machine's SMT cores can physically deliver.
+parallel fraction that separates the engine's scaling from the machine's
+fixed per-round cost. `--work 0` reproduces the round-3/4 bare probe. The
+same-slot mp.Pool silicon ceiling (cores → 4*cores processes) is measured
+FIRST so the efficiency can be read against what the machine's cores can
+physically deliver.
 
 Usage: python jobs/executor_scaling.py [--budget SEC] [--work N]
+                                       [--seeds S] [--hosts H]
 Prints one JSON line: per-level throughput, scaling efficiency, the
 same-slot silicon ceiling, determinism.
 """
@@ -41,12 +41,10 @@ import sys
 import tempfile
 import time
 
-# module-level: the warm-up pandas_udf's type hints are strings under
-# `from __future__ import annotations` and resolve against module globals
-import pandas as pd
-
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
+
+from bench import make_spark, positive_int, run_crawl, silicon_ceiling  # noqa: E402
 
 
 def _make_pyfiles_zip() -> str:
@@ -58,118 +56,45 @@ def _make_pyfiles_zip() -> str:
     return path
 
 
-def _silicon_ceiling(n: int, work_sec: float = 2.0) -> dict:
-    """Same-slot mp.Pool ceiling for n -> 4n processes (pure python, no
-    Spark): Spark cannot scale better than the silicon under it, so the
-    probe's efficiency is reported against this number (bench.py
-    calibrate_hardware, generalized to the executor topology)."""
-    import multiprocessing as mp
-
-    from bench import _burn
-
-    def measure(k: int) -> float:
-        with mp.Pool(k) as p:
-            return sum(p.map(_burn, [work_sec] * k))
-
-    wn, w4n = measure(n), measure(4 * n)
-    return {
-        "procs": [n, 4 * n],
-        "ceiling_efficiency": round((w4n / wn) / 4, 3),
-    }
-
-
-def run_crawl(
-    n_executors: int,
-    cores_per_exec: int,
-    zip_path: str,
-    work: int,
-    seeds_n: int = 4000,
-    hosts: int = 2000,
+def run_level(
+    n_executors: int, cores_per_exec: int, zip_path: str, work: int,
+    seeds_n: int, hosts: int,
 ) -> dict:
-    from pyspark.sql import SparkSession
-
     from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
 
     total_cores = n_executors * cores_per_exec
-    spark = (
-        SparkSession.builder.master(
-            f"local-cluster[{n_executors},{cores_per_exec},4096]"
-        )
-        .config("spark.sql.shuffle.partitions", str(max(8, total_cores)))
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.executor.memory", "4g")
-        .getOrCreate()
+    cfg = CrawlConfig(
+        max_depth=3,
+        max_rounds=8,
+        web_hosts=hosts,
+        round_seconds=1e9,
+        shuffle_partitions=max(8, total_cores),
+        # realistic per-URL parallel fraction; outputs byte-identical at
+        # any value. Fetch partitions auto-size from it
+        # (engine._fetch_rows_target), so heavy rounds saturate width.
+        fetch_cpu_work=work,
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addPyFile(zip_path)
-    root = tempfile.mkdtemp(prefix=f"execscale-{n_executors}x{cores_per_exec}-")
+    spark = make_spark(
+        f"local-cluster[{n_executors},{cores_per_exec},4096]", cfg.shuffle_partitions
+    )
     try:
-        cfg = CrawlConfig(
-            max_depth=3,
-            max_rounds=8,
-            web_hosts=hosts,
-            round_seconds=1e9,
-            shuffle_partitions=max(8, total_cores),
-            # realistic per-URL parallel fraction; outputs byte-identical at
-            # any value. Fetch partitions auto-size from it
-            # (engine._fetch_rows_target), so heavy rounds saturate width.
-            fetch_cpu_work=work,
-        )
-        engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        seeds = synthweb.seed_list(cfg, n=seeds_n)
-        # python-worker warm-up on every executor (bench.py rationale):
-        # worker spawn + library imports must not bill to the timed crawl
-        from pyspark.sql import functions as F
-
-        @F.pandas_udf("long")
-        def _warm(x: pd.Series) -> pd.Series:
-            import numpy  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            from crawlspark import filters  # noqa: F401
-            from crawlspark.functions import canon  # noqa: F401
-
-            return x
-
-        spark.range(total_cores * 4).repartition(total_cores * 4).select(
-            _warm("id")
-        ).count()
-
-        t0 = time.time()
-        summary = engine.run(seeds)
-        wall = time.time() - t0
-        fetched = summary["totals"]["fetched"]
-        deduped = sum(m.deduped for m in engine.history)
-        return {
-            "executors": n_executors,
-            "cores_per_executor": cores_per_exec,
-            "wall_sec": round(wall, 2),
-            "fetched": fetched,
-            "deduped": deduped,
-            "seen": summary["totals"]["seen"],
-            "rounds": summary["rounds"],
-            "exhausted": summary["exhausted"],
-            "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
-        }
+        spark.sparkContext.addPyFile(zip_path)
+        with tempfile.TemporaryDirectory(
+            prefix=f"execscale-{n_executors}x{cores_per_exec}-"
+        ) as root:
+            _, summary = run_crawl(
+                spark, cfg, synthweb.seed_list(cfg, n=seeds_n), root
+            )
     finally:
         spark.stop()
-        shutil.rmtree(root, ignore_errors=True)
+    return {"executors": n_executors, "cores_per_executor": cores_per_exec, **summary}
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--budget", type=float, default=600.0,
                     help="skip the mirrored pair past this many seconds")
-    # default 4: at 4N executors that is 16 concurrent task threads — this
-    # VM's physical core count. 8 cores/executor puts 32 task threads + 32
-    # python workers on 16 cores at 4N and the probe measures pure
-    # oversubscription (measured eff 0.07 with bit-identical outputs);
-    # cores_per_executor is the knob a real cluster would not need.
-    ap.add_argument("--cores-per-executor", type=int, default=4)
     ap.add_argument("--work", type=int, default=2000,
                     help="fetch_cpu_work (~2 us per unit per URL); 0 = the "
                     "bare round-3/4 probe")
@@ -178,11 +103,13 @@ def main() -> None:
     # stage (shuffles, windows, sinks) must push — i.e. it raises the
     # parallel fraction the way a real fetch+parse workload (tens of ms per
     # URL) does, without raising the probe's wall-clock budget
-    ap.add_argument("--seeds", type=int, default=4000)
-    ap.add_argument("--hosts", type=int, default=2000)
-    args = ap.parse_args()
+    ap.add_argument("--seeds", type=positive_int, default=4000)
+    ap.add_argument("--hosts", type=positive_int, default=2000)
+    args = ap.parse_args(argv)
 
-    ceiling = _silicon_ceiling(args.cores_per_executor)  # same slot, FIRST
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cores_per_exec = max(1, cpus // 4)  # the 4N level fills the machine
+    _, _, ceiling = silicon_ceiling(cores_per_exec)  # same slot, FIRST
     zip_path = _make_pyfiles_zip()
     t0 = time.time()
     runs = []
@@ -192,7 +119,7 @@ def main() -> None:
         if len(runs) >= 2 and time.time() - t0 > args.budget:
             break
         runs.append(
-            run_crawl(n, args.cores_per_executor, zip_path, args.work,
+            run_level(n, cores_per_exec, zip_path, args.work,
                       seeds_n=args.seeds, hosts=args.hosts)
         )
     by = lambda n: [r for r in runs if r["executors"] == n]  # noqa: E731
@@ -205,7 +132,10 @@ def main() -> None:
         "work": args.work,
         "seeds": args.seeds,
         "hosts": args.hosts,
-        "silicon_ceiling": ceiling,
+        "silicon_ceiling": {
+            "procs": [cores_per_exec, 4 * cores_per_exec],
+            "ceiling_efficiency": ceiling,
+        },
         "n_executors": best.get(1),
         "n4_executors": best.get(4),
         "all_walls_sec": [r["wall_sec"] for r in runs],
@@ -219,9 +149,7 @@ def main() -> None:
             4 * best[1]["throughput_urls_per_sec"]
         )
         out["scaling_efficiency_1_to_4_executors"] = round(eff, 3)
-        out["efficiency_vs_silicon_ceiling"] = round(
-            eff / ceiling["ceiling_efficiency"], 3
-        )
+        out["efficiency_vs_silicon_ceiling"] = round(eff / ceiling, 3)
     print(json.dumps(out))
 
 

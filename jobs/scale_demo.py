@@ -31,10 +31,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
+import pathlib
 import sys
 import tempfile
-import time
 
 # runnable as `python jobs/scale_demo.py` from anywhere: the repo root (not
 # jobs/) carries the crawlspark package, for the driver AND the local-mode
@@ -45,29 +44,7 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-
-def positive_int(text: str) -> int:
-    """argparse type for counts that must be at least 1."""
-    try:
-        value = int(text)
-    except ValueError:
-        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
-    if value < 1:
-        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
-    return value
-
-
-def make_spark(cores: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+from bench import make_spark, positive_int, run_crawl  # noqa: E402
 
 
 def run_demo(
@@ -78,74 +55,55 @@ def run_demo(
     seeds_n: int = 25_000,
 ) -> dict:
     from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
 
-    spark = make_spark(cores)
-    spark.sparkContext.setLogLevel("ERROR")
+    cfg = CrawlConfig(
+        max_depth=3,
+        max_rounds=8,
+        web_hosts=hosts,
+        round_seconds=1e9,  # politeness effectively unbounded
+        shuffle_partitions=cores,
+        hot_host="host00.example" if skew else None,
+        # table maintenance: seen compaction every 2 rounds + frontier
+        # snapshot expiry — results must stay bit-identical
+        compact_seen_every=2 if maintenance else None,
+        expire_frontier=maintenance,
+    )
+    seeds = synthweb.seed_list(cfg, n=seeds_n)
     tag = ("skewmaint" if skew else "maint") if maintenance else (
         "skew" if skew else "bal")
-    root = tempfile.mkdtemp(prefix=f"scale-demo-{tag}-")
+    spark = make_spark(f"local[{cores}]", cores)
     try:
-        cfg = CrawlConfig(
-            max_depth=3,
-            max_rounds=8,
-            web_hosts=hosts,
-            round_seconds=1e9,  # politeness effectively unbounded
-            shuffle_partitions=cores,
-            hot_host="host00.example" if skew else None,
-            # table maintenance: seen compaction every 2 rounds + frontier
-            # snapshot expiry — results must stay bit-identical
-            compact_seen_every=2 if maintenance else None,
-            expire_frontier=maintenance,
-        )
-        seeds = synthweb.seed_list(cfg, n=seeds_n)
-        engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        t0 = time.time()
-        summary = engine.run(seeds)
-        wall = time.time() - t0
-        rows = []
-        print(f"\n== {'SKEW (hot_host ~50% of links)' if skew else 'BALANCED'} "
-              f"local[{cores}] ==")
-        print("round | frontier | fetched | new URLs | deduped | HLL est")
-        for m in engine.history:
-            print(f"{m.round} | {m.frontier_size} | {m.fetched} | "
-                  f"{m.new_urls} | {m.deduped} | "
-                  f"{m.extras.get('frontier_distinct_est')}")
-            rows.append([m.round, m.frontier_size, m.fetched, m.new_urls,
-                         m.deduped])
-        fetched = summary["totals"]["fetched"]
-        deduped = sum(m.deduped for m in engine.history)
-        import pathlib
-
-        rp = pathlib.Path(root)
-        seen_files = len(list((rp / "seen").rglob("*.parquet"))) + (
-            len(list((rp / "_compact" / "seen").rglob("*.parquet")))
-            if (rp / "_compact" / "seen").exists()
-            else 0
-        )
-        frontier_dirs = len(list((rp / "frontier").glob("round=*")))
-        out = {
-            "skew": skew,
-            "maintenance": maintenance,
-            "seen_parquet_files": seen_files,
-            "frontier_snapshot_dirs": frontier_dirs,
-            "cores": cores,
-            "wall_sec": round(wall, 2),
-            "fetched": fetched,
-            "deduped": deduped,
-            "seen": summary["totals"]["seen"],
-            "rounds": summary["rounds"],
-            "exhausted": summary["exhausted"],
-            "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
-            "per_round": rows,
-        }
-        print(json.dumps({k: v for k, v in out.items() if k != "per_round"}))
-        return out
+        with tempfile.TemporaryDirectory(prefix=f"scale-demo-{tag}-") as root:
+            engine, summary = run_crawl(spark, cfg, seeds, root)
+            rp = pathlib.Path(root)
+            seen_files = len(list(rp.glob("seen/**/*.parquet"))) + len(
+                list(rp.glob("_compact/seen/**/*.parquet"))
+            )
+            frontier_dirs = len(list(rp.glob("frontier/round=*")))
     finally:
         spark.stop()
-        shutil.rmtree(root, ignore_errors=True)
+    rows = []
+    print(f"\n== {'SKEW (hot_host ~50% of links)' if skew else 'BALANCED'} "
+          f"local[{cores}] ==")
+    print("round | frontier | fetched | new URLs | deduped | HLL est")
+    for m in engine.history:
+        print(f"{m.round} | {m.frontier_size} | {m.fetched} | "
+              f"{m.new_urls} | {m.deduped} | "
+              f"{m.extras.get('frontier_distinct_est')}")
+        rows.append([m.round, m.frontier_size, m.fetched, m.new_urls,
+                     m.deduped])
+    out = {
+        "skew": skew,
+        "maintenance": maintenance,
+        "seen_parquet_files": seen_files,
+        "frontier_snapshot_dirs": frontier_dirs,
+        "cores": cores,
+        **summary,
+        "per_round": rows,
+    }
+    print(json.dumps({k: v for k, v in out.items() if k != "per_round"}))
+    return out
 
 
 def main(argv: list[str] | None = None) -> None:

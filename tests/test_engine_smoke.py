@@ -106,8 +106,8 @@ def test_empty_and_invalid_seed_lists(spark, tmp_path):
 
 def test_fetch_cpu_work_does_not_change_results(spark, tmp_path):
     """CrawlConfig.fetch_cpu_work is a pure CPU burn inside the fetch stage
-    (the jobs/compute_scaling.py parallel-fraction knob): every table a
-    crawl produces must be byte-identical with it on or off."""
+    (the parallel-fraction knob of jobs/executor_scaling.py --work): every
+    table a crawl produces must be byte-identical with it on or off."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
@@ -141,9 +141,9 @@ def test_fetch_rows_target_sizes_from_per_url_cost():
     light work keeps the measured sandbox default; pathological work levels
     are floored so tasks never degenerate to single rows."""
     from crawlspark.config import CrawlConfig
-    from crawlspark.engine import _fetch_rows_target
+    from crawlspark.engine import FETCH_ROWS_PER_PARTITION, _fetch_rows_target
 
-    assert _fetch_rows_target(CrawlConfig()) == CrawlConfig().fetch_rows_per_partition
+    assert _fetch_rows_target(CrawlConfig()) == FETCH_ROWS_PER_PARTITION
     # ~4 ms/URL (the round-4 probe's level): 100 ms target -> 25 rows
     assert _fetch_rows_target(CrawlConfig(fetch_cpu_work=2000)) == 25
     # with that target a 1000-URL round on 32 cores opens the full width

@@ -11,26 +11,38 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
+SCRIPTS = ["scale_demo", "executor_scaling"]
 
-def _load_scale_demo(monkeypatch):
-    # the script puts the repo root on sys.path and PYTHONPATH at import;
-    # monkeypatch restores both afterwards
+
+def _load_job(monkeypatch, name: str):
+    # the scripts put the repo root on sys.path (and scale_demo on
+    # PYTHONPATH) at import; monkeypatch restores both afterwards
     monkeypatch.setattr(sys, "path", list(sys.path))
     monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
-    spec = importlib.util.spec_from_file_location(
-        "scale_demo", REPO / "jobs" / "scale_demo.py"
-    )
+    spec = importlib.util.spec_from_file_location(name, REPO / "jobs" / f"{name}.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_scale_demo_rejects_zero_hosts(monkeypatch, capsys):
+@pytest.mark.parametrize("name", SCRIPTS)
+def test_job_help_exits_zero(monkeypatch, capsys, name):
+    """--help parses and exits 0: the script and its harness imports load
+    without starting Spark."""
+    job = _load_job(monkeypatch, name)
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--help"])
+    assert exc.value.code == 0
+    assert "--hosts" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("name", SCRIPTS)
+def test_job_rejects_zero_hosts(monkeypatch, capsys, name):
     """--hosts 0 used to reach synthweb.seed_list and raise
     ZeroDivisionError; it must stop at argument parsing with a usage error,
     before any Spark session starts."""
-    scale_demo = _load_scale_demo(monkeypatch)
+    job = _load_job(monkeypatch, name)
     with pytest.raises(SystemExit) as exc:
-        scale_demo.main(["--hosts", "0"])
+        job.main(["--hosts", "0"])
     assert exc.value.code == 2
     assert "--hosts: must be >= 1, got 0" in capsys.readouterr().err
