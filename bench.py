@@ -28,13 +28,11 @@ SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PARTS
 (default "queries,crawl,docproc").
 
 This file is also the crawl harness the scripts under jobs/ import:
-make_spark, warm_python_workers, run_crawl, silicon_ceiling and the
-positive_int argparse type.
+make_spark, warm_python_workers, run_crawl and silicon_ceiling.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -64,17 +62,6 @@ def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def positive_int(text: str) -> int:
-    """argparse type for counts that must be at least 1."""
-    try:
-        value = int(text)
-    except ValueError:
-        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
-    if value < 1:
-        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
-    return value
 
 
 def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:

@@ -1,11 +1,13 @@
 """Engine-wide constants and tuning knobs.
 
 All values are pure data — no Spark imports here so the sequential oracle
-(tests/oracle_crawler.py) can share them without a JVM.
+(tests/oracle_crawler.py) can share them without a JVM, and so the command
+lines under jobs/ can parse knobs (``positive_int``) before Spark starts.
 """
 
 from __future__ import annotations
 
+import argparse
 from dataclasses import dataclass
 
 # Number of host-hash buckets used for partitioning/bucketing frontier, seen
@@ -92,3 +94,14 @@ class CrawlConfig:
     # criterion from the machine's fixed per-round cost. 0 = off (production
     # default).
     fetch_cpu_work: int = 0
+
+
+def positive_int(text: str) -> int:
+    """argparse type for counts that must be at least 1."""
+    try:
+        value = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value

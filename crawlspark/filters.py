@@ -2,8 +2,7 @@
 deletable cuckoo filter.
 
 PySpark does not expose ``DataFrameStatFunctions.bloomFilter`` (Scala-only —
-SURVEY.md §0.3), so both structures are custom, numpy-vectorized, and
-serializable to bytes so they can be broadcast to executors.
+SURVEY.md §0.3), so both structures are custom and numpy-vectorized.
 
 The engine answers "seen?" with the exact anti-join against the ``seen``
 table alone: a Bloom prefilter in front of it added a shuffle and two Python
@@ -75,19 +74,6 @@ class BloomFilter:
         pos = self._positions(np.asarray(keys, dtype=np.int64))
         hit = (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
         return hit.all(axis=0).astype(bool)
-
-    # -- (de)serialization for broadcast --------------------------------------
-    def to_bytes(self) -> bytes:
-        head = np.array([self.n_bits, self.k, self.n_items], dtype=np.int64)
-        return head.tobytes() + self.bits.tobytes()
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        head = np.frombuffer(blob[:24], dtype=np.int64)
-        f = cls.__new__(cls)
-        f.n_bits, f.k, f.n_items = int(head[0]), int(head[1]), int(head[2])
-        f.bits = np.frombuffer(blob[24:], dtype=np.uint8).copy()
-        return f
 
 
 class CuckooFilter:
@@ -170,20 +156,3 @@ class CuckooFilter:
         in1 = (self.table[i1] == fp[:, None]).any(axis=1)
         in2 = (self.table[i2] == fp[:, None]).any(axis=1)
         return in1 | in2
-
-    def to_bytes(self) -> bytes:
-        head = np.array([self.n_buckets, self.n_items], dtype=np.int64)
-        return head.tobytes() + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "CuckooFilter":
-        head = np.frombuffer(blob[:16], dtype=np.int64)
-        f = cls.__new__(cls)
-        f.n_buckets, f.n_items = int(head[0]), int(head[1])
-        f.table = (
-            np.frombuffer(blob[16:], dtype=np.uint16)
-            .reshape(f.n_buckets, cls.SLOTS)
-            .copy()
-        )
-        f._rng = np.random.default_rng(42)
-        return f

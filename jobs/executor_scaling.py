@@ -44,7 +44,8 @@ import time
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-from bench import make_spark, positive_int, run_crawl, silicon_ceiling  # noqa: E402
+from bench import make_spark, run_crawl, silicon_ceiling  # noqa: E402
+from crawlspark.config import positive_int  # noqa: E402
 
 
 def _make_pyfiles_zip() -> str:

@@ -16,18 +16,20 @@ from __future__ import annotations
 import argparse
 import json
 
+from crawlspark.config import positive_int
 
-def main() -> None:
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--root", required=True, help="storage root (tables + manifests)")
     ap.add_argument("--seeds", default=None, help="seed list file (.txt or .csv)")
-    ap.add_argument("--seed-count", type=int, default=100)
+    ap.add_argument("--seed-count", type=positive_int, default=100)
     ap.add_argument("--max-depth", type=int, default=4)
-    ap.add_argument("--max-rounds", type=int, default=64)
+    ap.add_argument("--max-rounds", type=positive_int, default=64)
     ap.add_argument("--round-seconds", type=float, default=30.0)
-    ap.add_argument("--web-hosts", type=int, default=20)
-    ap.add_argument("--shuffle-partitions", type=int, default=32)
-    ap.add_argument("--unban-round", type=int, default=None)
+    ap.add_argument("--web-hosts", type=positive_int, default=20)
+    ap.add_argument("--shuffle-partitions", type=positive_int, default=32)
+    ap.add_argument("--unban-round", type=positive_int, default=None)
     ap.add_argument(
         "--inject",
         action="store_true",
@@ -50,7 +52,7 @@ def main() -> None:
         "DataSourceV2 (requires iceberg-spark-runtime on the cluster); "
         "default keeps the parquet facade under --root",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 

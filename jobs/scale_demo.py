@@ -44,7 +44,8 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-from bench import make_spark, positive_int, run_crawl  # noqa: E402
+from bench import make_spark, run_crawl  # noqa: E402
+from crawlspark.config import positive_int  # noqa: E402
 
 
 def run_demo(
@@ -86,11 +87,10 @@ def run_demo(
     rows = []
     print(f"\n== {'SKEW (hot_host ~50% of links)' if skew else 'BALANCED'} "
           f"local[{cores}] ==")
-    print("round | frontier | fetched | new URLs | deduped | HLL est")
+    print("round | frontier | fetched | new URLs | deduped")
     for m in engine.history:
         print(f"{m.round} | {m.frontier_size} | {m.fetched} | "
-              f"{m.new_urls} | {m.deduped} | "
-              f"{m.extras.get('frontier_distinct_est')}")
+              f"{m.new_urls} | {m.deduped}")
         rows.append([m.round, m.frontier_size, m.fetched, m.new_urls,
                      m.deduped])
     out = {

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.config import CrawlConfig
-from crawlspark.engine import CrawlEngine
+from crawlspark.engine import CrawlEngine, _next_frontier_size
 from crawlspark.sources import synthweb
 from crawlspark.storage import CrawlStorage
 
@@ -81,10 +81,42 @@ def test_banned_hosts_never_fetched(crawl):
         assert docs.filter(F.col("host").isin(banned)).count() == 0
 
 
+def assert_round_counters_match_tables(storage, summary) -> None:
+    """Every committed round: the frontier snapshot is unique per url_hash
+    and as large as the manifest says; the metrics (S7) table's per-round
+    column sums are the manifest's counters, and it has no all-zero row."""
+    rounds = range(summary["rounds"] + 1)
+    manifests = {r: storage.manifest(r) for r in rounds}
+    frontier = {
+        r["round"]: (r["n"], r["distinct"])
+        for r in storage.read_table("frontier")
+        .groupBy("round")
+        .agg(F.count("*").alias("n"), F.countDistinct("url_hash").alias("distinct"))
+        .collect()
+    }
+    for rnd in rounds:
+        n, distinct = frontier.get(rnd, (0, 0))
+        assert n == distinct == _next_frontier_size(manifests[rnd]), rnd
+
+    cols = ["fetched", "skipped_robots", "skipped_politeness", "new_urls"]
+    metrics = storage.read_table("metrics")
+    assert metrics.filter(" AND ".join(f"{c} = 0" for c in cols)).count() == 0
+    sums = {
+        r["round"]: {c: r[c] for c in cols}
+        for r in metrics.groupBy("round")
+        .agg(*[F.sum(c).alias(c) for c in cols])
+        .collect()
+    }
+    for rnd in rounds[1:]:
+        want = {c: manifests[rnd][c] for c in cols}
+        assert sums.get(rnd, dict.fromkeys(cols, 0)) == want, rnd
+
+
 def test_metrics_totals_match_tables(crawl):
     _, storage, _, summary = crawl
     docs_n = storage.read_table("documents").count()
     assert summary["totals"]["fetched"] == docs_n
+    assert_round_counters_match_tables(storage, summary)
 
 
 def test_metrics_round_is_one_file(crawl):

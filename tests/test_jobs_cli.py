@@ -46,3 +46,19 @@ def test_job_rejects_zero_hosts(monkeypatch, capsys, name):
         job.main(["--hosts", "0"])
     assert exc.value.code == 2
     assert "--hosts: must be >= 1, got 0" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "flag",
+    ["--web-hosts", "--seed-count", "--max-rounds", "--shuffle-partitions",
+     "--unban-round"],
+)
+def test_run_crawl_rejects_counts_below_one(monkeypatch, capsys, flag):
+    """jobs/run_crawl.py: --web-hosts 0 used to reach synthweb.seed_list and
+    raise ZeroDivisionError; every count option must stop at argument
+    parsing with a usage error, before any Spark session starts."""
+    job = _load_job(monkeypatch, "run_crawl")
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--root", "unused", flag, "0"])
+    assert exc.value.code == 2
+    assert f"{flag}: must be >= 1, got 0" in capsys.readouterr().err

@@ -231,10 +231,11 @@ def test_range_join_is_equi_join(spark):
 def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     """Per-round driver-job budget: every Spark job carries ~0.5-1 s of fixed
     scheduling latency in local mode, and at 10^10 scale each extra action is
-    an extra cluster-wide barrier. The round loop runs ONE fused tagged-union
-    stats job (admission + fetch + candidate/new/deferred counters), answers
-    "seen?" with one exact anti-join (no prefilter stages), and overlaps the
-    tail sinks — 10 jobs/round and 5 for the bootstrap measured. This pins
+    an extra cluster-wide barrier. The round loop counts everything with ONE
+    per-bucket sum (collected, then written as the metrics table from the
+    driver), answers "seen?" with one exact anti-join (no prefilter
+    stages), and overlaps the tail sinks — 10 jobs/round and 5 for the
+    bootstrap measured. This pins
     both budgets (<=11, <=5) and flatness (round k and k+1 identical), so an
     accidental extra .count()/.collect() in the hot loop fails loudly."""
     from crawlspark.config import CrawlConfig

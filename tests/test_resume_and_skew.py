@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import oracle_crawler
+from test_engine_smoke import assert_round_counters_match_tables
 from crawlspark.config import CrawlConfig
 from crawlspark.engine import CrawlEngine
 from crawlspark.sources import synthweb
@@ -168,8 +169,9 @@ def test_deletable_ban_equality(spark, tmp_path):
     """A4 cuckoo path: host banned until unban_round, then crawled; engine
     must match the oracle on ordering, seen set and rounds. The ban filter
     is rebuilt from the config by every engine, so a crawl resumed by a
-    fresh engine must hold the uninterrupted engine's filter bytes at the
-    same round, before and after the unban, and still match the oracle."""
+    fresh engine must hold the uninterrupted engine's filter state (table
+    and item count) at the same round, before and after the unban, and
+    still match the oracle."""
     cfg = CrawlConfig(
         max_depth=1,
         max_rounds=10,
@@ -183,14 +185,20 @@ def test_deletable_ban_equality(spark, tmp_path):
     cuckoo_at = {}
     run_round = full.run_round
 
+    def snapshot(cuckoo):
+        return cuckoo.table.tobytes(), cuckoo.n_items
+
     def recording_round(rnd):
         m = run_round(rnd)
-        cuckoo_at[rnd] = full.cuckoo.to_bytes()
+        cuckoo_at[rnd] = snapshot(full.cuckoo)
         return m
 
     full.run_round = recording_round
     summary = full.run(seeds)
     _assert_matches_oracle(store, summary, cfg, seeds)
+    # before the unban, host41's bucket holds only banned rows: counted in
+    # the manifest, and no row of the metrics table
+    assert_round_counters_match_tables(store, summary)
     assert summary["rounds"] >= cfg.unban_round
     assert cuckoo_at[1] != cuckoo_at[cfg.unban_round]  # the unban deleted
 
@@ -200,9 +208,9 @@ def test_deletable_ban_equality(spark, tmp_path):
     eng.bootstrap(seeds)
     eng.run_round(1)
     resumed = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path / "part"))
-    assert resumed.cuckoo.to_bytes() == cuckoo_at[1]
+    assert snapshot(resumed.cuckoo) == cuckoo_at[1]
     resumed_sum = resumed.run()
-    assert resumed.cuckoo.to_bytes() == cuckoo_at[resumed_sum["rounds"]]
+    assert snapshot(resumed.cuckoo) == cuckoo_at[resumed_sum["rounds"]]
     _assert_matches_oracle(
         CrawlStorage(spark, tmp_path / "part"), resumed_sum, cfg, seeds
     )
