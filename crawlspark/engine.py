@@ -47,13 +47,14 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawlspark.config import CrawlConfig
 from crawlspark.filters import CuckooFilter
 from crawlspark.functions.canon import canonicalize_udf, with_url_identity
 from crawlspark.functions.robots import allowed_col, path_col, pattern_regex
 from crawlspark.sources import synthweb
-from crawlspark.storage import CrawlStorage
+from crawlspark.storage import TABLE_SCHEMAS, CrawlStorage
 
 # Discovery-order tuple: first-wins dedup and priority tie-breaking are both
 # decided by lexicographic order on these columns (see module docstring).
@@ -65,22 +66,6 @@ DISCOVERY_ORDER = [
     "d_rank",
     "d_pos",
     "url_hash",
-]
-
-FRONTIER_COLS = [
-    "url",
-    "url_canon",
-    "url_hash",
-    "host",
-    "host_hash",
-    "depth",
-    "priority",
-    "discovered_round",
-    "d_time",
-    "d_host",
-    "d_rank",
-    "d_pos",
-    "parent_hash",
 ]
 
 # Adaptive fetch-stage parallelism: the mapInPandas fetch repartitions to
@@ -161,12 +146,8 @@ COUNTERS = [
     for f in fields(RoundMetrics)
     if f.name not in ("round", "deduped", "extras")
 ]
-METRICS_COLS = ["fetched", "skipped_robots", "skipped_politeness", "new_urls"]
-METRICS_SCHEMA = pa.schema(
-    [("host_hash", pa.int32())]
-    + [(c, pa.int64()) for c in METRICS_COLS]
-    + [("input_snapshot", pa.string())]
-)
+METRICS_SCHEMA = to_arrow_schema(TABLE_SCHEMAS["metrics"])
+METRICS_COLS = [c for c in METRICS_SCHEMA.names if c in COUNTERS]
 
 
 class CrawlEngine:
@@ -296,17 +277,16 @@ class CrawlEngine:
         return (
             fr.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(*FRONTIER_COLS)
+            .select(*TABLE_SCHEMAS["frontier"].names)
         )
 
     def bootstrap(self, seeds: list[str]) -> None:
         """Round 0: seed list → canonical dedup'd frontier + seen."""
         fr = self._seed_frontier(seeds, 0)
         self.storage.write_round("frontier", fr, 0)
-        seen0 = self.storage.read_round("frontier", 0).select(
-            "url_hash", "url_canon", "host_hash", F.lit(0).alias("first_round")
+        self.storage.write_round(
+            "seen", _seen_rows(self.storage.read_round("frontier", 0), 0), 0
         )
-        self.storage.write_round("seen", seen0, 0)
         n = self.storage.read_round("frontier", 0).count()
         self.storage.commit_manifest(
             0, {"phase": "bootstrap", "frontier_size": n, "totals": {"seen": n}}
@@ -341,11 +321,7 @@ class CrawlEngine:
             return {"round": 0, "injected": n, "phase": "bootstrap"}
         rnd = latest["round"] + 1
         new = self._append_unseen(self._seed_frontier(seeds, rnd), rnd)
-        next_frontier = (
-            self.storage.read_round("frontier", rnd - 1)
-            .select(*FRONTIER_COLS)
-            .unionByName(new)
-        )
+        next_frontier = self.storage.read_round("frontier", rnd - 1).unionByName(new)
         self.storage.write_round("frontier", next_frontier, rnd)
         n_new = self.storage.read_round("seen", rnd).count()
         prev_size = _next_frontier_size(latest) or 0
@@ -374,13 +350,10 @@ class CrawlEngine:
         )
         new = (
             rows.join(seen, ["host_hash", "url_hash"], "left_anti")
-            .select(*FRONTIER_COLS)
+            .select(*TABLE_SCHEMAS["frontier"].names)
             .persist()
         )
-        seen_add = new.select(
-            "url_hash", "url_canon", "host_hash", F.lit(rnd).alias("first_round")
-        )
-        self.storage.write_round("seen", seen_add, rnd)
+        self.storage.write_round("seen", _seen_rows(new, rnd), rnd)
         return new
 
     # ------------------------------------------------------------- round
@@ -396,7 +369,7 @@ class CrawlEngine:
             timings[phase] = round(now - _t0[0], 3)
             _t0[0] = now
 
-        frontier = self.storage.read_round("frontier", rnd - 1).select(*FRONTIER_COLS)
+        frontier = self.storage.read_round("frontier", rnd - 1)
 
         # Size this round's shuffle width from the (already known) frontier
         # size: every job barrier costs latency proportional to task count,
@@ -474,18 +447,8 @@ class CrawlEngine:
         docs = (
             fetched.withColumn("spans", F.expr(_SPANS_EXPR))
             .withColumn("content_sha2", F.sha2(F.to_json(F.col("spans")), 256))
-            .select(
-                F.col("url_canon").alias("doc_id"),
-                "spans",
-                "url_hash",
-                "host",
-                "host_hash",
-                "depth",
-                "fetch_time",
-                "host_rank",
-                "status",
-                "content_sha2",
-            )
+            .withColumnRenamed("url_canon", "doc_id")
+            .select(*TABLE_SCHEMAS["documents"].names)
         )
 
         # F3 link extraction → S4 edges append. Links arrive from the fetch
@@ -513,13 +476,9 @@ class CrawlEngine:
             edges.withColumnRenamed("dst_canon", "url_canon"),
             num_buckets=cfg.num_host_buckets,
         ).persist()
-        edges_out = edges.select(
-            "src_hash",
-            F.col("href").alias("dst_url"),
-            F.col("url_canon").alias("dst_canon"),
-            F.col("url_hash").alias("dst_hash"),
-            "pos",
-        )
+        edges_out = edges.withColumnsRenamed(
+            {"href": "dst_url", "url_canon": "dst_canon", "url_hash": "dst_hash"}
+        ).select(*TABLE_SCHEMAS["edges"].names)
         # driver-side job pipelining: the edges sink materializes the edges
         # cache the candidate pipeline needs next, so it runs NOW; the
         # documents sink only reads the (already materialized) fetch cache
@@ -639,8 +598,8 @@ class CrawlEngine:
 
         # U1: next frontier snapshot = deferred ∪ banned-deferred ∪ new
         next_frontier = (
-            deferred.select(*FRONTIER_COLS)
-            .unionByName(banned_deferred.select(*FRONTIER_COLS))
+            deferred.select(*frontier.columns)
+            .unionByName(banned_deferred.select(*frontier.columns))
             .unionByName(new)
         )
 
@@ -771,6 +730,13 @@ class CrawlEngine:
             "totals": final.get("totals", {}),
             "exhausted": _next_frontier_size(final) == 0,
         }
+
+
+def _seen_rows(frontier: DataFrame, rnd: int) -> DataFrame:
+    """S5: the ``seen`` rows of frontier rows first enqueued in round ``rnd``."""
+    return frontier.withColumn("first_round", F.lit(rnd)).select(
+        *TABLE_SCHEMAS["seen"].names
+    )
 
 
 def _next_frontier_size(manifest: dict | None) -> int | None:

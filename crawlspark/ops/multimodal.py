@@ -99,12 +99,6 @@ def attach_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.withColumn("media_bytes", _gen(F.col(id_col)))
 
 
-def attach_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Opaque-binary stand-in used by byte-level ops: the UTF-8 bytes of the
-    text column as a ``binary`` column."""
-    return df.withColumn("media_bytes", F.encode(F.col(text_col), "UTF-8"))
-
-
 # ------------------------------------------------------------------ decode
 def decode_media(payload: bytes) -> dict:
     """Pure-python container-header decode (no codec libs). BMP: width and

@@ -6,10 +6,11 @@ snapshots and exact checkpoint/resume. This sandbox has no Iceberg runtime
 jar and no network to fetch one (SURVEY.md §0.3), so the same semantics are
 rendered with:
 
-- one directory per table, one ``round=NNNNN`` partition dir per round —
-  Spark infers ``round`` as a partition column, so reads with a round
-  predicate get **partition pruning** (only the matching dirs are listed,
-  exactly like Iceberg snapshot/partition pruning);
+- one directory per table, one ``round=NNNNN`` partition dir per round.
+  Reads pass the declared schema (``TABLE_SCHEMAS`` plus ``round int``)
+  instead of inferring it from footers, so a round predicate gets
+  **partition pruning** (only the matching dirs are listed, exactly like
+  Iceberg snapshot/partition pruning) with no footer-reading job;
 - an atomic JSON manifest per round (write-to-temp + ``os.replace``), the
   single commit point: data dirs are VISIBLE only if their round is ≤ the
   latest manifest. A crash mid-round leaves orphan dirs that the re-run
@@ -31,10 +32,67 @@ import json
 import os
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-TABLES = ("frontier", "seen", "documents", "edges", "metrics")
+_S, _I, _L, _D = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
+
+
+def _cols(**types: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in types.items()])
+
+
+# The five crawl tables, column for column as ``write_round`` takes them.
+# Reads add the ``round int`` partition column after these (``_WITH_ROUND``).
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "frontier": _cols(
+        url=_S, url_canon=_S, url_hash=_L, host=_S, host_hash=_I, depth=_I,
+        priority=_D, discovered_round=_I, d_time=_D, d_host=_S, d_rank=_I,
+        d_pos=_I, parent_hash=_L,
+    ),
+    "seen": _cols(url_hash=_L, url_canon=_S, host_hash=_I, first_round=_I),
+    "documents": _cols(
+        doc_id=_S,
+        spans=T.ArrayType(_cols(kind=_S, text=_S, media_ref=_S, offset=_I)),
+        url_hash=_L, host=_S, host_hash=_I, depth=_I, fetch_time=_D,
+        host_rank=_I, status=_I, content_sha2=_S,
+    ),
+    "edges": _cols(src_hash=_L, dst_url=_S, dst_canon=_S, dst_hash=_L, pos=_I),
+    "metrics": _cols(
+        host_hash=_I, fetched=_L, skipped_robots=_L, skipped_politeness=_L,
+        new_urls=_L, input_snapshot=_S,
+    ),
+}
+TABLES = tuple(TABLE_SCHEMAS)
+_WITH_ROUND = {
+    t: T.StructType([*s.fields, T.StructField("round", _I)])
+    for t, s in TABLE_SCHEMAS.items()
+}
+
+
+def _ddl(schema: T.StructType) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+
+
+def _check_columns(
+    table: str, got: T.StructType, want: T.StructType, what: str
+) -> None:
+    """Raise ``ValueError`` unless ``got`` has ``want``'s column names, order
+    and types. Nullability is ignored: Spark reads every parquet column
+    back as nullable."""
+    if _ddl(got) == _ddl(want):
+        return
+    g = {f.name: f.dataType.simpleString() for f in got}
+    w = {f.name: f.dataType.simpleString() for f in want}
+    bad = [c for c in dict.fromkeys([*w, *g]) if g.get(c) != w.get(c)]
+    raise ValueError(
+        f"{what} does not match the declared schema of table {table!r}: "
+        + (f"columns {', '.join(bad)} differ" if bad else "column order differs")
+        + f"; got [{_ddl(got)}], declared [{_ddl(want)}]"
+    )
 
 
 class CrawlStorage:
@@ -61,10 +119,24 @@ class CrawlStorage:
         self.root = Path(root)
         self.catalog = catalog
         self.num_buckets = num_buckets
-        self._iceberg_created: set[str] = set()
+        self._check_footers()
         (self.root / "_manifests").mkdir(parents=True, exist_ok=True)
         for t in TABLES:
             (self.root / t).mkdir(parents=True, exist_ok=True)
+
+    def _check_footers(self) -> None:
+        """Fail before anything is read or written if the root holds a table
+        written with another schema: one footer per table (round dirs and
+        compacted set), read on the driver with no Spark job."""
+        for t in TABLES:
+            for base, want in (
+                (self.root / t, TABLE_SCHEMAS[t]),
+                (self.root / "_compact" / t, _WITH_ROUND[t]),
+            ):
+                footer = next(base.glob("*=*/*.parquet"), None)
+                if footer is not None:
+                    got = from_arrow_schema(pq.read_schema(footer))
+                    _check_columns(t, got, want, str(footer))
 
     # ------------------------------------------------------------------ data
     def _round_dir(self, table: str, rnd: int) -> Path:
@@ -83,7 +155,9 @@ class CrawlStorage:
         ``cluster_by`` renders Iceberg ``bucket(host_hash)`` clustering, so
         same-bucket rows of `seen` and `frontier` land in aligned files.
         Without clustering the round still lands in at most ``num_files``
-        files."""
+        files. A frame whose columns differ from ``TABLE_SCHEMAS[table]``
+        raises ``ValueError``."""
+        _check_columns(table, df.schema, TABLE_SCHEMAS[table], f"round {rnd} write")
         if cluster_by is not None and cluster_by in df.columns:
             df = df.repartition(num_files, cluster_by)
         elif cluster_by is None:
@@ -94,33 +168,29 @@ class CrawlStorage:
         df.write.mode("overwrite").parquet(str(self._round_dir(table, rnd)))
 
     def _write_round_iceberg(self, table: str, df: DataFrame, rnd: int) -> None:
-        """Iceberg v2 append: first write creates the table partitioned by
-        (round, bucket(host_hash)) — the same clustering the parquet facade
-        renders with round dirs + repartition — later rounds append. A
-        re-run of an uncommitted round overwrites its round partition
-        (overwritePartitions limited by the round literal), preserving the
-        exact-resume idempotence invariant."""
+        """Iceberg v2 append: the table is created from ``TABLE_SCHEMAS``
+        partitioned by (round, bucket(host_hash)) — the same clustering the
+        parquet facade renders with round dirs + repartition. A re-run of an
+        uncommitted round overwrites its round partition (overwritePartitions
+        limited by the round literal), preserving the exact-resume
+        idempotence invariant."""
         full = f"{self.catalog}.{table}"
-        out = df.withColumn("round", F.lit(rnd))
-        if full not in self._iceberg_created:
-            parts = [F.col("round")]
-            if "host_hash" in df.columns:
-                parts.append(F.bucket(self.num_buckets, F.col("host_hash")))
-            try:
-                out.writeTo(full).partitionedBy(*parts).create()
-                self._iceberg_created.add(full)
-                return
-            except Exception as e:  # table exists -> fall through to append
-                if "TABLE_OR_VIEW_ALREADY_EXISTS" not in str(e):
-                    raise
-                self._iceberg_created.add(full)
-        out.writeTo(full).overwritePartitions()
+        parts = "round"
+        if "host_hash" in TABLE_SCHEMAS[table].names:
+            parts += f", bucket({self.num_buckets}, host_hash)"
+        self.spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {full} ({_ddl(_WITH_ROUND[table])}) "
+            f"USING iceberg PARTITIONED BY ({parts})"
+        )
+        df.withColumn("round", F.lit(rnd)).writeTo(full).overwritePartitions()
 
     def read_round(self, table: str, rnd: int) -> DataFrame:
         if self.catalog:
             df = self.spark.table(f"{self.catalog}.{table}")
             return df.filter(df["round"] == rnd).drop("round")
-        return self.spark.read.parquet(str(self._round_dir(table, rnd)))
+        return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(
+            str(self._round_dir(table, rnd))
+        )
 
     def read_table(self, table: str, upto_round: int | None = None) -> DataFrame:
         """Read the whole table with `round` as a partition column; a
@@ -132,21 +202,20 @@ class CrawlStorage:
         dirs at or below the pointer are never listed even if their GC hasn't
         happened yet, which is what makes compaction crash-safe at every
         step (see :meth:`compact_table`)."""
+        schema = _WITH_ROUND[table]
         if self.catalog:
             df = self.spark.table(f"{self.catalog}.{table}")
         else:
             ptr = self.compact_pointer(table)
             if ptr is None:
-                df = self.spark.read.option(
-                    "basePath", str(self.root / table)
-                ).parquet(str(self.root / table))
+                df = self.spark.read.schema(schema).parquet(str(self.root / table))
             else:
-                df = self.spark.read.parquet(
+                df = self.spark.read.schema(schema).parquet(
                     str(self._compact_dir(table, ptr["upto"]))
                 )
                 live = self._round_dirs_above(table, ptr["upto"])
                 if live:
-                    live_df = self.spark.read.option(
+                    live_df = self.spark.read.schema(schema).option(
                         "basePath", str(self.root / table)
                     ).parquet(*[str(d) for d in live])
                     df = df.unionByName(live_df)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -9,8 +11,10 @@ import pytest
 def spark():
     from pyspark.sql import SparkSession
 
+    # one task slot per CPU this process may use
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     s = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cores}]")
         .appName("crawlspark-tests")
         # Tiny fixtures: AQE's re-planning jobs cost more than they save here
         # (measured 2-3x round latency); bench.py enables AQE at real scale.
@@ -40,3 +44,23 @@ def crawl_run(spark, tmp_path_factory):
     seeds = synthweb.seed_list(cfg, n=20)
     summary = engine.run(seeds)
     return cfg, storage, engine, summary, seeds
+
+
+@pytest.fixture
+def seen_rows(spark):
+    """Builds ``seen``-schema frames for storage-level tests: one row per id
+    in ``[lo, hi)``, with ``url_hash`` = id, ``url_canon`` derived from it,
+    ``host_hash`` = id % 4 and ``first_round`` = ``rnd``."""
+    from pyspark.sql import functions as F
+
+    def build(lo: int, hi: int, rnd: int = 0):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("url_hash"),
+            F.format_string("http://h%d.example/p%d", F.col("id") % 4, "id").alias(
+                "url_canon"
+            ),
+            (F.col("id") % 4).cast("int").alias("host_hash"),
+            F.lit(rnd).alias("first_round"),
+        )
+
+    return build

@@ -92,22 +92,17 @@ def test_maintenance_crawl_is_bit_identical(spark, tmp_path, plain_run):
     assert frontier_rounds == [last]
 
 
-def test_read_table_equality_across_compaction(spark, tmp_path):
+def test_read_table_equality_across_compaction(spark, tmp_path, seen_rows):
     """Storage-level: compaction preserves read_table contents for every
     upto_round cut — including cuts BELOW the pointer, which must filter on
     the preserved `round` data column."""
     store = CrawlStorage(spark, tmp_path, num_buckets=4)
     for rnd in range(4):
-        df = (
-            spark.range(rnd * 10, rnd * 10 + 10)
-            .withColumn("host_hash", (F.col("id") % 4).cast("int"))
-            .withColumn("url_hash", F.xxhash64("id"))
-        )
-        store.write_round("seen", df, rnd)
+        store.write_round("seen", seen_rows(rnd * 10, rnd * 10 + 10, rnd), rnd)
 
     def snap(upto=None):
         return sorted(
-            (r["id"], r["host_hash"], r["url_hash"], r["round"])
+            (r["url_hash"], r["host_hash"], r["url_canon"], r["round"])
             for r in store.read_table("seen", upto_round=upto).collect()
         )
 
@@ -129,28 +124,23 @@ def test_read_table_equality_across_compaction(spark, tmp_path):
     assert not list((pathlib.Path(store.root) / "seen").glob("round=*"))
 
 
-def test_compaction_crash_safety(spark, tmp_path):
+def test_compaction_crash_safety(spark, tmp_path, seen_rows):
     """(a) A compacted dir with no pointer (crash between write and pointer
     swap) is invisible. (b) A covered round dir left behind by a crashed GC
     is never double-read."""
     store = CrawlStorage(spark, tmp_path, num_buckets=4)
     for rnd in range(3):
-        df = spark.range(rnd * 5, rnd * 5 + 5).withColumn(
-            "host_hash", (F.col("id") % 4).cast("int")
-        )
-        store.write_round("seen", df, rnd)
+        store.write_round("seen", seen_rows(rnd * 5, rnd * 5 + 5, rnd), rnd)
     before = sorted(
-        (r["id"], r["round"]) for r in store.read_table("seen").collect()
+        (r["url_hash"], r["round"]) for r in store.read_table("seen").collect()
     )
 
     # (a) rogue compacted dir, no pointer — reads unchanged
     rogue = store._compact_dir("seen", 1)
-    spark.range(999).withColumn("host_hash", F.lit(0)).withColumn(
-        "round", F.lit(0)
-    ).write.parquet(str(rogue))
+    seen_rows(0, 999).withColumn("round", F.lit(0)).write.parquet(str(rogue))
     assert store.compact_pointer("seen") is None
     assert (
-        sorted((r["id"], r["round"]) for r in store.read_table("seen").collect())
+        sorted((r["url_hash"], r["round"]) for r in store.read_table("seen").collect())
         == before
     )
     import shutil
@@ -160,10 +150,9 @@ def test_compaction_crash_safety(spark, tmp_path):
     # (b) compact, then resurrect a covered round dir (= crash mid-GC):
     # read_table must ignore it (no duplicate rows)
     store.compact_table("seen", upto_round=2)
-    df0 = spark.range(0, 5).withColumn("host_hash", (F.col("id") % 4).cast("int"))
-    store.write_round("seen", df0, 0)  # covered leftover reappears
+    store.write_round("seen", seen_rows(0, 5), 0)  # covered leftover reappears
     assert (
-        sorted((r["id"], r["round"]) for r in store.read_table("seen").collect())
+        sorted((r["url_hash"], r["round"]) for r in store.read_table("seen").collect())
         == before
     )
 
@@ -204,7 +193,7 @@ def test_pagerank_mode_maintenance_is_bit_identical(spark, tmp_path):
     assert edges_plain == edges_maint
 
 
-def test_compaction_rerun_is_noop(spark, tmp_path):
+def test_compaction_rerun_is_noop(spark, tmp_path, seen_rows):
     """A re-run with an already-covered upto_round (crash recovery, manual
     retry) is an idempotent no-op. Without the pointer guard the overwrite
     would clear the live _compact dir before the lazy read of it executes —
@@ -212,13 +201,10 @@ def test_compaction_rerun_is_noop(spark, tmp_path):
     permanently lost."""
     store = CrawlStorage(spark, tmp_path, num_buckets=4)
     for rnd in range(3):
-        df = spark.range(rnd * 5, rnd * 5 + 5).withColumn(
-            "host_hash", (F.col("id") % 4).cast("int")
-        )
-        store.write_round("seen", df, rnd)
+        store.write_round("seen", seen_rows(rnd * 5, rnd * 5 + 5, rnd), rnd)
     store.compact_table("seen", upto_round=2)
     before = sorted(
-        (r["id"], r["round"]) for r in store.read_table("seen").collect()
+        (r["url_hash"], r["round"]) for r in store.read_table("seen").collect()
     )
     assert len(before) == 15
 
@@ -229,21 +215,21 @@ def test_compaction_rerun_is_noop(spark, tmp_path):
     info = store.compact_table("seen", upto_round=1)
     assert info.get("noop") is True and info["upto"] == 2
     after = sorted(
-        (r["id"], r["round"]) for r in store.read_table("seen").collect()
+        (r["url_hash"], r["round"]) for r in store.read_table("seen").collect()
     )
     assert after == before
 
 
-def test_compaction_shrinks_file_listing(spark, tmp_path):
+def test_compaction_shrinks_file_listing(spark, tmp_path, seen_rows):
     """The point of the exercise: the file set the per-round seen anti-join
     lists drops from O(rounds × files-per-round) to the compacted set."""
     store = CrawlStorage(spark, tmp_path, num_buckets=4)
     rounds, files_per_round = 8, 4
     for rnd in range(rounds):
-        df = spark.range(rnd * 10, rnd * 10 + 10).withColumn(
-            "host_hash", (F.col("id") % 4).cast("int")
+        store.write_round(
+            "seen", seen_rows(rnd * 10, rnd * 10 + 10, rnd), rnd,
+            num_files=files_per_round,
         )
-        store.write_round("seen", df, rnd, num_files=files_per_round)
 
     def parquet_files():
         root = pathlib.Path(store.root)

@@ -41,15 +41,14 @@ def test_robots_join_is_broadcast(spark, tmp_path):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
-def test_round_partition_pruning(spark, tmp_path):
+def test_round_partition_pruning(spark, tmp_path, seen_rows):
     """S2: a `round <= k` predicate must prune to the matching partition
     dirs (Iceberg-snapshot-style pruning via the parquet facade)."""
     from crawlspark.storage import CrawlStorage
 
     storage = CrawlStorage(spark, tmp_path)
-    df = spark.range(10).withColumn("host_hash", (F.col("id") % 4).cast("int"))
     for rnd in range(3):
-        storage.write_round("seen", df, rnd)
+        storage.write_round("seen", seen_rows(0, 10, rnd), rnd)
     pruned = storage.read_table("seen", upto_round=1)
     plan = _plan(pruned)
     assert "PartitionFilters" in plan and "round" in plan
@@ -57,16 +56,15 @@ def test_round_partition_pruning(spark, tmp_path):
     assert pruned.select("round").distinct().count() == 2
 
 
-def test_compacted_read_keeps_pushdown_and_pruning(spark, tmp_path):
+def test_compacted_read_keeps_pushdown_and_pruning(spark, tmp_path, seen_rows):
     """After compaction, a `round <= k` cut must still reach the scans: as a
     parquet-pushed data filter on the compacted set (where `round` became a
     data column) and as partition pruning on the still-live round dirs."""
     from crawlspark.storage import CrawlStorage
 
     storage = CrawlStorage(spark, tmp_path, num_buckets=4)
-    df = spark.range(10).withColumn("host_hash", (F.col("id") % 4).cast("int"))
     for rnd in range(4):
-        storage.write_round("seen", df, rnd)
+        storage.write_round("seen", seen_rows(0, 10, rnd), rnd)
     storage.compact_table("seen", upto_round=1)
 
     cut = storage.read_table("seen", upto_round=2)
@@ -171,7 +169,7 @@ def test_temperature_mix_is_window_group_limit(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_iceberg_dispatch_seam(spark, tmp_path):
+def test_iceberg_dispatch_seam(spark, tmp_path, seen_rows):
     """catalog=None keeps the parquet facade (bit-for-bit existing
     behavior); catalog="..." routes every table write/read through the
     DataSourceV2 path. The real Iceberg runtime is absent in this sandbox,
@@ -181,9 +179,7 @@ def test_iceberg_dispatch_seam(spark, tmp_path):
 
     from crawlspark.storage import CrawlStorage
 
-    df = spark.range(4).select(
-        F.col("id").alias("url_hash"), (F.col("id") % 2).cast("int").alias("host_hash")
-    )
+    df = seen_rows(0, 4)
 
     plain = CrawlStorage(spark, tmp_path / "plain")
     plain.write_round("seen", df, 0)
@@ -234,9 +230,10 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     an extra cluster-wide barrier. The round loop counts everything with ONE
     per-bucket sum (collected, then written as the metrics table from the
     driver), answers "seen?" with one exact anti-join (no prefilter
-    stages), and overlaps the tail sinks — 10 jobs/round and 5 for the
+    stages), overlaps the tail sinks, and reads every table with its
+    declared schema (no footer-inference jobs) — 8 jobs/round and 3 for the
     bootstrap measured. This pins
-    both budgets (<=11, <=5) and flatness (round k and k+1 identical), so an
+    both budgets (<=9, <=4) and flatness (round k and k+1 identical), so an
     accidental extra .count()/.collect() in the hot loop fails loudly."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
@@ -262,16 +259,16 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     n1 = n_jobs()
     eng.run_round(2)
     n2 = n_jobs()
-    assert n0 - nb <= 5, f"bootstrap launched {n0-nb} driver jobs (budget 5)"
+    assert n0 - nb <= 4, f"bootstrap launched {n0-nb} driver jobs (budget 4)"
     assert n1 - n0 == n2 - n1, f"per-round job count not flat: {n1-n0} vs {n2-n1}"
-    assert n1 - n0 <= 11, f"round launched {n1-n0} driver jobs (budget 11)"
+    assert n1 - n0 <= 9, f"round launched {n1-n0} driver jobs (budget 9)"
 
 
 def test_pagerank_priority_jobs_are_flat(spark, tmp_path):
     """priority_mode="pagerank" re-ranks the frontier each round from the
     accumulated edge graph — that must cost a FIXED number of extra jobs
     per round, never a count that grows with the round number or the graph
-    so far. Measured: 22/round steady state = bfs's 10 + 12 for the ranking
+    so far. Measured: 19/round steady state = bfs's 8 + 11 for the ranking
     (nodes count, eager localCheckpoints for the node base and each of the
     default 4 power iterations, and their materialization jobs); round 1
     pays a one-time +1 (first edges-table listing + ed-persist
