@@ -62,7 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
     fr = seeds.withColumn("url_canon", canonicalize_udf()(F.col("url"))).filter(
         F.col("url_canon").isNotNull()
     )
-    fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
+    fr = with_url_identity(fr)
     w = Window.partitionBy("url_hash").orderBy("seed_pos")
     fr = fr.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     # politeness: delay 1s budget per 30s round, rank by seed order

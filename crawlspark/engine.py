@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from crawlspark.config import CrawlConfig
+from crawlspark.config import INDEGREE_CAP, PAGERANK_ITERATIONS, CrawlConfig
 from crawlspark.filters import CuckooFilter
 from crawlspark.functions.canon import canonicalize_udf, with_url_identity
 from crawlspark.functions.robots import allowed_col, path_col, pattern_regex
@@ -164,11 +164,6 @@ class CrawlEngine:
             self.cuckoo.insert(key)
         self.history: list[RoundMetrics] = []
         self._robots_cached: DataFrame | None = None
-        # pagerank-priority rank cache: (basis_round, ranks DataFrame). The
-        # ranks are a pure function of the committed edges table at the
-        # basis round, so the cache is a recompute-avoidance only — resume
-        # or cache loss recomputes the identical frame.
-        self._rank_cache: tuple[int, DataFrame] | None = None
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
@@ -261,7 +256,7 @@ class CrawlEngine:
         fr = fr.withColumn("url_canon", canonicalize_udf()("url")).filter(
             F.col("url_canon").isNotNull()
         )
-        fr = with_url_identity(fr, num_buckets=self.cfg.num_host_buckets)
+        fr = with_url_identity(fr)
         fr = (
             fr.withColumn("depth", F.lit(0))
             .withColumn("priority", F.lit(0.0))
@@ -473,8 +468,7 @@ class CrawlEngine:
             .filter(F.col("dst_canon").isNotNull())
         )
         edges = with_url_identity(
-            edges.withColumnRenamed("dst_canon", "url_canon"),
-            num_buckets=cfg.num_host_buckets,
+            edges.withColumnRenamed("dst_canon", "url_canon")
         ).persist()
         edges_out = edges.withColumnsRenamed(
             {"href": "dst_url", "url_canon": "dst_canon", "url_hash": "dst_hash"}
@@ -514,76 +508,43 @@ class CrawlEngine:
         # sequential oracle replays the identical IEEE-754 ops.
         if cfg.priority_mode == "indegree":
             wcnt = Window.partitionBy("url_hash")
-            boost = (
-                F.least(
-                    F.count(F.lit(1)).over(wcnt), F.lit(cfg.indegree_cap)
-                ).cast("double")
-                / F.lit(float(cfg.indegree_cap + 1))
-            )
+            n_links = F.least(F.count(F.lit(1)).over(wcnt), F.lit(INDEGREE_CAP))
+            boost = n_links.cast("double") / F.lit(float(INDEGREE_CAP + 1))
             cand = cand.withColumn("priority", F.col("priority") - boost)
         elif cfg.priority_mode == "pagerank":
-            # P1 "pagerank": rank this round's candidates by exact
-            # fixed-point-integer PageRank (ops/graph) over the edge graph
-            # accumulated so far — edges rounds <= rnd; this round's edges
-            # were just written above, so the ranking sees them. The ranks
-            # are bit-deterministic (integer sums are associative-exact),
-            # so the sequential oracle replays the identical boost; the
-            # float discipline matches "indegree": one long→double cast,
-            # one division by 10^12 (exactly representable), one
-            # subtraction. boost < 1 by construction (a single node's
-            # scaled rank is < SCALE), so depth levels never interleave.
-            # Cost is fixed per round: one scan of the edges-so-far table
-            # + O(pagerank_iterations) jobs (test_pagerank_priority_jobs_
-            # are_flat) — the per-round rendering of authority-ordered
-            # crawling (Cho, Garcia-Molina & Page, WWW 1998 [pub]).
+            # P1 "pagerank": exact fixed-point-integer PageRank (ops/graph)
+            # over edges rounds <= rnd, this round's included (written
+            # above). Integer ranks are bit-deterministic, and the float
+            # discipline matches "indegree" (one long→double cast, one
+            # division by 10^12, one subtraction), so the oracle replays the
+            # identical boost; boost < 1, so depth levels never interleave.
+            # Fixed cost per round: one edges scan + O(PAGERANK_ITERATIONS)
+            # jobs (test_pagerank_priority_jobs_are_flat).
             from crawlspark.ops.graph import SCALE, pagerank
 
-            # Staleness knob (cfg.pagerank_every = k): rank against edges
-            # through basis = rnd - (rnd % k). basis == 0 → no boost yet
-            # (pure bfs round). Ranks for a basis are computed once and
-            # cached; pure-function-of-storage semantics keep resume exact
-            # and let the oracle replay the identical staleness.
-            k_every = max(1, cfg.pagerank_every)
-            basis = rnd - (rnd % k_every)
-            ranks = None
-            if basis > 0:
-                if self._rank_cache is not None and self._rank_cache[0] == basis:
-                    ranks = self._rank_cache[1]
-                else:
-                    g = self.storage.read_table(
-                        "edges", upto_round=basis
-                    ).select(
-                        F.col("src_hash").alias("src"),
-                        F.col("dst_hash").alias("dst"),
-                    )
-                    nodes = (
-                        g.select(F.col("src").alias("node"))
-                        .unionByName(g.select(F.col("dst").alias("node")))
-                        .distinct()
-                    )
-                    ranks = pagerank(
-                        g, nodes, iterations=cfg.pagerank_iterations
-                    )
-                    self._rank_cache = (basis, ranks)
-            if ranks is not None:
-                boost = (
-                    F.least(
-                        F.coalesce(
-                            F.col("pagerank_scaled"), F.lit(0).cast("long")
-                        ),
-                        F.lit(SCALE - 1).cast("long"),
-                    ).cast("double")
-                    / F.lit(float(SCALE))
+            g = self.storage.read_table("edges", upto_round=rnd).select(
+                F.col("src_hash").alias("src"), F.col("dst_hash").alias("dst")
+            )
+            nodes = (
+                g.select(F.col("src").alias("node"))
+                .unionByName(g.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+            ranks = pagerank(g, nodes, iterations=PAGERANK_ITERATIONS)
+            boost = (
+                F.least(
+                    F.coalesce(F.col("pagerank_scaled"), F.lit(0).cast("long")),
+                    F.lit(SCALE - 1).cast("long"),
+                ).cast("double")
+                / F.lit(float(SCALE))
+            )
+            cand = (
+                cand.join(
+                    ranks.withColumnRenamed("node", "url_hash"), "url_hash", "left"
                 )
-                cand = (
-                    cand.join(
-                        ranks.withColumnRenamed("node", "url_hash"),
-                        "url_hash",
-                        "left",
-                    )
-                    .withColumn("priority", F.col("priority") - boost)
-                    .drop("pagerank_scaled")
-                )
+                .withColumn("priority", F.col("priority") - boost)
+                .drop("pagerank_scaled")
+            )
         # A1 intra-round first-wins dedup
         wdup = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
         cand = (
@@ -605,7 +566,7 @@ class CrawlEngine:
 
         # G1 counters: ONE groupBy(host_hash) sum over the round's cached
         # frames gives every RoundMetrics counter per host-hash bucket. Its
-        # <= num_host_buckets rows come back to the driver: the counters are
+        # <= NUM_HOST_BUCKETS rows come back to the driver: the counters are
         # their column sums, and the rows with a nonzero S7 column are the
         # metrics table. This and the documents and frontier sinks only read
         # materialized caches, so they run as concurrent jobs.
@@ -656,8 +617,6 @@ class CrawlEngine:
                 "metrics",
                 sp.createDataFrame(pa.Table.from_pylist(sink, schema=METRICS_SCHEMA)),
                 rnd,
-                cluster_by=None,
-                num_files=1,
             )
 
         _parallel(
@@ -684,9 +643,9 @@ class CrawlEngine:
         # crash anywhere in here re-runs nothing and corrupts nothing.
         if cfg.compact_seen_every and rnd % cfg.compact_seen_every == 0:
             self.storage.compact_table("seen", upto_round=rnd)
-            # pagerank priority re-reads the edges-so-far table each basis
-            # round, so under that mode edges gets the same listing-bound
-            # treatment as seen (read_table round<=basis cuts stay
+            # pagerank priority re-reads the edges-so-far table each round,
+            # so under that mode edges gets the same listing-bound
+            # treatment as seen (read_table round<=rnd cuts stay
             # row-identical below the pointer — test_read_table_equality_
             # across_compaction pins it)
             if cfg.priority_mode == "pagerank":

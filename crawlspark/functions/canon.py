@@ -31,6 +31,8 @@ from urllib.parse import parse_qsl, urlencode, urljoin, urlsplit, urlunsplit
 
 import pandas as pd
 
+from crawlspark.config import NUM_HOST_BUCKETS
+
 __all__ = [
     "canonicalize_url",
     "canonicalize_series",
@@ -210,19 +212,20 @@ def resolve_udf():
     return _resolve
 
 
-def with_url_identity(df, url_col: str = "url_canon", num_buckets: int = 32):
-    """C9/C10 — JVM-side identity columns over an already-canonical URL:
-    url_hash = xxhash64(url_canon), host = parse_url(…,'HOST'),
-    host_hash = pmod(xxhash64(host), num_buckets).  Pure built-ins: stays in
-    whole-stage codegen, no Python boundary.
+def with_url_identity(df):
+    """C9/C10 — JVM-side identity columns over the already-canonical
+    ``url_canon``: url_hash = xxhash64(url_canon), host =
+    parse_url(…,'HOST'), host_hash = pmod(xxhash64(host),
+    config.NUM_HOST_BUCKETS).  Pure built-ins: stays in whole-stage
+    codegen, no Python boundary.
     """
     from pyspark.sql import functions as F
 
-    c = F.col(url_col)
+    c = F.col("url_canon")
     return (
         df.withColumn("url_hash", F.xxhash64(c))
         .withColumn("host", F.parse_url(c, F.lit("HOST")))
         .withColumn(
-            "host_hash", F.pmod(F.xxhash64(F.col("host")), F.lit(num_buckets)).cast("int")
+            "host_hash", F.pmod(F.xxhash64(F.col("host")), F.lit(NUM_HOST_BUCKETS)).cast("int")
         )
     )

@@ -72,12 +72,11 @@ def pagerank(
     ed = e.join(deg, "src").persist()
     n_nodes = nodes.count()
     if n_nodes == 0:
-        # Materialize even the empty frame (and release the edges persist):
-        # callers cache the returned ranks (engine._rank_cache) and may
-        # re-execute them AFTER the storage this plan reads has been
-        # compacted/GC'd — a lazy return here would then fail; eager
-        # localCheckpoint roots it in materialized (empty) blocks exactly
-        # like the normal path below.
+        # Materialize even the empty frame (and release the edges persist),
+        # exactly like the normal path below: the returned ranks never
+        # depend on the storage this plan reads, so a caller may re-execute
+        # them after that storage has been compacted/GC'd; eager
+        # localCheckpoint roots them in materialized (empty) blocks.
         ed.unpersist()
         return nodes.select(
             F.col("node").cast("long"),

@@ -27,6 +27,11 @@ _VOCAB = (
     "xray yankee zulu"
 ).split()
 
+# Link shape: a page has hash % OUT_DEGREE_MOD links (0..7), and a link stays
+# on its page's host with probability SAME_HOST_PCT / 100.
+OUT_DEGREE_MOD = 8
+SAME_HOST_PCT = 70
+
 
 def stable_hash(s: str, seed: int = 42) -> int:
     """64-bit deterministic hash of a string (process-stable)."""
@@ -36,7 +41,7 @@ def stable_hash(s: str, seed: int = 42) -> int:
 
 @lru_cache(maxsize=64)
 def _hosts_cached(n: int) -> tuple[str, ...]:
-    # keyed on the int (CrawlConfig carries an unhashable dict field):
+    # keyed on web_hosts alone, so configs of one web size share an entry:
     # page() runs once per fetched URL, and rebuilding a web_hosts-sized
     # list per call made the "fetch" O(hosts) per URL — measured 790 us/URL
     # at the bench's 2,000 hosts vs ~15 us with the cache, i.e. the
@@ -73,13 +78,13 @@ def page(url_canon: str, cfg: CrawlConfig) -> tuple[int, list[dict], list[str]]:
     own_host = url_canon.split("://", 1)[1].split("/", 1)[0].split(":", 1)[0]
 
     # --- links -------------------------------------------------------------
-    out_degree = h % cfg.web_out_degree_mod
+    out_degree = h % OUT_DEGREE_MOD
     links: list[str] = []
     for i in range(out_degree):
         hi = stable_hash(f"{url_canon}#link{i}", cfg.seed)
         if cfg.hot_host is not None and hi % 2 == 0:
             child_host = cfg.hot_host  # skew fixture: ~50% of links → one host
-        elif (hi % 100) < int(cfg.web_same_host_prob * 100):
+        elif (hi % 100) < SAME_HOST_PCT:
             child_host = own_host
         else:
             child_host = all_hosts[hi % len(all_hosts)]

@@ -21,9 +21,10 @@ On a real cluster, construct ``CrawlStorage(..., catalog="cat.db")`` and
 every table write/read dispatches to the Iceberg DataSourceV2 path
 (``_write_round_iceberg`` — create with ``PARTITIONED BY (round,
 bucket(host_hash))`` then per-round partition overwrites); the parquet
-facade's ``repartition(num_buckets, 'host_hash')`` clusters files the same
+facade's ``repartition(ROUND_FILES, 'host_hash')`` clusters files the same
 way so the seen⋈frontier anti-join (A2) shuffles co-bucketed data in both
-modes.
+modes. Each table's file layout is fixed by its name (``_round_layout``);
+no caller chooses it.
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
+
+from crawlspark.config import NUM_HOST_BUCKETS
 
 _S, _I, _L, _D = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
 
@@ -71,6 +74,21 @@ _WITH_ROUND = {
     t: T.StructType([*s.fields, T.StructField("round", _I)])
     for t, s in TABLE_SCHEMAS.items()
 }
+
+
+ROUND_FILES = 8  # files per round dir of frontier, seen and documents
+
+
+def _round_layout(table: str, df: DataFrame) -> DataFrame:
+    """Each table's round layout: frontier, seen and documents hash-cluster
+    on ``host_hash`` (Iceberg ``bucket(host_hash)``, so same-bucket seen and
+    frontier rows land in aligned files); metrics is one file; edges keeps
+    its input partitioning, as its sink also runs the fetch stage."""
+    if table == "edges":
+        return df
+    if table == "metrics":
+        return df.coalesce(1)
+    return df.repartition(ROUND_FILES, "host_hash")
 
 
 def _ddl(schema: T.StructType) -> str:
@@ -113,12 +131,10 @@ class CrawlStorage:
         spark: SparkSession,
         root: str | os.PathLike,
         catalog: str | None = None,
-        num_buckets: int = 32,
     ):
         self.spark = spark
         self.root = Path(root)
         self.catalog = catalog
-        self.num_buckets = num_buckets
         self._check_footers()
         (self.root / "_manifests").mkdir(parents=True, exist_ok=True)
         for t in TABLES:
@@ -142,26 +158,15 @@ class CrawlStorage:
     def _round_dir(self, table: str, rnd: int) -> Path:
         return self.root / table / f"round={rnd:05d}"
 
-    def write_round(
-        self,
-        table: str,
-        df: DataFrame,
-        rnd: int,
-        cluster_by: str | None = "host_hash",
-        num_files: int = 8,
-    ) -> None:
+    def write_round(self, table: str, df: DataFrame, rnd: int) -> None:
         """Append one round's partition. Overwrite-idempotent: a re-run of an
         uncommitted round replaces the orphan dir (exact-resume invariant).
-        ``cluster_by`` renders Iceberg ``bucket(host_hash)`` clustering, so
-        same-bucket rows of `seen` and `frontier` land in aligned files.
-        Without clustering the round still lands in at most ``num_files``
-        files. A frame whose columns differ from ``TABLE_SCHEMAS[table]``
-        raises ``ValueError``."""
+        The table decides the layout (``_round_layout``): at most
+        ``ROUND_FILES`` files for frontier, seen and documents, one for
+        metrics, at most one per input partition for edges. A frame whose
+        columns differ from ``TABLE_SCHEMAS[table]`` raises ``ValueError``."""
         _check_columns(table, df.schema, TABLE_SCHEMAS[table], f"round {rnd} write")
-        if cluster_by is not None and cluster_by in df.columns:
-            df = df.repartition(num_files, cluster_by)
-        elif cluster_by is None:
-            df = df.coalesce(num_files)
+        df = _round_layout(table, df)
         if self.catalog:
             self._write_round_iceberg(table, df, rnd)
             return
@@ -177,7 +182,7 @@ class CrawlStorage:
         full = f"{self.catalog}.{table}"
         parts = "round"
         if "host_hash" in TABLE_SCHEMAS[table].names:
-            parts += f", bucket({self.num_buckets}, host_hash)"
+            parts += f", bucket({NUM_HOST_BUCKETS}, host_hash)"
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {full} ({_ddl(_WITH_ROUND[table])}) "
             f"USING iceberg PARTITIONED BY ({parts})"
@@ -254,12 +259,10 @@ class CrawlStorage:
             if int(d.name.split("=")[1]) > above
         )
 
-    def compact_table(
-        self, table: str, upto_round: int, num_files: int | None = None
-    ) -> dict:
+    def compact_table(self, table: str, upto_round: int) -> dict:
         """Iceberg ``rewrite_data_files`` analog: rewrite all committed
         rounds ≤ ``upto_round`` (plus any previous compaction) into one
-        host-hash-clustered file set, then atomically swap the compaction
+        host-hash-clustered set of at most ``NUM_HOST_BUCKETS`` files, then atomically swap the compaction
         pointer and GC the superseded dirs. Table CONTENTS are unchanged —
         the `round` partition value is preserved as a data column, so
         ``read_table`` results (including `round <= k` filters) are
@@ -279,7 +282,6 @@ class CrawlStorage:
         per-round snapshot reads (``read_round``) below the pointer are
         retired — fine for append-only membership tables (`seen`), whose
         per-round dirs the engine never re-reads after their commit."""
-        nf = num_files or self.num_buckets
         if self.catalog:
             return self._compact_iceberg(table)
         # Idempotence guard: a re-run (crash recovery, manual retry) with an
@@ -294,8 +296,8 @@ class CrawlStorage:
             return {"table": table, "upto": ptr["upto"], "noop": True,
                     "removed_rounds": []}
         df = self.read_table(table, upto_round=upto_round)
-        key = "host_hash" if "host_hash" in df.columns else None
-        df = df.repartition(nf, key) if key else df.repartition(nf)
+        keys = [c for c in ("host_hash",) if c in df.columns]
+        df = df.repartition(NUM_HOST_BUCKETS, *keys)
         out = self._compact_dir(table, upto_round)
         # Write-then-rename: the rewrite lands in a tmp dir invisible to
         # both readers (pointer unswapped) and the GC glob (`upto=*`), then
@@ -323,7 +325,7 @@ class CrawlStorage:
             if r <= upto_round:
                 shutil.rmtree(d, ignore_errors=True)
                 removed.append(r)
-        return {"table": table, "upto": upto_round, "files": nf,
+        return {"table": table, "upto": upto_round, "files": NUM_HOST_BUCKETS,
                 "removed_rounds": sorted(removed)}
 
     def _compact_iceberg(self, table: str) -> dict:

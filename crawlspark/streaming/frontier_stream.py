@@ -27,16 +27,14 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-def canonical_url_stream(
-    spark: SparkSession, src_dir: str, num_buckets: int = 32
-) -> DataFrame:
+def canonical_url_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """readStream(json events) → canonicalize → identity columns. The scan
     and UDFs are identical to the batch path (C1–C11)."""
     raw = spark.readStream.schema(EVENT_SCHEMA).json(src_dir)
     canon = raw.withColumn("url_canon", canonicalize_udf()(F.col("url"))).filter(
         F.col("url_canon").isNotNull()
     )
-    return with_url_identity(canon, num_buckets=num_buckets)
+    return with_url_identity(canon)
 
 
 def streaming_seen_filter(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

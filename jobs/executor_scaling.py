@@ -45,7 +45,11 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
 from bench import make_spark, run_crawl, silicon_ceiling  # noqa: E402
-from crawlspark.config import positive_int  # noqa: E402
+from crawlspark.config import (  # noqa: E402
+    non_negative_float,
+    non_negative_int,
+    positive_int,
+)
 
 
 def _make_pyfiles_zip() -> str:
@@ -94,9 +98,9 @@ def run_level(
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--budget", type=float, default=600.0,
+    ap.add_argument("--budget", type=non_negative_float, default=600.0,
                     help="skip the mirrored pair past this many seconds")
-    ap.add_argument("--work", type=int, default=2000,
+    ap.add_argument("--work", type=non_negative_int, default=2000,
                     help="fetch_cpu_work (~2 us per unit per URL); 0 = the "
                     "bare round-3/4 probe")
     # a smaller web x heavier per-URL work holds total compute (seconds of

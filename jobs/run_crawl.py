@@ -16,7 +16,12 @@ from __future__ import annotations
 import argparse
 import json
 
-from crawlspark.config import positive_int
+from crawlspark.config import (
+    PRIORITY_MODES,
+    non_negative_int,
+    positive_float,
+    positive_int,
+)
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -24,9 +29,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--root", required=True, help="storage root (tables + manifests)")
     ap.add_argument("--seeds", default=None, help="seed list file (.txt or .csv)")
     ap.add_argument("--seed-count", type=positive_int, default=100)
-    ap.add_argument("--max-depth", type=int, default=4)
+    ap.add_argument("--max-depth", type=non_negative_int, default=4)
     ap.add_argument("--max-rounds", type=positive_int, default=64)
-    ap.add_argument("--round-seconds", type=float, default=30.0)
+    ap.add_argument("--round-seconds", type=positive_float, default=30.0)
     ap.add_argument("--web-hosts", type=positive_int, default=20)
     ap.add_argument("--shuffle-partitions", type=positive_int, default=32)
     ap.add_argument("--unban-round", type=positive_int, default=None)
@@ -39,7 +44,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     ap.add_argument(
         "--priority-mode",
-        choices=["bfs", "indegree", "pagerank"],
+        choices=PRIORITY_MODES,
         default="bfs",
         help="P1 policy: strict BFS, in-degree boosted within a depth "
         "level, or exact fixed-point PageRank over the accumulated link "
@@ -79,10 +84,7 @@ def main(argv: list[str] | None = None) -> None:
     else:
         seeds = synthweb.seed_list(cfg, n=args.seed_count)
 
-    storage = CrawlStorage(
-        spark, args.root, catalog=args.iceberg_catalog,
-        num_buckets=cfg.num_host_buckets,
-    )
+    storage = CrawlStorage(spark, args.root, catalog=args.iceberg_catalog)
     engine = CrawlEngine(spark, cfg, storage)
     if args.inject:
         print(json.dumps(engine.inject_seeds(seeds)))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from urllib.parse import urljoin
 
-from crawlspark.config import CrawlConfig
+from crawlspark.config import INDEGREE_CAP, PAGERANK_ITERATIONS, CrawlConfig
 from crawlspark.functions.canon import canonicalize_url, host_of
 from crawlspark.functions.robots import allowed, path_of
 from crawlspark.sources.synthweb import page, robots_table
@@ -138,12 +138,8 @@ def crawl(
     # accumulated link graph (engine: the `edges` table) — distinct
     # (src_canon, dst_canon) over every 200-fetch's resolvable links,
     # INCLUDING links beyond max_depth (the engine writes edges before the
-    # depth filter); feeds the "pagerank" priority mode. edge_snaps[r]
-    # freezes the set as of the end of round r's fetch loop for the
-    # cfg.pagerank_every staleness mirror (basis = rnd - rnd % k).
+    # depth filter); feeds the "pagerank" priority mode.
     edges_acc: set[tuple[str, str]] = set()
-    edge_snaps: dict[int, frozenset] = {}
-    pr_every = max(1, cfg.pagerank_every)
 
     # --- bootstrap (round 0): canonicalize, first-wins dedup by seed order
     frontier: list[_Entry] = []
@@ -168,10 +164,6 @@ def crawl(
                 {"round": rnd, "phase": "inject", "new_urls": added}
             )
             res.rounds = rnd
-            # an injection round is a committed round: it can be a pagerank
-            # basis (edges unchanged — no fetching happened)
-            if cfg.priority_mode == "pagerank" and rnd % pr_every == 0:
-                edge_snaps[rnd] = frozenset(edges_acc)
             continue
         if not frontier:
             break
@@ -258,26 +250,18 @@ def crawl(
                 n_links[c.url_canon] = n_links.get(c.url_canon, 0) + 1
             for c in candidates:
                 c.priority = float(c.depth) - (
-                    float(min(n_links[c.url_canon], cfg.indegree_cap))
-                    / float(cfg.indegree_cap + 1)
+                    float(min(n_links[c.url_canon], INDEGREE_CAP))
+                    / float(INDEGREE_CAP + 1)
                 )
         # P1 "pagerank" priority: boost = min(rank, SCALE-1)/SCALE over the
-        # integer ranks of the graph accumulated through the BASIS round
-        # (rnd - rnd % pagerank_every; basis 0 → no boost yet) — identical
-        # IEEE-754 ops to the engine's column expression (long→double cast,
-        # one division, one subtraction).
+        # integer ranks of the graph accumulated through this round —
+        # identical IEEE-754 ops to the engine's column expression
+        # (long→double cast, one division, one subtraction).
         elif cfg.priority_mode == "pagerank":
-            if rnd % pr_every == 0:
-                edge_snaps[rnd] = frozenset(edges_acc)
-            basis = rnd - (rnd % pr_every)
-            if basis > 0:
-                graph = edges_acc if basis == rnd else edge_snaps[basis]
-                ranks = _pagerank_int(graph, cfg.pagerank_iterations)
-                for c in candidates:
-                    r = min(ranks.get(c.url_canon, 0), PAGERANK_SCALE - 1)
-                    c.priority = float(c.depth) - (
-                        float(r) / float(PAGERANK_SCALE)
-                    )
+            ranks = _pagerank_int(edges_acc, PAGERANK_ITERATIONS)
+            for c in candidates:
+                r = min(ranks.get(c.url_canon, 0), PAGERANK_SCALE - 1)
+                c.priority = float(c.depth) - (float(r) / float(PAGERANK_SCALE))
 
         # A1 first-wins intra-round dedup + A2 seen filter (exact)
         candidates.sort(key=lambda e: e.order_key)

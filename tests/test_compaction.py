@@ -96,7 +96,7 @@ def test_read_table_equality_across_compaction(spark, tmp_path, seen_rows):
     """Storage-level: compaction preserves read_table contents for every
     upto_round cut — including cuts BELOW the pointer, which must filter on
     the preserved `round` data column."""
-    store = CrawlStorage(spark, tmp_path, num_buckets=4)
+    store = CrawlStorage(spark, tmp_path)
     for rnd in range(4):
         store.write_round("seen", seen_rows(rnd * 10, rnd * 10 + 10, rnd), rnd)
 
@@ -128,7 +128,7 @@ def test_compaction_crash_safety(spark, tmp_path, seen_rows):
     """(a) A compacted dir with no pointer (crash between write and pointer
     swap) is invisible. (b) A covered round dir left behind by a crashed GC
     is never double-read."""
-    store = CrawlStorage(spark, tmp_path, num_buckets=4)
+    store = CrawlStorage(spark, tmp_path)
     for rnd in range(3):
         store.write_round("seen", seen_rows(rnd * 5, rnd * 5 + 5, rnd), rnd)
     before = sorted(
@@ -199,7 +199,7 @@ def test_compaction_rerun_is_noop(spark, tmp_path, seen_rows):
     would clear the live _compact dir before the lazy read of it executes —
     with the covered round dirs already GC'd, every row <= upto would be
     permanently lost."""
-    store = CrawlStorage(spark, tmp_path, num_buckets=4)
+    store = CrawlStorage(spark, tmp_path)
     for rnd in range(3):
         store.write_round("seen", seen_rows(rnd * 5, rnd * 5 + 5, rnd), rnd)
     store.compact_table("seen", upto_round=2)
@@ -223,13 +223,10 @@ def test_compaction_rerun_is_noop(spark, tmp_path, seen_rows):
 def test_compaction_shrinks_file_listing(spark, tmp_path, seen_rows):
     """The point of the exercise: the file set the per-round seen anti-join
     lists drops from O(rounds × files-per-round) to the compacted set."""
-    store = CrawlStorage(spark, tmp_path, num_buckets=4)
-    rounds, files_per_round = 8, 4
+    store = CrawlStorage(spark, tmp_path)
+    rounds = 8
     for rnd in range(rounds):
-        store.write_round(
-            "seen", seen_rows(rnd * 10, rnd * 10 + 10, rnd), rnd,
-            num_files=files_per_round,
-        )
+        store.write_round("seen", seen_rows(rnd * 10, rnd * 10 + 10, rnd), rnd)
 
     def parquet_files():
         root = pathlib.Path(store.root)
@@ -242,9 +239,10 @@ def test_compaction_shrinks_file_listing(spark, tmp_path, seen_rows):
         ]
 
     before = len(parquet_files())
-    # hash-partitioning may leave a bucket empty; the growth is per-round
+    # host_hash 0-3 hash into 3 of the round's 8 files (and 3 of the
+    # compacted set's 32): the growth is per-round
     assert before >= rounds * 2
-    store.compact_table("seen", upto_round=rounds - 1, num_files=4)
+    store.compact_table("seen", upto_round=rounds - 1)
     after = len(parquet_files())
     assert after <= 4
 

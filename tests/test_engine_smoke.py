@@ -3,6 +3,8 @@ structural invariants (SURVEY.md §7 step 3)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,6 +127,45 @@ def test_metrics_round_is_one_file(crawl):
     for rnd in range(1, summary["rounds"] + 1):
         parts = list((storage.root / "metrics" / f"round={rnd:05d}").glob("part-*"))
         assert len(parts) == 1, (rnd, parts)
+
+
+def _executed_write_plan(spark, path) -> str:
+    """The physical plan Spark executed for the write into ``path``, from
+    the session's SQL status store (kept with the UI off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+    return next(p for p in reversed(plans) if f"file:{path}," in p)
+
+
+def test_round_file_layout_per_table(crawl, spark, tmp_path):
+    """Storage fixes each table's file layout (metrics' one file per round
+    is test_metrics_round_is_one_file). On the crawl's own round dirs:
+    frontier, seen and documents hold at most 8 files, and edges at most
+    the round's fetch partition count. On the executed plan of a round
+    rewrite: frontier, seen and documents hash-partition on host_hash into
+    8, and edges has neither an exchange nor a coalesce — its sink also
+    runs the fetch, whose partitioning must reach the files unchanged."""
+    cfg, storage, _, summary = crawl
+    # fetch stage width: max(4, min(shuffle_partitions, ...)) = 4 here
+    assert cfg.shuffle_partitions == 4
+    limits = {"frontier": 8, "seen": 8, "documents": 8, "edges": 4}
+    for rnd in range(summary["rounds"] + 1):
+        for table, limit in limits.items():
+            d = storage.root / table / f"round={rnd:05d}"
+            if rnd > 0 or table in ("frontier", "seen"):
+                assert d.is_dir() and len(list(d.glob("*.parquet"))) <= limit, d
+
+    rewrite = CrawlStorage(spark, tmp_path)
+    for table in limits:
+        rewrite.write_round(table, storage.read_round(table, 1), 1)
+        plan = _executed_write_plan(spark, rewrite.root / table / "round=00001")
+        assert "InsertIntoHadoopFsRelationCommand" in plan, plan
+        assert "Coalesce" not in plan, plan
+        if table == "edges":
+            assert "Exchange" not in plan, plan
+        else:
+            assert re.search(r"hashpartitioning\(host_hash#\d+, 8\)", plan), plan
 
 
 def test_empty_and_invalid_seed_lists(spark, tmp_path):

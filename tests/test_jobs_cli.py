@@ -62,3 +62,31 @@ def test_run_crawl_rejects_counts_below_one(monkeypatch, capsys, flag):
         job.main(["--root", "unused", flag, "0"])
     assert exc.value.code == 2
     assert f"{flag}: must be >= 1, got 0" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "name, flag, value, message",
+    [
+        ("run_crawl", "--max-depth", "-1", "must be >= 0, got -1"),
+        ("run_crawl", "--round-seconds", "0", "must be > 0, got 0.0"),
+        ("run_crawl", "--round-seconds", "-2.5", "must be > 0, got -2.5"),
+        ("run_crawl", "--round-seconds", "nan", "must be finite, got nan"),
+        ("run_crawl", "--round-seconds", "inf", "must be finite, got inf"),
+        ("run_crawl", "--round-seconds", "soon", "not a number: 'soon'"),
+        ("executor_scaling", "--work", "-1", "must be >= 0, got -1"),
+        ("executor_scaling", "--budget", "-1", "must be >= 0, got -1.0"),
+        ("executor_scaling", "--budget", "nan", "must be finite, got nan"),
+        ("executor_scaling", "--budget", "inf", "must be finite, got inf"),
+    ],
+)
+def test_job_rejects_out_of_range_values(monkeypatch, capsys, name, flag, value, message):
+    """Depths, CPU-work levels, round windows and time budgets outside their
+    range stop at argument parsing with a usage error. A NaN or infinite
+    --round-seconds used to reach the engine unchecked (the oracle's
+    ``int(round_seconds // delay)`` raises on both)."""
+    job = _load_job(monkeypatch, name)
+    argv = ["--root", "unused"] if name == "run_crawl" else []
+    with pytest.raises(SystemExit) as exc:
+        job.main([*argv, flag, value])
+    assert exc.value.code == 2
+    assert f"{flag}: {message}" in capsys.readouterr().err

@@ -264,46 +264,6 @@ def test_pagerank_priority_mode_matches_oracle(spark, tmp_path):
     assert want.seen == bfs.seen == ind.seen
 
 
-def test_pagerank_every_staleness_matches_oracle(spark, tmp_path):
-    """cfg.pagerank_every = k re-ranks only every k rounds (round rnd uses
-    edges through basis = rnd - rnd%k; basis 0 = no boost). The staleness
-    is a pure function of committed storage, so the engine must still
-    reproduce the oracle's exact total order — and the knob must be live:
-    the k=2 order diverges from the every-round (k=1) order somewhere."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
-
-    base = dict(
-        max_depth=2, max_rounds=8, web_hosts=6, hot_host="host00.example",
-        priority_mode="pagerank",
-    )
-    cfg = CrawlConfig(**base, pagerank_every=2, shuffle_partitions=4)
-    storage = CrawlStorage(spark, tmp_path / "pr2")
-    seeds = synthweb.seed_list(cfg, n=20)
-    summary = CrawlEngine(spark, cfg, storage).run(seeds)
-    want = oracle_crawler.crawl(cfg, seeds)
-
-    engine_seen = {
-        r["url_canon"]
-        for r in storage.read_table("seen").select("url_canon").collect()
-    }
-    assert engine_seen == want.seen
-    assert summary["rounds"] == want.rounds
-    rows = (
-        storage.read_table("documents")
-        .select("round", "fetch_time", "host", "host_rank", "doc_id")
-        .orderBy("round", "fetch_time", "host", "host_rank")
-        .collect()
-    )
-    assert [(r["round"], r["doc_id"]) for r in rows] == want.crawl_order
-
-    fresh = oracle_crawler.crawl(CrawlConfig(**base), seeds)  # k=1
-    assert want.crawl_order != fresh.crawl_order
-    assert want.seen == fresh.seen
-
-
 def test_seed_injection_matches_oracle(spark, tmp_path):
     """Mid-crawl seed injection (engine.inject_seeds): crawl seeds1 to
     exhaustion, inject a second seed list (some new, some already-seen),

@@ -62,7 +62,7 @@ def test_compacted_read_keeps_pushdown_and_pruning(spark, tmp_path, seen_rows):
     data column) and as partition pruning on the still-live round dirs."""
     from crawlspark.storage import CrawlStorage
 
-    storage = CrawlStorage(spark, tmp_path, num_buckets=4)
+    storage = CrawlStorage(spark, tmp_path)
     for rnd in range(4):
         storage.write_round("seen", seen_rows(0, 10, rnd), rnd)
     storage.compact_table("seen", upto_round=1)
