@@ -25,7 +25,10 @@ T32/(4*T8). Two scaling probes are reported:
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PARTS
-(default "queries,crawl,docproc").
+(default "bigcrawl,queries,calibrate,docproc,crawl"),
+SPARK_GRAFT_BENCH_BUDGET (default 780 s) and SPARK_GRAFT_BIGCRAWL_BUDGET
+(default 200 s). A CPU count below 1 or a budget that is not a finite
+number above 0 raises ValueError naming the variable.
 
 This file is also the crawl harness the scripts under jobs/ import:
 make_spark, warm_python_workers, run_crawl and silicon_ceiling.
@@ -33,6 +36,7 @@ make_spark, warm_python_workers, run_crawl and silicon_ceiling.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -40,6 +44,19 @@ import tempfile
 import time
 
 import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
+
+from crawlspark.config import positive_float, positive_int
+
+
+def env_knob(name: str, parse, default: str):
+    """Environment variable ``name`` (``default`` when unset) parsed by one
+    of ``crawlspark.config``'s bounds; a bad value raises ``ValueError``
+    naming the variable."""
+    text = os.environ.get(name, default)
+    try:
+        return parse(text)
+    except argparse.ArgumentTypeError as e:
+        raise ValueError(f"{name}={text!r}: {e}") from None
 
 
 def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
@@ -208,7 +225,7 @@ def bench_big_crawl() -> dict:
     # so a badly throttled VM still yields a complete JSON line instead of
     # tripping an outer timeout.
     t0 = time.time()
-    part_budget = float(os.environ.get("SPARK_GRAFT_BIGCRAWL_BUDGET", "200"))
+    part_budget = env_knob("SPARK_GRAFT_BIGCRAWL_BUDGET", positive_float, "200")
     runs = []
     for c in (32, 8, 8, 32):
         if len(runs) >= 2 and time.time() - t0 > part_budget:
@@ -422,7 +439,7 @@ def bench_docproc(n_rows: int = 300_000, trials: int = 2) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_knob("SPARK_GRAFT_CPUS", positive_int, "32")
     # Parts execute in LISTED order. Default puts the contract headline
     # (bigcrawl) FIRST: this VM's burst credits drain under sustained load
     # (BASELINE.md), so whichever part runs first gets the most
@@ -436,7 +453,7 @@ def main() -> None:
     # ("crawl", the small determinism fixture the round-4 verdict asked to
     # re-measure). The headline parts run first either way, so a larger
     # budget only decides whether the tail parts land in the artifact.
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "780"))
+    budget = env_knob("SPARK_GRAFT_BENCH_BUDGET", positive_float, "780")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
 
     t_start = time.time()

@@ -47,7 +47,9 @@ class CrawlConfig:
     """One crawl run's settings; identical fields drive the Spark engine and
     the sequential oracle, which is what makes equality testing meaningful.
     Every field is set by some caller under jobs/, bench.py or perfbench/
-    (tests/test_config.py); fixed values are the constants above."""
+    (tests/test_config.py); fixed values are the constants above. A value
+    out of its range (``_FIELD_BOUNDS``, ``PRIORITY_MODES``) raises
+    ``ValueError`` naming the field."""
 
     max_depth: int = MAX_DEPTH
     max_rounds: int = 64
@@ -86,6 +88,16 @@ class CrawlConfig:
     fetch_cpu_work: int = 0
 
     def __post_init__(self) -> None:
+        # round_seconds and max_depth are rendered into the round's SQL text,
+        # so a value that passes here is a finite number
+        for name, bound in _FIELD_BOUNDS.items():
+            value = getattr(self, name)
+            if value is None and name in _UNSET_FIELDS:
+                continue
+            try:
+                bound.check(value)
+            except ValueError as e:
+                raise ValueError(f"{name} {e}") from None
         if self.priority_mode not in PRIORITY_MODES:
             raise ValueError(
                 f"priority_mode must be one of {', '.join(PRIORITY_MODES)}; "
@@ -93,28 +105,52 @@ class CrawlConfig:
             )
 
 
-def _bounded(kind: type, low: float, strict: bool = False):
-    """argparse type for a finite ``kind`` value >= ``low`` (> ``low`` when
-    ``strict``): NaN and inf are rejected, and the error names the bound."""
+@dataclass(frozen=True)
+class _Bound:
+    """A finite ``kind`` value >= ``low`` (> ``low`` when ``strict``): NaN
+    and inf are rejected, and the error names the bound. ``check`` tests a
+    value; calling it parses a command-line string (an argparse type)."""
 
-    def parse(text: str):
-        try:
-            value = kind(text)
-        except ValueError:
-            what = "an integer" if kind is int else "a number"
-            raise argparse.ArgumentTypeError(f"not {what}: {text!r}") from None
-        if not math.isfinite(value):
-            raise argparse.ArgumentTypeError(f"must be finite, got {value}")
-        if value < low or (strict and value == low):
-            raise argparse.ArgumentTypeError(
-                f"must be {'>' if strict else '>='} {low}, got {value}"
+    kind: type
+    low: float
+    strict: bool = False
+
+    def check(self, value) -> None:
+        if not isinstance(value, (int, float)) or not math.isfinite(value):
+            raise ValueError(f"must be finite, got {value}")
+        if value < self.low or (self.strict and value == self.low):
+            raise ValueError(
+                f"must be {'>' if self.strict else '>='} {self.low}, got {value}"
             )
+
+    def __call__(self, text: str):
+        try:
+            value = self.kind(text)
+        except ValueError:
+            what = "an integer" if self.kind is int else "a number"
+            raise argparse.ArgumentTypeError(f"not {what}: {text!r}") from None
+        try:
+            self.check(value)
+        except ValueError as e:
+            raise argparse.ArgumentTypeError(str(e)) from None
         return value
 
-    return parse
 
+positive_int = _Bound(int, 1)  # counts that must be at least 1
+non_negative_int = _Bound(int, 0)  # counts that may be 0
+positive_float = _Bound(float, 0, strict=True)
+non_negative_float = _Bound(float, 0)
 
-positive_int = _bounded(int, 1)  # counts that must be at least 1
-non_negative_int = _bounded(int, 0)  # counts that may be 0
-positive_float = _bounded(float, 0, strict=True)
-non_negative_float = _bounded(float, 0)
+# CrawlConfig's range-checked fields. Only the optional fields in
+# _UNSET_FIELDS may be None (unset); None anywhere else is rejected.
+_FIELD_BOUNDS = {
+    "max_depth": non_negative_int,
+    "max_rounds": positive_int,
+    "round_seconds": positive_float,
+    "web_hosts": positive_int,
+    "unban_round": positive_int,
+    "shuffle_partitions": positive_int,
+    "compact_seen_every": positive_int,
+    "fetch_cpu_work": non_negative_int,
+}
+_UNSET_FIELDS = ("unban_round", "compact_seen_every")

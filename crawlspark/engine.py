@@ -34,6 +34,15 @@ comparison, so skew there is benign; the *fetch/parse* path is the expensive
 one and is salted — ``repartition(host_hash, salt)`` with
 ``salt = pmod(xxhash64(url_canon), S)`` — safe because fetch is per-URL pure
 and happens after admission.
+
+Plan construction is driver time that no executor overlaps: every
+Column-API call (``F.col``, ``.alias``, ``==``, …) is a py4j round trip
+(~0.2 ms each on a 4-CPU machine), and PySpark's default DataFrame
+debugging adds three more per call to record its call site. The round's
+projections, filters, windows and counters are therefore SQL text
+(``selectExpr``, ``filter(str)``, ``F.expr``) — about one round trip per
+operator — and the robots match expression is built once per engine. Only
+engine-made numbers and booleans are rendered into that text, never data.
 """
 
 from __future__ import annotations
@@ -44,7 +53,7 @@ from dataclasses import asdict, dataclass, field, fields
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -67,6 +76,8 @@ DISCOVERY_ORDER = [
     "d_pos",
     "url_hash",
 ]
+_DISCOVERY_SQL = ", ".join(DISCOVERY_ORDER)
+FRONTIER_COLS = TABLE_SCHEMAS["frontier"].names
 
 # Adaptive fetch-stage parallelism: the mapInPandas fetch repartitions to
 # ceil(frontier_size / rows target), clamped to [4, shuffle_partitions]; the
@@ -164,6 +175,9 @@ class CrawlEngine:
             self.cuckoo.insert(key)
         self.history: list[RoundMetrics] = []
         self._robots_cached: DataFrame | None = None
+        # R2 robots match over the joined dim's rules: round-invariant, and
+        # building it is ~410 py4j round trips, so it is built once here
+        self._allowed = allowed_col(path_col(F.col("url_canon")), F.col("rules"))
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
@@ -232,17 +246,16 @@ class CrawlEngine:
         exact ban state (robots.banned AND the unban clock) backstops the
         cuckoo answer, so a false positive never bans."""
         bans_active = self.cfg.unban_round is None or rnd < self.cfg.unban_round
-        fr = frontier.join(F.broadcast(self._robots_df()), "host", "left")
-        return fr.select(
-            *frontier.columns,
-            F.coalesce("crawl_delay", F.lit(1.0)).alias("crawl_delay"),
-            (
-                F.coalesce(F.col("maybe_banned") & F.col("banned"), F.lit(False))
-                & F.lit(bans_active)
-            ).alias("is_banned"),
-            allowed_col(path_col(F.col("url_canon")), F.col("rules")).alias(
-                "is_allowed"
-            ),
+        return (
+            frontier.join(F.broadcast(self._robots_df()), "host", "left")
+            .withColumn("is_allowed", self._allowed)
+            .selectExpr(
+                *FRONTIER_COLS,
+                "coalesce(crawl_delay, 1.0D) AS crawl_delay",
+                "coalesce(maybe_banned AND banned, false) "
+                f"AND {bans_active} AS is_banned",
+                "is_allowed",
+            )
         )
 
     # --------------------------------------------------------- bootstrap
@@ -254,26 +267,24 @@ class CrawlEngine:
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
         )
         fr = fr.withColumn("url_canon", canonicalize_udf()("url")).filter(
-            F.col("url_canon").isNotNull()
+            "url_canon IS NOT NULL"
         )
-        fr = with_url_identity(fr)
-        fr = (
-            fr.withColumn("depth", F.lit(0))
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_round", F.lit(rnd))
-            .withColumn("d_time", F.lit(0.0))
-            .withColumn("d_host", F.lit(""))
-            .withColumn("d_rank", F.col("seed_pos"))
-            .withColumn("d_pos", F.lit(0))
-            .withColumn("parent_hash", F.lit(None).cast("long"))
+        fr = with_url_identity(fr).selectExpr(
+            "url",
+            "url_canon",
+            "url_hash",
+            "host",
+            "host_hash",
+            "0 AS depth",
+            "0.0D AS priority",
+            f"{rnd} AS discovered_round",
+            "0.0D AS d_time",
+            "'' AS d_host",
+            "seed_pos AS d_rank",
+            "0 AS d_pos",
+            "CAST(NULL AS BIGINT) AS parent_hash",
         )
-        # A1 first-wins dedup on the discovery-order tuple
-        w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        return (
-            fr.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*TABLE_SCHEMAS["frontier"].names)
-        )
+        return _first_wins(fr)
 
     def bootstrap(self, seeds: list[str]) -> None:
         """Round 0: seed list → canonical dedup'd frontier + seen."""
@@ -340,12 +351,12 @@ class CrawlEngine:
         ``rows`` whose (host_hash, url_hash) is not in ``seen`` through
         round ``rnd - 1``, persisted, and appended to ``seen`` with
         ``first_round = rnd``. The one answer to "seen?" for every row."""
-        seen = self.storage.read_table("seen", upto_round=rnd - 1).select(
+        seen = self.storage.read_table("seen", upto_round=rnd - 1).selectExpr(
             "host_hash", "url_hash"
         )
         new = (
             rows.join(seen, ["host_hash", "url_hash"], "left_anti")
-            .select(*TABLE_SCHEMAS["frontier"].names)
+            .selectExpr(*FRONTIER_COLS)
             .persist()
         )
         self.storage.write_round("seen", _seen_rows(new, rnd), rnd)
@@ -389,26 +400,21 @@ class CrawlEngine:
 
         tick("admission_plan")
 
-        # Banned rows: deferred (stay in frontier) when an unban is coming,
-        # dropped permanently when the ban is forever (else no exhaustion).
-        banned_rows = fr.filter(F.col("is_banned"))
-        banned_deferred = (
-            banned_rows if cfg.unban_round is not None else banned_rows.limit(0)
+        # P2–P4: per-host ranking, budget admission, virtual fetch clock.
+        # Banned and robots-disallowed rows are not ranked; banned rows stay
+        # in the frontier when an unban is coming (below).
+        ranked = (
+            fr.filter("NOT is_banned AND is_allowed")
+            .selectExpr(
+                "*",
+                f"row_number() OVER (PARTITION BY host ORDER BY {_DISCOVERY_SQL})"
+                " AS host_rank",
+                f"greatest(1, floor(CAST({cfg.round_seconds!r} AS DOUBLE)"
+                " / crawl_delay)) AS host_budget",
+            )
+            .persist()
         )
-        eligible = fr.filter(~F.col("is_banned") & F.col("is_allowed"))
-
-        # P2–P4: per-host ranking, budget admission, virtual fetch clock
-        w = Window.partitionBy("host").orderBy(*DISCOVERY_ORDER)
-        ranked = eligible.withColumn("host_rank", F.row_number().over(w))
-        budget = F.greatest(
-            F.lit(1), F.floor(F.lit(cfg.round_seconds) / F.col("crawl_delay"))
-        )
-        ranked = ranked.withColumn("host_budget", budget).persist()
-        admitted = ranked.filter(F.col("host_rank") <= F.col("host_budget"))
-        deferred = ranked.filter(F.col("host_rank") > F.col("host_budget"))
-        admitted = admitted.withColumn(
-            "fetch_time", F.col("host_rank") * F.col("crawl_delay")
-        )
+        deferred = ranked.filter("host_rank > host_budget")
 
         # G3 salted repartition → F1/F2 fetch+parse (mapInPandas).
         # Partition count adapts to the frontier size (known exactly from
@@ -431,48 +437,74 @@ class CrawlEngine:
         # 64x oversalting gives each host ~64 keys per partition so the
         # per-partition key-count variance (std ~ sqrt(keys)) stays small
         salt_n = fetch_parts * 64
-        admitted = admitted.withColumn(
-            "salt", F.pmod(F.xxhash64("url_canon"), F.lit(salt_n))
-        ).repartition(fetch_parts, "host_hash", "salt")
+        # only the columns the fetcher reads cross into Python
+        admitted = (
+            ranked.filter("host_rank <= host_budget")
+            .selectExpr(
+                "url_canon",
+                "url_hash",
+                "host",
+                "host_hash",
+                "depth",
+                "host_rank * crawl_delay AS fetch_time",
+                "host_rank",
+                f"pmod(xxhash64(url_canon), {salt_n}) AS salt",
+            )
+            .repartition(fetch_parts, "host_hash", "salt")
+        )
         fetched = admitted.mapInPandas(
             _make_fetcher(cfg), FETCH_SCHEMA
         ).persist()
 
         # S3 documents append (contract schema + bookkeeping)
-        docs = (
-            fetched.withColumn("spans", F.expr(_SPANS_EXPR))
-            .withColumn("content_sha2", F.sha2(F.to_json(F.col("spans")), 256))
-            .withColumnRenamed("url_canon", "doc_id")
-            .select(*TABLE_SCHEMAS["documents"].names)
+        docs = fetched.withColumn("spans", F.expr(_SPANS_EXPR)).selectExpr(
+            "url_canon AS doc_id",
+            "spans",
+            "url_hash",
+            "host",
+            "host_hash",
+            "depth",
+            "fetch_time",
+            "host_rank",
+            "status",
+            "sha2(to_json(spans), 256) AS content_sha2",
         )
 
         # F3 link extraction → S4 edges append. Links arrive from the fetch
         # pass already resolved+canonicalized (fused C8 — no second python
         # stage here); the explode and identity columns stay in codegen.
         edges = (
-            fetched.filter(F.col("status") == 200)
-            .select(
-                F.col("url_canon").alias("src_canon"),
-                F.col("url_hash").alias("src_hash"),
-                F.col("host").alias("p_host"),
-                F.col("fetch_time").alias("p_time"),
-                F.col("host_rank").alias("p_rank"),
-                F.col("depth").alias("p_depth"),
-                F.posexplode(F.arrays_zip("links", "links_canon")).alias(
-                    "pos", "_lnk"
-                ),
+            fetched.filter("status = 200")
+            .selectExpr(
+                "url_canon AS src_canon",
+                "url_hash AS src_hash",
+                "host AS p_host",
+                "fetch_time AS p_time",
+                "host_rank AS p_rank",
+                "depth AS p_depth",
+                "posexplode(arrays_zip(links, links_canon)) AS (pos, _lnk)",
             )
-            .withColumn("href", F.col("_lnk.links"))
-            .withColumn("dst_canon", F.col("_lnk.links_canon"))
-            .drop("_lnk")
-            .filter(F.col("dst_canon").isNotNull())
+            .selectExpr(
+                "src_canon",
+                "src_hash",
+                "p_host",
+                "p_time",
+                "p_rank",
+                "p_depth",
+                "pos",
+                "_lnk.links AS href",
+                "_lnk.links_canon AS url_canon",
+            )
+            .filter("url_canon IS NOT NULL")
         )
-        edges = with_url_identity(
-            edges.withColumnRenamed("dst_canon", "url_canon")
-        ).persist()
-        edges_out = edges.withColumnsRenamed(
-            {"href": "dst_url", "url_canon": "dst_canon", "url_hash": "dst_hash"}
-        ).select(*TABLE_SCHEMAS["edges"].names)
+        edges = with_url_identity(edges).persist()
+        edges_out = edges.selectExpr(
+            "src_hash",
+            "href AS dst_url",
+            "url_canon AS dst_canon",
+            "url_hash AS dst_hash",
+            "pos",
+        )
         # driver-side job pipelining: the edges sink materializes the edges
         # cache the candidate pipeline needs next, so it runs NOW; the
         # documents sink only reads the (already materialized) fetch cache
@@ -482,21 +514,21 @@ class CrawlEngine:
         tick("edges_write")
 
         # U1/U2: candidate frontier rows with lineage
-        cand_rows = edges.filter(F.col("p_depth") + 1 <= cfg.max_depth)
-        cand = cand_rows.select(
-            F.col("href").alias("url"),
+        cand_rows = edges.filter(f"p_depth + 1 <= {cfg.max_depth}")
+        cand = cand_rows.selectExpr(
+            "href AS url",
             "url_canon",
             "url_hash",
             "host",
             "host_hash",
-            (F.col("p_depth") + 1).alias("depth"),
-            (F.col("p_depth") + 1).cast("double").alias("priority"),
-            F.lit(rnd).alias("discovered_round"),
-            F.col("p_time").alias("d_time"),
-            F.col("p_host").alias("d_host"),
-            F.col("p_rank").alias("d_rank"),
-            F.col("pos").alias("d_pos"),
-            F.col("src_hash").alias("parent_hash"),
+            "p_depth + 1 AS depth",
+            "CAST(p_depth + 1 AS DOUBLE) AS priority",
+            f"{rnd} AS discovered_round",
+            "p_time AS d_time",
+            "p_host AS d_host",
+            "p_rank AS d_rank",
+            "pos AS d_pos",
+            "src_hash AS parent_hash",
         )
         # P1 priority policy: "indegree" boosts URLs linked more often this
         # round — priority = depth - min(n_links, cap)/(cap+1). The count
@@ -507,10 +539,13 @@ class CrawlEngine:
         # is a long, cast once, one division, one subtraction — the
         # sequential oracle replays the identical IEEE-754 ops.
         if cfg.priority_mode == "indegree":
-            wcnt = Window.partitionBy("url_hash")
-            n_links = F.least(F.count(F.lit(1)).over(wcnt), F.lit(INDEGREE_CAP))
-            boost = n_links.cast("double") / F.lit(float(INDEGREE_CAP + 1))
-            cand = cand.withColumn("priority", F.col("priority") - boost)
+            cand = cand.withColumn(
+                "priority",
+                F.expr(
+                    "priority - CAST(least(count(1) OVER (PARTITION BY url_hash), "
+                    f"{INDEGREE_CAP}) AS DOUBLE) / CAST({INDEGREE_CAP + 1} AS DOUBLE)"
+                ),
+            )
         elif cfg.priority_mode == "pagerank":
             # P1 "pagerank": exact fixed-point-integer PageRank (ops/graph)
             # over edges rounds <= rnd, this round's included (written
@@ -522,47 +557,44 @@ class CrawlEngine:
             # jobs (test_pagerank_priority_jobs_are_flat).
             from crawlspark.ops.graph import SCALE, pagerank
 
-            g = self.storage.read_table("edges", upto_round=rnd).select(
-                F.col("src_hash").alias("src"), F.col("dst_hash").alias("dst")
+            g = self.storage.read_table("edges", upto_round=rnd).selectExpr(
+                "src_hash AS src", "dst_hash AS dst"
             )
             nodes = (
-                g.select(F.col("src").alias("node"))
-                .unionByName(g.select(F.col("dst").alias("node")))
+                g.selectExpr("src AS node")
+                .unionByName(g.selectExpr("dst AS node"))
                 .distinct()
             )
             ranks = pagerank(g, nodes, iterations=PAGERANK_ITERATIONS)
-            boost = (
-                F.least(
-                    F.coalesce(F.col("pagerank_scaled"), F.lit(0).cast("long")),
-                    F.lit(SCALE - 1).cast("long"),
-                ).cast("double")
-                / F.lit(float(SCALE))
-            )
             cand = (
                 cand.join(
                     ranks.withColumnRenamed("node", "url_hash"), "url_hash", "left"
                 )
-                .withColumn("priority", F.col("priority") - boost)
+                .withColumn(
+                    "priority",
+                    F.expr(
+                        "priority - CAST(least(coalesce(pagerank_scaled, "
+                        f"CAST(0 AS BIGINT)), CAST({SCALE - 1} AS BIGINT)) AS DOUBLE)"
+                        f" / CAST({SCALE} AS DOUBLE)"
+                    ),
+                )
                 .drop("pagerank_scaled")
             )
-        # A1 intra-round first-wins dedup
-        wdup = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        cand = (
-            cand.withColumn("_rn", F.row_number().over(wdup))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        cand = _first_wins(cand)
         tick("candidates_dedup")
 
         new = self._append_unseen(cand, rnd)
         tick("seen_antijoin_write")
 
-        # U1: next frontier snapshot = deferred ∪ banned-deferred ∪ new
-        next_frontier = (
-            deferred.select(*frontier.columns)
-            .unionByName(banned_deferred.select(*frontier.columns))
-            .unionByName(new)
-        )
+        # U1: next frontier snapshot = deferred ∪ banned-deferred ∪ new.
+        # Banned rows are deferred when an unban is coming and dropped
+        # when the ban is forever (else the crawl never exhausts).
+        next_frontier = deferred.selectExpr(*FRONTIER_COLS)
+        if cfg.unban_round is not None:
+            next_frontier = next_frontier.unionByName(
+                fr.filter("is_banned").selectExpr(*FRONTIER_COLS)
+            )
+        next_frontier = next_frontier.unionByName(new)
 
         # G1 counters: ONE groupBy(host_hash) sum over the round's cached
         # frames gives every RoundMetrics counter per host-hash bucket. Its
@@ -570,31 +602,25 @@ class CrawlEngine:
         # their column sums, and the rows with a nonzero S7 column are the
         # metrics table. This and the documents and frontier sinks only read
         # materialized caches, so they run as concurrent jobs.
-        def flags(df, **conds):
-            return df.select(
+        def flags(df: DataFrame, **conds: str) -> DataFrame:
+            return df.selectExpr(
                 "host_hash",
-                *[
-                    F.when(conds.get(c, F.lit(False)), 1).otherwise(0).alias(c)
-                    for c in COUNTERS
-                ],
+                *[f"IF({conds.get(c, 'false')}, 1, 0) AS {c}" for c in COUNTERS],
             )
 
-        true = F.lit(True)
         per_bucket = (
             flags(
                 fr,
-                frontier_size=true,
-                skipped_banned=F.col("is_banned"),
-                skipped_robots=~F.col("is_banned") & ~F.col("is_allowed"),
+                frontier_size="true",
+                skipped_banned="is_banned",
+                skipped_robots="NOT is_banned AND NOT is_allowed",
             )
-            .unionByName(
-                flags(fetched, fetched=true, ok_200=F.col("status") == 200)
-            )
-            .unionByName(flags(cand_rows, candidates=true))
-            .unionByName(flags(new, new_urls=true))
-            .unionByName(flags(deferred, skipped_politeness=true))
+            .unionByName(flags(fetched, fetched="true", ok_200="status = 200"))
+            .unionByName(flags(cand_rows, candidates="true"))
+            .unionByName(flags(new, new_urls="true"))
+            .unionByName(flags(deferred, skipped_politeness="true"))
             .groupBy("host_hash")
-            .agg(*[F.sum(c).alias(c) for c in COUNTERS])
+            .agg(*[F.expr(f"sum({c}) AS {c}") for c in COUNTERS])
         )
 
         def count_and_write_metrics() -> None:
@@ -693,8 +719,22 @@ class CrawlEngine:
 
 def _seen_rows(frontier: DataFrame, rnd: int) -> DataFrame:
     """S5: the ``seen`` rows of frontier rows first enqueued in round ``rnd``."""
-    return frontier.withColumn("first_round", F.lit(rnd)).select(
-        *TABLE_SCHEMAS["seen"].names
+    return frontier.selectExpr(
+        "url_hash", "url_canon", "host_hash", f"{rnd} AS first_round"
+    )
+
+
+def _first_wins(rows: DataFrame) -> DataFrame:
+    """A1 first-wins dedup: per ``url_hash``, the row first in discovery
+    order."""
+    return (
+        rows.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY url_hash ORDER BY {_DISCOVERY_SQL})"
+            " AS _rn",
+        )
+        .filter("_rn = 1")
+        .drop("_rn")
     )
 
 

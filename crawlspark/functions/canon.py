@@ -214,18 +214,13 @@ def resolve_udf():
 
 def with_url_identity(df):
     """C9/C10 — JVM-side identity columns over the already-canonical
-    ``url_canon``: url_hash = xxhash64(url_canon), host =
-    parse_url(…,'HOST'), host_hash = pmod(xxhash64(host),
-    config.NUM_HOST_BUCKETS).  Pure built-ins: stays in whole-stage
-    codegen, no Python boundary.
-    """
-    from pyspark.sql import functions as F
-
-    c = F.col("url_canon")
-    return (
-        df.withColumn("url_hash", F.xxhash64(c))
-        .withColumn("host", F.parse_url(c, F.lit("HOST")))
-        .withColumn(
-            "host_hash", F.pmod(F.xxhash64(F.col("host")), F.lit(NUM_HOST_BUCKETS)).cast("int")
-        )
+    ``url_canon``, appended after ``df``'s columns: url_hash =
+    xxhash64(url_canon), host = parse_url(…,'HOST'), host_hash =
+    pmod(xxhash64(host), config.NUM_HOST_BUCKETS).  Pure built-ins: stays in
+    whole-stage codegen, no Python boundary. SQL text, not Column-API
+    calls, to keep plan construction cheap (engine module docstring)."""
+    return df.selectExpr(
+        "*", "xxhash64(url_canon) AS url_hash", "parse_url(url_canon, 'HOST') AS host"
+    ).selectExpr(
+        "*", f"CAST(pmod(xxhash64(host), {NUM_HOST_BUCKETS}) AS INT) AS host_hash"
     )

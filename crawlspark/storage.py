@@ -192,7 +192,7 @@ class CrawlStorage:
     def read_round(self, table: str, rnd: int) -> DataFrame:
         if self.catalog:
             df = self.spark.table(f"{self.catalog}.{table}")
-            return df.filter(df["round"] == rnd).drop("round")
+            return df.filter(f"round = {int(rnd)}").drop("round")
         return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(
             str(self._round_dir(table, rnd))
         )
@@ -225,7 +225,7 @@ class CrawlStorage:
                     ).parquet(*[str(d) for d in live])
                     df = df.unionByName(live_df)
         if upto_round is not None:
-            df = df.filter(F.col("round") <= upto_round)
+            df = df.filter(f"round <= {int(upto_round)}")
         return df
 
     def has_round(self, table: str, rnd: int) -> bool:

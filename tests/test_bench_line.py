@@ -7,6 +7,8 @@ tail-capture window — even for a worst-case fat result dict."""
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -96,3 +98,33 @@ def test_bench_query_names_exist_in_registry():
     assert names, "failed to parse the bench names list"
     missing = [n for n in names if n not in registered]
     assert not missing, f"bench times unregistered queries: {missing}"
+
+
+@pytest.mark.parametrize(
+    "name, text",
+    [
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("SPARK_GRAFT_CPUS", "four"),
+        ("SPARK_GRAFT_BENCH_BUDGET", "nan"),
+        ("SPARK_GRAFT_BENCH_BUDGET", "0"),
+        ("SPARK_GRAFT_BIGCRAWL_BUDGET", "-5"),
+        ("SPARK_GRAFT_BIGCRAWL_BUDGET", "inf"),
+    ],
+)
+def test_bad_env_knob_is_rejected_by_name(monkeypatch, tmp_path, name, text):
+    """A bad CPU count or time budget stops bench.py before any Spark work,
+    with an error naming the variable (``int()``/``float()`` used to pass
+    ``nan`` and ``0`` on to a budget check that never fires or a
+    ``local[0]`` master). Should the check go missing, the bench runs no part
+    and writes its detail file under ``tmp_path``, and a crawl raises."""
+    monkeypatch.setenv(name, text)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PARTS", "none")
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+
+    def no_crawl(*args, **kwargs):
+        raise AssertionError(f"{name}={text!r} reached a crawl")
+
+    monkeypatch.setattr(bench, "_crawl_at", no_crawl)
+    run = bench.bench_big_crawl if name == "SPARK_GRAFT_BIGCRAWL_BUDGET" else bench.main
+    with pytest.raises(ValueError, match=name):
+        run()

@@ -42,3 +42,42 @@ def test_unknown_priority_mode_is_rejected(mode):
     with pytest.raises(ValueError, match="bfs, indegree, pagerank") as exc:
         CrawlConfig(priority_mode=mode)
     assert repr(mode) in str(exc.value)
+
+
+@pytest.mark.parametrize(
+    "field, value, message",
+    [
+        ("round_seconds", float("nan"), "must be finite"),
+        ("round_seconds", float("inf"), "must be finite"),
+        ("round_seconds", 0.0, "must be > 0"),
+        ("round_seconds", -1.0, "must be > 0"),
+        ("round_seconds", None, "must be finite"),
+        ("max_depth", -1, "must be >= 0"),
+        ("max_depth", None, "must be finite"),
+        ("max_rounds", 0, "must be >= 1"),
+        ("web_hosts", 0, "must be >= 1"),
+        ("shuffle_partitions", 0, "must be >= 1"),
+        ("fetch_cpu_work", -1, "must be >= 0"),
+        ("unban_round", 0, "must be >= 1"),
+        ("compact_seen_every", 0, "must be >= 1"),
+    ],
+)
+def test_out_of_range_setting_is_rejected(field, value, message):
+    """The oracle raised on a NaN round_seconds while the engine took it
+    unchecked, and max_depth=-1 silently crawled only the seeds. Both are
+    rendered into the round's SQL text, so they must be finite numbers."""
+    with pytest.raises(ValueError, match=f"^{field} {message}"):
+        CrawlConfig(**{field: value})
+
+
+@pytest.mark.parametrize(
+    "settings",
+    [
+        dict(max_depth=0, round_seconds=1e-3, fetch_cpu_work=0),
+        dict(max_rounds=1, web_hosts=1, shuffle_partitions=1),
+        dict(unban_round=None, compact_seen_every=None),
+        dict(unban_round=1, compact_seen_every=1, round_seconds=1e9),
+    ],
+)
+def test_edge_of_range_settings_are_accepted(settings):
+    assert CrawlConfig(**settings)
