@@ -62,11 +62,13 @@ def pagerank(
     the teleport mass. Returns (node, pagerank_scaled: bigint) where
     pagerank_scaled ≈ rank * scale.
     """
-    e = (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    # Plans are SQL text (selectExpr, joins on renamed columns): a
+    # Column-API call costs ~12 py4j round trips, and the engine builds
+    # this plan every pagerank round.
+    e = edges.selectExpr(
+        "CAST(src AS BIGINT) AS src", "CAST(dst AS BIGINT) AS dst"
+    ).distinct()
+    deg = e.groupBy("src").agg(F.expr("count(1) AS deg"))
     # Persist edges WITH degree attached: the per-iteration join then touches
     # one cached table, not two, and the degree division stays JVM-side.
     ed = e.join(deg, "src").persist()
@@ -78,37 +80,34 @@ def pagerank(
         # them after that storage has been compacted/GC'd; eager
         # localCheckpoint roots them in materialized (empty) blocks.
         ed.unpersist()
-        return nodes.select(
-            F.col("node").cast("long"),
-            F.lit(0).cast("long").alias("pagerank_scaled"),
+        return nodes.selectExpr(
+            "CAST(node AS BIGINT) AS node", "CAST(0 AS BIGINT) AS pagerank_scaled"
         ).localCheckpoint(eager=True)
     per_node = scale // n_nodes
     base = ((damping_den - damping_num) * per_node) // damping_den
+    update = (
+        f"CAST({base} AS BIGINT) + (CAST({damping_num} AS BIGINT)"
+        f" * coalesce(m, CAST(0 AS BIGINT)) div CAST({damping_den} AS BIGINT))"
+        " AS rank"
+    )
 
-    node_base = nodes.select(F.col("node").cast("long")).localCheckpoint(eager=True)
-    ranks = node_base.withColumn("rank", F.lit(per_node).cast("long"))
+    node_base = nodes.selectExpr("CAST(node AS BIGINT) AS node").localCheckpoint(
+        eager=True
+    )
+    ranks = node_base.selectExpr("node", f"CAST({per_node} AS BIGINT) AS rank")
     for _ in range(iterations):
         contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(F.col("dst"), F.expr("rank div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
+            ed.join(ranks.withColumnRenamed("node", "src"), "src")
+            .selectExpr("dst AS node", "rank div deg AS c")
+            .groupBy("node")
+            .agg(F.expr("sum(c) AS m"))
         )
         ranks = (
-            node_base.join(contribs, node_base["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"CAST({damping_num} AS BIGINT) * coalesce(m, CAST(0 AS BIGINT))"
-                        f" div CAST({damping_den} AS BIGINT)"
-                    )
-                ).alias("rank"),
-            )
+            node_base.join(contribs, "node", "left")
+            .selectExpr("node", update)
             # eager=True: truncate the plan NOW (one job per iteration) so
             # iteration k+1 reads materialized blocks, not k joins of lineage.
             .localCheckpoint(eager=True)
         )
     ed.unpersist()
-    return ranks.select(F.col("node"), F.col("rank").alias("pagerank_scaled"))
+    return ranks.withColumnRenamed("rank", "pagerank_scaled")

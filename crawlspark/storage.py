@@ -20,11 +20,12 @@ rendered with:
 On a real cluster, construct ``CrawlStorage(..., catalog="cat.db")`` and
 every table write/read dispatches to the Iceberg DataSourceV2 path
 (``_write_round_iceberg`` — create with ``PARTITIONED BY (round,
-bucket(host_hash))`` then per-round partition overwrites); the parquet
-facade's ``repartition(ROUND_FILES, 'host_hash')`` clusters files the same
-way so the seen⋈frontier anti-join (A2) shuffles co-bucketed data in both
-modes. Each table's file layout is fixed by its name (``_round_layout``);
-no caller chooses it.
+bucket(host_hash))`` then per-round partition overwrites). The parquet
+facade writes each round as its plan partitions it: plain round dirs carry
+no bucket spec, so host-hash clustering their files would cost a shuffle no
+reader's plan could use. Host-hash clustering stays in the Iceberg
+partition spec and in ``compact_table``, which rewrites covered rounds into
+at most ``NUM_HOST_BUCKETS`` files.
 """
 
 from __future__ import annotations
@@ -74,21 +75,6 @@ _WITH_ROUND = {
     t: T.StructType([*s.fields, T.StructField("round", _I)])
     for t, s in TABLE_SCHEMAS.items()
 }
-
-
-ROUND_FILES = 8  # files per round dir of frontier, seen and documents
-
-
-def _round_layout(table: str, df: DataFrame) -> DataFrame:
-    """Each table's round layout: frontier, seen and documents hash-cluster
-    on ``host_hash`` (Iceberg ``bucket(host_hash)``, so same-bucket seen and
-    frontier rows land in aligned files); metrics is one file; edges keeps
-    its input partitioning, as its sink also runs the fetch stage."""
-    if table == "edges":
-        return df
-    if table == "metrics":
-        return df.coalesce(1)
-    return df.repartition(ROUND_FILES, "host_hash")
 
 
 def _ddl(schema: T.StructType) -> str:
@@ -161,12 +147,12 @@ class CrawlStorage:
     def write_round(self, table: str, df: DataFrame, rnd: int) -> None:
         """Append one round's partition. Overwrite-idempotent: a re-run of an
         uncommitted round replaces the orphan dir (exact-resume invariant).
-        The table decides the layout (``_round_layout``): at most
-        ``ROUND_FILES`` files for frontier, seen and documents, one for
-        metrics, at most one per input partition for edges. A frame whose
-        columns differ from ``TABLE_SCHEMAS[table]`` raises ``ValueError``."""
+        Files follow the frame's partitions (at most one per partition),
+        except metrics, which is one file per round. A frame whose columns
+        differ from ``TABLE_SCHEMAS[table]`` raises ``ValueError``."""
         _check_columns(table, df.schema, TABLE_SCHEMAS[table], f"round {rnd} write")
-        df = _round_layout(table, df)
+        if table == "metrics":
+            df = df.coalesce(1)
         if self.catalog:
             self._write_round_iceberg(table, df, rnd)
             return
@@ -174,8 +160,7 @@ class CrawlStorage:
 
     def _write_round_iceberg(self, table: str, df: DataFrame, rnd: int) -> None:
         """Iceberg v2 append: the table is created from ``TABLE_SCHEMAS``
-        partitioned by (round, bucket(host_hash)) — the same clustering the
-        parquet facade renders with round dirs + repartition. A re-run of an
+        partitioned by (round, bucket(host_hash)). A re-run of an
         uncommitted round overwrites its round partition (overwritePartitions
         limited by the round literal), preserving the exact-resume
         idempotence invariant."""

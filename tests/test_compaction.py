@@ -239,8 +239,9 @@ def test_compaction_shrinks_file_listing(spark, tmp_path, seen_rows):
         ]
 
     before = len(parquet_files())
-    # host_hash 0-3 hash into 3 of the round's 8 files (and 3 of the
-    # compacted set's 32): the growth is per-round
+    # each round dir holds one file per non-empty partition of its
+    # spark.range frame, while host_hash 0-3 hash into at most 4 of the
+    # compacted set's 32 files: the growth is per-round
     assert before >= rounds * 2
     store.compact_table("seen", upto_round=rounds - 1)
     after = len(parquet_files())

@@ -234,7 +234,11 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     declared schema (no footer-inference jobs) — 8 jobs/round and 3 for the
     bootstrap measured. This pins
     both budgets (<=9, <=4) and flatness (round k and k+1 identical), so an
-    accidental extra .count()/.collect() in the hot loop fails loudly."""
+    accidental extra .count()/.collect() in the hot loop fails loudly.
+    Stages are pinned the same way (17 per round measured, <=17): storage
+    writes each round as its plan partitions it, and a write-side
+    re-shuffle (20 stages per round with frontier, seen and documents
+    hash-clustered on host_hash) fails here."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
@@ -252,42 +256,30 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     def n_jobs() -> int:
         return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
+    def n_stages() -> int:
+        return spark.sparkContext._jsc.sc().dagScheduler().nextStageId()
+
     nb = n_jobs()
     eng.bootstrap(synthweb.seed_list(cfg, n=20))
-    n0 = n_jobs()
+    n0, s0 = n_jobs(), n_stages()
     eng.run_round(1)
-    n1 = n_jobs()
+    n1, s1 = n_jobs(), n_stages()
     eng.run_round(2)
-    n2 = n_jobs()
+    n2, s2 = n_jobs(), n_stages()
     assert n0 - nb <= 4, f"bootstrap launched {n0-nb} driver jobs (budget 4)"
     assert n1 - n0 == n2 - n1, f"per-round job count not flat: {n1-n0} vs {n2-n1}"
     assert n1 - n0 <= 9, f"round launched {n1-n0} driver jobs (budget 9)"
+    assert s1 - s0 == s2 - s1, f"per-round stage count not flat: {s1-s0} vs {s2-s1}"
+    assert s1 - s0 <= 17, f"round created {s1-s0} stages (budget 17)"
 
 
-def test_round_driver_round_trips_are_flat_and_bounded(spark, tmp_path, monkeypatch):
-    """Per-round py4j budget: building a round's plan is driver time no
-    executor overlaps, ~0.2 ms per Python→JVM command, and a Column-API
-    call costs several commands (PySpark records each call site over
-    py4j). The round writes its projections, filters, windows and
-    counters as SQL text and builds the robots match expression once, at
-    engine construction (~410 commands, before these counts): 526
-    commands per bfs round and 178 for the bootstrap measured on this
-    fixture (3,664 and 439 with Column-API plans). Pins <= 800 per round,
-    flat from round 2 (round 1 also builds the robots dim), and <= 439
-    for the bootstrap. Object releases ("m\nd\n…") are not counted:
-    they follow Python's garbage collector, not the plan."""
+def _py4j_counter(monkeypatch):
+    """Returns ``commands(step)``: runs ``step()`` and returns how many py4j
+    commands it sent. Object releases ("m\nd\n…") are not counted: they
+    follow Python's garbage collector, not the plan."""
     import threading
 
     import py4j.clientserver as cs
-
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
-
-    cfg = CrawlConfig(max_depth=2, max_rounds=4, web_hosts=6,
-                      shuffle_partitions=4)
-    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
 
     sent = [0]
     lock = threading.Lock()
@@ -306,6 +298,30 @@ def test_round_driver_round_trips_are_flat_and_bounded(spark, tmp_path, monkeypa
         before = sent[0]
         step()
         return sent[0] - before
+
+    return commands
+
+
+def test_round_driver_round_trips_are_flat_and_bounded(spark, tmp_path, monkeypatch):
+    """Per-round py4j budget: building a round's plan is driver time no
+    executor overlaps, ~0.2 ms per Python→JVM command, and a Column-API
+    call costs several commands (PySpark records each call site over
+    py4j). The round writes its projections, filters, windows and
+    counters as SQL text and builds the robots match expression once, at
+    engine construction (~410 commands, before these counts): 526
+    commands per bfs round and 178 for the bootstrap measured on this
+    fixture (3,664 and 439 with Column-API plans). Pins <= 800 per round,
+    flat from round 2 (round 1 also builds the robots dim), and <= 439
+    for the bootstrap."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.engine import CrawlEngine
+    from crawlspark.sources import synthweb
+    from crawlspark.storage import CrawlStorage
+
+    cfg = CrawlConfig(max_depth=2, max_rounds=4, web_hosts=6,
+                      shuffle_partitions=4)
+    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
+    commands = _py4j_counter(monkeypatch)
 
     boot = commands(lambda: eng.bootstrap(synthweb.seed_list(cfg, n=20)))
     r1, r2, r3 = (commands(lambda r=r: eng.run_round(r)) for r in (1, 2, 3))
@@ -347,6 +363,29 @@ def test_pagerank_priority_jobs_are_flat(spark, tmp_path):
     n3 = n_jobs()
     assert n2 - n1 == n3 - n2, f"per-round job count not flat: {n2-n1} vs {n3-n2}"
     assert n2 - n1 <= 23, f"round launched {n2-n1} driver jobs (budget 23)"
+
+
+def test_pagerank_round_trips_are_flat_and_bounded(spark, tmp_path, monkeypatch):
+    """Per-round py4j budget of a priority_mode="pagerank" round, on
+    test_pagerank_priority_jobs_are_flat's fixture: ops/graph.pagerank
+    builds its per-iteration joins and projections as SQL text, like the
+    bfs round: 782 commands per round measured and pinned (1,338 with
+    Column-API plans). Counted from round 2, after round 1 has built the
+    robots dim."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.engine import CrawlEngine
+    from crawlspark.sources import synthweb
+    from crawlspark.storage import CrawlStorage
+
+    cfg = CrawlConfig(max_depth=3, max_rounds=4, web_hosts=6,
+                      shuffle_partitions=4, priority_mode="pagerank")
+    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
+    eng.bootstrap(synthweb.seed_list(cfg, n=20))
+    eng.run_round(1)
+    commands = _py4j_counter(monkeypatch)
+    r2, r3 = (commands(lambda r=r: eng.run_round(r)) for r in (2, 3))
+    assert r2 == r3, f"per-round py4j commands not flat: {r2} vs {r3}"
+    assert r2 <= 782, f"pagerank round sent {r2} py4j commands (budget 782)"
 
 
 def test_decontaminate_broadcasts_bench_grams(spark):
