@@ -2,36 +2,34 @@
 """Bench harness (SURVEY.md §6; BASELINE.json:2 metric definition).
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "crawl": {... URLs fetched+deduped/sec at local[8] and local[32],
-             scaling efficiency, rounds-to-exhaustion ...},
-   "docproc_scaling": {... fetch+parse+minhash doc-processing stage at the
-                       two parallelism levels ...}}
+  {"metric": "urls_fetched_deduped_per_sec", "value": ..., "unit": ...,
+   "suite_sec": ..., "sf": ..., "queries": {name: sec, ...},
+   "detail_file": "BENCH_DETAIL.json",
+   "big_crawl": {"levels": [n, 4n], "n": ..., "n4": ...,
+                 "scaling_efficiency": ..., "efficiency_vs_hw_ceiling": ...,
+                 "deterministic": ...}}
+and writes the full nested result to BENCH_DETAIL.json.
 
-The north rule's two-cluster-size criterion (N vs 4N executors,
-BASELINE.json:14) cannot use a real cluster in this sandbox; per driver
-instruction it is evidenced by running the SAME job on the SAME input at
-local[8] and local[32] and reporting throughput at both plus efficiency
-T32/(4*T8). Two scaling probes are reported:
+Two parts, run in the order SPARK_GRAFT_BENCH_PARTS lists them:
 
-- "crawl": the full engine loop. Honest caveat: per-round fixed cost
-  (driver job scheduling, parquet commits, checkpoint manifests) does not
-  shrink with cores, so small sandbox crawls understate cluster-scale
-  efficiency where rounds are minutes long.
-- "docproc_scaling": the compute-bound inner stage (fetch+parse+MinHash+
-  SimHash over a generated frontier) where per-row work dominates — the
-  regime a 10^10-URL crawl actually runs in.
+- "bigcrawl": the north rule's N vs 4N criterion (BASELINE.json:14). One
+  machine has no second cluster, so ``scaling_probe`` runs the SAME
+  big-round crawl on the SAME input at local[n] and local[4n] with
+  n = max(1, cpus // 4), and reports throughput (URLs fetched+deduped/sec)
+  at both, the efficiency T4n/(4*Tn), that efficiency against the
+  machine's own n→4n silicon ceiling, and whether every run crawled the
+  same rounds, fetched, deduped and seen counts.
+- "queries": the operator suite at the bench scale factor, seconds each.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PARTS
-(default "bigcrawl,queries,calibrate,docproc,crawl"),
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+SPARK_GRAFT_BENCH_PARTS (default "bigcrawl,queries"),
 SPARK_GRAFT_BENCH_BUDGET (default 780 s) and SPARK_GRAFT_BIGCRAWL_BUDGET
 (default 200 s). A CPU count below 1 or a budget that is not a finite
 number above 0 raises ValueError naming the variable.
 
 This file is also the crawl harness the scripts under jobs/ import:
-make_spark, warm_python_workers, run_crawl and silicon_ceiling.
+make_spark, run_crawl, crawl_at, usable_cpus and scaling_probe.
 """
 
 from __future__ import annotations
@@ -49,10 +47,10 @@ from crawlspark.config import positive_float, positive_int
 
 
 def env_knob(name: str, parse, default: str):
-    """Environment variable ``name`` (``default`` when unset) parsed by one
-    of ``crawlspark.config``'s bounds; a bad value raises ``ValueError``
-    naming the variable."""
-    text = os.environ.get(name, default)
+    """Environment variable ``name`` (``default`` when unset or empty)
+    parsed by one of ``crawlspark.config``'s bounds; a bad value raises
+    ``ValueError`` naming the variable."""
+    text = os.environ.get(name) or default
     try:
         return parse(text)
     except argparse.ArgumentTypeError as e:
@@ -127,10 +125,10 @@ def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
 def warm_python_workers(spark) -> None:
     """Spin up the python worker pool and pay the heavy imports (pandas,
     numpy, pyarrow.dataset, crawlspark) BEFORE the timed section: worker
-    attach + import measured ~1s x 32 workers on this VM and belongs to
-    session setup, not crawl throughput (same treatment as docproc's
-    warm-up slice). The UDF is a closure, so it is pickled by value:
-    local-cluster executors receive the crawlspark zip, not this file."""
+    attach + import measured ~1s x 32 workers on a 32-vCPU VM and belongs
+    to session setup, not crawl throughput. The UDF is a closure, so it is
+    pickled by value: local-cluster executors receive the crawlspark zip,
+    not this file."""
     from pyspark.sql import functions as F
 
     @F.pandas_udf("long")
@@ -180,139 +178,60 @@ def run_crawl(spark, cfg, seeds: list[str], root: str):
     }
 
 
-def _crawl_at(cores: int, cfg, n_seeds: int) -> dict:
-    """One bench crawl at local[cores] over ``n_seeds`` generated seeds."""
+def crawl_at(
+    cores: int,
+    master: str | None = None,
+    *,
+    seeds: int = 4000,
+    hosts: int = 2000,
+    work: int = 0,
+    py_file: str | None = None,
+) -> dict:
+    """One run of the big-round crawl on ``cores`` task slots: ``seeds``
+    generated seeds over a ``hosts``-host web, depth 3, politeness
+    effectively unbounded, so rounds hold 10^4-10^5 URLs and per-URL python
+    fetch+parse work dominates the fixed per-round cost (BASELINE.md scale
+    demonstration). ``master`` defaults to ``local[cores]``; ``work`` sets
+    ``CrawlConfig.fetch_cpu_work`` (outputs are identical at any value, and
+    fetch partitions size from it, so heavy rounds fill the width);
+    ``py_file`` ships a package zip to executors that do not share this
+    process's path."""
+    from crawlspark.config import CrawlConfig
     from crawlspark.sources import synthweb
 
-    spark = make_spark(f"local[{cores}]", cfg.shuffle_partitions)
+    cfg = CrawlConfig(
+        max_depth=3,
+        max_rounds=8,
+        web_hosts=hosts,
+        round_seconds=1e9,
+        shuffle_partitions=max(8, cores),
+        fetch_cpu_work=work,
+    )
+    spark = make_spark(master or f"local[{cores}]", cfg.shuffle_partitions)
     try:
+        if py_file:
+            spark.sparkContext.addPyFile(py_file)
         with tempfile.TemporaryDirectory(prefix=f"bench-crawl-{cores}-") as root:
-            _, summary = run_crawl(spark, cfg, synthweb.seed_list(cfg, n=n_seeds), root)
+            _, summary = run_crawl(spark, cfg, synthweb.seed_list(cfg, n=seeds), root)
     finally:
         spark.stop()
-    return {"cores": cores, **summary}
+    return summary
 
 
-def bench_big_crawl() -> dict:
-    """Headline scaling probe: the SAME big-round crawl at local[8] (N) and
-    local[32] (4N), interleaved (32,8,8,32) with best-of-2 per level. Why:
-    this VM is credit-throttled and a 32-wide run burns burst credits ~4x
-    faster than an 8-wide one, so single A/B runs measure credit state, not
-    the engine (measured 2026-08-17: the identical local[32] big crawl
-    ranged 28.8s-131s across credit states while the code was unchanged;
-    back-to-back runs flipped which level "won"). The symmetric order gives
-    each level one early and one late slot; best-of-2 approximates the
-    unthrottled rate. Determinism fields (rounds/fetched/seen equality
-    across ALL runs) are credit-invariant evidence.
-
-    The crawl is the big-round regime the contract metric describes
-    (BASELINE.md scale demonstration): thousands of hosts, effectively
-    unbounded politeness budget, rounds of 10^4-10^5 URLs where per-URL
-    python fetch+parse work dominates the fixed per-round cost."""
-    from crawlspark.config import CrawlConfig
-
-    def cfg(cores: int) -> CrawlConfig:
-        return CrawlConfig(
-            max_depth=3,
-            max_rounds=8,
-            web_hosts=2000,
-            round_seconds=1e9,  # politeness effectively unbounded: big rounds
-            shuffle_partitions=max(8, cores),
-        )
-
-    # Time-guarded: the first two runs (one per level) always happen; the
-    # mirrored pair is skipped if the part is already past its time share,
-    # so a badly throttled VM still yields a complete JSON line instead of
-    # tripping an outer timeout.
-    t0 = time.time()
-    part_budget = env_knob("SPARK_GRAFT_BIGCRAWL_BUDGET", positive_float, "200")
-    runs = []
-    for c in (32, 8, 8, 32):
-        if len(runs) >= 2 and time.time() - t0 > part_budget:
-            break
-        runs.append(_crawl_at(c, cfg(c), n_seeds=4000))
-    r32s = [r for r in runs if r["cores"] == 32]
-    r8s = [r for r in runs if r["cores"] == 8]
-    r32 = max(r32s, key=lambda r: r["throughput_urls_per_sec"])
-    r8 = max(r8s, key=lambda r: r["throughput_urls_per_sec"])
-    eff = r32["throughput_urls_per_sec"] / (4 * r8["throughput_urls_per_sec"])
-    return {
-        "local8": r8,
-        "local32": r32,
-        "all_walls_sec": [r["wall_sec"] for r in runs],
-        "run_order_cores": [r["cores"] for r in runs],
-        "scaling_efficiency": round(eff, 3),
-        "rounds_equal": len({r["rounds"] for r in runs}) == 1,
-        "fetched_equal": len({r["fetched"] for r in runs}) == 1,
-        "seen_equal": len({r["seen"] for r in runs}) == 1,
-    }
-
-
-def bench_crawl() -> dict:
-    """Part B: full crawl at local[8] (N) and local[32] (4N), same input.
-    The primary evidence here is DETERMINISM across parallelism (identical
-    rounds-to-exhaustion, fetched, deduped, seen — BASELINE.json:2); the
-    full-loop efficiency number is overhead-dominated at sandbox round sizes
-    (per-round checkpoint/commit costs don't shrink with cores — at 10^10
-    scale rounds are minutes of compute and this term vanishes). The
-    compute-bound scaling evidence is `docproc_scaling`."""
-    from crawlspark.config import CrawlConfig
-
-    def crawl(cores: int) -> dict:
-        cfg = CrawlConfig(
-            max_depth=2,
-            max_rounds=16,
-            web_hosts=250,
-            round_seconds=3000.0,
-            shuffle_partitions=cores,
-        )
-        return _crawl_at(cores, cfg, n_seeds=500)
-
-    # One run per level. This VM is credit-throttled: whichever multi-minute
-    # job runs first gets burst credits (same local[32] crawl measured 21s
-    # cold vs 77-211s warm), so repeated runs measure credit state, not the
-    # engine. local[32] goes first here (it also pays higher per-task
-    # overhead, so this is the conservative position for local[8]). The
-    # compute-bound scaling evidence is docproc_scaling, whose short runs
-    # fit inside a burst window.
-    r32 = crawl(32)
-    r8 = crawl(8)
-    eff = r32["throughput_urls_per_sec"] / (4 * r8["throughput_urls_per_sec"])
-    return {
-        "local8": r8,
-        "local32": r32,
-        "scaling_efficiency": round(eff, 3),
-        "rounds_equal": r8["rounds"] == r32["rounds"],
-        "fetched_equal": r8["fetched"] == r32["fetched"],
-        "seen_equal": r8["seen"] == r32["seen"],
-    }
-
-
-def silicon_ceiling(n: int, work_sec: float = 2.0) -> tuple[int, int, float]:
+def silicon_ceiling(n: int) -> float:
     """The MACHINE's own n→4n process-parallel scaling ceiling, from a
-    pure-python CPU burn in an mp.Pool (no Spark): work units done by n
-    processes, by 4n processes, and the efficiency (w4n / wn) / 4. On SMT
-    hardware the ceiling is well below 1.0, and Spark cannot scale better
-    than the silicon under it."""
+    2-second pure-python CPU burn per process in an mp.Pool (no Spark):
+    the efficiency (w4n / wn) / 4, where wk is the work units k processes
+    do. On SMT hardware the ceiling is well below 1.0, and Spark cannot
+    scale better than the silicon under it."""
     import multiprocessing as mp
 
     def measure(k: int) -> int:
         with mp.Pool(k) as p:
-            return int(sum(p.map(_burn, [work_sec] * k)))
+            return int(sum(p.map(_burn, [2.0] * k)))
 
-    wn, w4n = measure(n), measure(4 * n)
-    return wn, w4n, round((w4n / wn) / 4, 3)
-
-
-def calibrate_hardware(work_sec: float = 2.0) -> dict:
-    """The 8→32 silicon ceiling that the efficiency numbers below are
-    reported against."""
-    w8, w32, eff = silicon_ceiling(8, work_sec)
-    return {
-        "work_units_8procs": w8,
-        "work_units_32procs": w32,
-        "hardware_ceiling_efficiency": eff,
-    }
+    wn = measure(n)
+    return round(measure(4 * n) / wn / 4, 3)
 
 
 def _burn(seconds: float) -> int:
@@ -323,213 +242,111 @@ def _burn(seconds: float) -> int:
     return x
 
 
-def _run_docproc(cores: int, n_rows: int) -> float:
-    """Compute-bound doc-processing stage: generate a frontier JVM-side, then
-    ONE fused mapInPandas doing fetch+parse, link canonicalization, MinHash
-    and SimHash. Fusing matters: each chained ArrowEval node spawns its own
-    python worker per task, so an unfused 3-stage pipeline runs 3x more
-    python processes than cores and scales NEGATIVELY past ~8 cores
-    (measured). Same input regardless of parallelism (deterministic)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from crawlspark.config import CrawlConfig
-    from crawlspark.sources.synthweb import page
-
-    spark = make_spark(f"local[{cores}]", cores)
-    try:
-        cfg = CrawlConfig(web_hosts=1000)
-
-        def process(batches):
-            from crawlspark.functions.canon import canonicalize_series
-            from crawlspark.ops.dedup import _mix64, _shingle_hashes
-            from hashlib import blake2b
-
-            rng = np.random.default_rng(42)
-            a = (
-                rng.integers(1, 2**63, size=64, dtype=np.uint64) << np.uint64(1)
-            ) | np.uint64(1)
-            b = rng.integers(0, 2**63, size=64, dtype=np.uint64)
-            bit_idx = np.arange(64, dtype=np.uint64)
-
-            for pdf in batches:
-                minsigs, simsigs, n_links_out = [], [], []
-                link_lists = []
-                with np.errstate(over="ignore"):
-                    for u in pdf["url_canon"]:
-                        status, spans, links = page(u, cfg)
-                        text = " ".join(
-                            s["text"] for s in spans if s["text"] is not None
-                        )
-                        link_lists.extend(links)
-                        n_links_out.append(len(links))
-                        sh = _shingle_hashes(text, 3)
-                        sig = _mix64(a[:, None] * sh[None, :] + b[:, None]).min(axis=1)
-                        minsigs.append(int(sig.min()))
-                        words = text.split()
-                        hs = np.fromiter(
-                            (
-                                int.from_bytes(
-                                    blake2b(w.encode(), digest_size=8).digest(), "big"
-                                )
-                                for w in words
-                            ),
-                            dtype=np.uint64,
-                            count=len(words),
-                        )
-                        bits = (hs[:, None] >> bit_idx[None, :]) & np.uint64(1)
-                        votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-                        v = int(
-                            ((votes >= 0).astype(np.uint64) << bit_idx).sum(
-                                dtype=np.uint64
-                            )
-                        )
-                        simsigs.append(v - (1 << 64) if v >= (1 << 63) else v)
-                # canonicalize every extracted link (the A-series hot path)
-                canon = canonicalize_series(pd.Series(link_lists, dtype="object"))
-                yield pd.DataFrame(
-                    {
-                        "url_hash": pdf["url_hash"].values,
-                        "min_of_minhash": minsigs,
-                        "simhash": simsigs,
-                        "n_links": n_links_out,
-                        "n_canon": [int(canon.notna().sum())] * len(pdf),
-                    }
-                )
-
-        frontier = (
-            spark.range(n_rows)
-            .withColumn(
-                "url_canon",
-                F.format_string(
-                    "http://host%04d.example/bench/p%d", (F.col("id") % 1000), F.col("id")
-                ),
-            )
-            .withColumn("url_hash", F.xxhash64("url_canon"))
-            .repartition(cores * 4, "url_hash")
-        )
-        out = frontier.mapInPandas(
-            process,
-            "url_hash long, min_of_minhash long, simhash long, n_links int, n_canon int",
-        )
-        # warm python workers (pandas import, JIT) on a small slice first
-        out.limit(2000).write.mode("overwrite").format("noop").save()
-        t0 = time.time()
-        out.write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-    finally:
-        spark.stop()
+def usable_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the CPUs this process may run on; a count
+    below 1 raises ValueError naming the variable."""
+    return env_knob("SPARK_GRAFT_CPUS", positive_int, str(len(os.sched_getaffinity(0))))
 
 
-def bench_docproc(n_rows: int = 300_000, trials: int = 2) -> dict:
-    """Best-of-N per parallelism level: single-machine turbo/thermal state
-    makes individual runs noisy (±30% observed)."""
-    t8 = min(_run_docproc(8, n_rows) for _ in range(trials))
-    t32 = min(_run_docproc(32, n_rows) for _ in range(trials))
-    thr8, thr32 = n_rows / t8, n_rows / t32
+def scaling_probe(run_level, n: int, budget: float) -> dict:
+    """The one N→4N scaling probe (BASELINE.json north_rule): the same crawl
+    at n and at 4n cores. ``run_level(cores)`` runs it once and returns a
+    ``run_crawl`` summary.
+
+    The same-slot silicon ceiling goes first, so the efficiency can be read
+    against what the machine's cores deliver. The levels then run
+    interleaved 4n,n,n,4n and the best run per level counts: a shared
+    machine drifts between runs (the identical crawl measured 51 s cold and
+    22 s warm), and the mirrored order gives each level one early and one
+    late slot. The mirrored pair is skipped once ``budget`` seconds have
+    passed, so a slow machine still yields a result. The determinism flags
+    compare every run, whatever its speed."""
+    ceiling = silicon_ceiling(n)
+    n4 = 4 * n
+    t0 = time.time()
+    runs = []
+    for cores in (n4, n, n, n4):
+        if len(runs) >= 2 and time.time() - t0 > budget:
+            break
+        runs.append({"cores": cores, **run_level(cores)})
+
+    def best(cores: int) -> dict:
+        level = [r for r in runs if r["cores"] == cores]
+        return max(level, key=lambda r: r["throughput_urls_per_sec"])
+
+    eff = best(n4)["throughput_urls_per_sec"] / (4 * best(n)["throughput_urls_per_sec"])
     return {
-        "rows": n_rows,
-        "trials": trials,
-        "local8": {"wall_sec": round(t8, 2), "docs_per_sec": round(thr8, 1)},
-        "local32": {"wall_sec": round(t32, 2), "docs_per_sec": round(thr32, 1)},
-        "scaling_efficiency": round(thr32 / (4 * thr8), 3),
+        "levels": [n, n4],
+        "n": best(n),
+        "n4": best(n4),
+        "all_walls_sec": [r["wall_sec"] for r in runs],
+        "run_order": [r["cores"] for r in runs],
+        "hw_ceiling": ceiling,
+        "scaling_efficiency": round(eff, 3),
+        "efficiency_vs_hw_ceiling": round(eff / ceiling, 3),
+        "rounds_equal": len({r["rounds"] for r in runs}) == 1,
+        "fetched_equal": len({r["fetched"] for r in runs}) == 1,
+        "deduped_equal": len({r["deduped"] for r in runs}) == 1,
+        "seen_equal": len({r["seen"] for r in runs}) == 1,
     }
+
+
+def bench_big_crawl() -> dict:
+    """The headline probe: the big-round crawl at local[n] and local[4n],
+    n = max(1, cpus // 4), so the 4N level never oversubscribes a machine
+    of 4 CPUs or more. SPARK_GRAFT_BIGCRAWL_BUDGET bounds the probe."""
+    budget = env_knob("SPARK_GRAFT_BIGCRAWL_BUDGET", positive_float, "200")
+    return scaling_probe(crawl_at, max(1, usable_cpus() // 4), budget)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = env_knob("SPARK_GRAFT_CPUS", positive_int, "32")
-    # Parts execute in LISTED order. Default puts the contract headline
-    # (bigcrawl) FIRST: this VM's burst credits drain under sustained load
-    # (BASELINE.md), so whichever part runs first gets the most
-    # representative slot — that must be the metric the driver records.
-    # Run-order is recorded in BENCH_DETAIL.json for cross-round reads.
-    parts = os.environ.get(
-        "SPARK_GRAFT_BENCH_PARTS", "bigcrawl,queries,calibrate,docproc,crawl"
-    ).split(",")
-    # 540 -> 780 (round 5): in a drained credit slot the queries+bigcrawl
-    # prefix alone can exceed 540 s, which budget-skipped the LAST part
-    # ("crawl", the small determinism fixture the round-4 verdict asked to
-    # re-measure). The headline parts run first either way, so a larger
-    # budget only decides whether the tail parts land in the artifact.
+    cpus = usable_cpus()
+    # Parts execute in LISTED order, the headline (bigcrawl) first by
+    # default: a shared machine drifts under sustained load, so the first
+    # part gets the most representative slot. Later parts are skipped (and
+    # listed in skipped_parts) once the time budget runs out, so ONE JSON
+    # line always lands.
+    parts = os.environ.get("SPARK_GRAFT_BENCH_PARTS", "bigcrawl,queries").split(",")
     budget = env_knob("SPARK_GRAFT_BENCH_BUDGET", positive_float, "780")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
 
     t_start = time.time()
     result: dict = {}
-
-    def within_budget() -> bool:
-        return time.time() - t_start < budget
-
-    # parts run in the order listed (headline part first by default — see
-    # the parts comment above); later parts are skipped (and flagged) if the
-    # time budget runs out, so ONE JSON line always lands
     runners = {
-        "queries": ("queries", lambda: bench_queries(sf_dir, cpus)),
-        "calibrate": ("hardware_calibration", calibrate_hardware),
         "bigcrawl": ("big_crawl", bench_big_crawl),
-        "docproc": ("docproc_scaling", bench_docproc),
-        "crawl": ("crawl", bench_crawl),
+        "queries": ("queries", lambda: bench_queries(sf_dir, cpus)),
     }
     for p in parts:
-        if p in runners and within_budget():
+        if p in runners and time.time() - t_start < budget:
             key, fn = runners[p]
             result[key] = fn()
     result["part_run_order"] = [p for p in parts if p in runners]
     result["skipped_parts"] = [
-        p for p in parts
-        if p not in ("",)
-        and {"crawl": "crawl", "bigcrawl": "big_crawl",
-             "docproc": "docproc_scaling", "queries": "queries",
-             "calibrate": "hardware_calibration"}.get(p) not in result
+        p for p in parts if p and not (p in runners and runners[p][0] in result)
     ]
-    ceiling = result.get("hardware_calibration", {}).get(
-        "hardware_ceiling_efficiency"
-    )
-    for probe in ("big_crawl", "docproc_scaling"):
-        if ceiling and probe in result:
-            result[probe]["efficiency_vs_hw_ceiling"] = round(
-                result[probe]["scaling_efficiency"] / ceiling, 3
-            )
     total = round(time.time() - t_start, 2)
 
-    def _best_level(probe: dict) -> float | None:
-        vals = [
-            probe.get(lvl, {}).get("throughput_urls_per_sec")
-            for lvl in ("local32", "local8")
-        ]
-        vals = [v for v in vals if v]
-        return max(vals) if vals else None
-
-    # headline = best level of the big-round crawl: this VM's credit
-    # throttle is WIDTH-ASYMMETRIC (a 32-wide run drains burst credits ~4x
-    # faster), so in a drained state local[32] loses wall-clock it would
-    # not lose on real hardware; the per-level numbers stay in the JSON for
-    # inspection and the determinism fields cover every run.
+    # headline = the better level of the big-round crawl; the per-level
+    # numbers stay in the JSON and the determinism fields cover every run
+    big = result.get("big_crawl")
     value = (
-        _best_level(result.get("big_crawl", {}))
-        or _best_level(result.get("crawl", {}))
-        or result.get("docproc_scaling", {}).get("local32", {}).get(
-            "docs_per_sec", total
-        )
+        max(big[k]["throughput_urls_per_sec"] for k in ("n", "n4")) if big else total
     )
     # Full detail goes to a FILE; the stdout line stays compact. The driver
     # keeps only the last ~2000 chars of stdout, and round 2's all-in-one
     # line outgrew that window (BENCH_r02.json parsed: null) — the headline
     # must survive the tail capture, so everything nested lives in
     # BENCH_DETAIL.json next to this script and the line carries only the
-    # contract fields + per-query seconds + one-level scaling summaries.
+    # contract fields + per-query seconds + the scaling summary.
     detail = {
         "metric": "urls_fetched_deduped_per_sec",
         "value": value,
         "unit": "urls/sec",
         "suite_sec": total,
-        "unit_note": "value = URLs fetched+deduped/sec, best parallelism "
-        "level of the big-round crawl (credit-throttled VM punishes wide "
-        "runs in drained states — see BASELINE.md; per-level numbers and "
-        "scaling efficiency are under big_crawl). Falls back to the small "
-        "crawl, then docproc docs/sec, if budget-skipped",
+        "unit_note": "value = URLs fetched+deduped/sec, better level of the "
+        "big-round crawl (per-level numbers and scaling efficiency are under "
+        "big_crawl); the suite seconds if that part is skipped",
         "sf": sf,
         **result,
     }
@@ -542,28 +359,13 @@ def main() -> None:
     print(build_compact_line(result, value, total, sf))
 
 
-def _compact_probe(probe: dict, thr_key: str) -> dict:
-    out = {}
-    for lvl in ("local8", "local32"):
-        v = probe.get(lvl, {}).get(thr_key)
-        if v is not None:
-            out[lvl] = v
-    for k in ("scaling_efficiency", "efficiency_vs_hw_ceiling"):
-        if k in probe:
-            out[k] = probe[k]
-    det = [probe.get(k) for k in ("rounds_equal", "fetched_equal", "seen_equal")]
-    if any(d is not None for d in det):
-        out["deterministic"] = all(det)
-    return out
-
-
 def build_compact_line(result: dict, value, total, sf) -> str:
     """The single stdout JSON line the driver parses. MUST stay under ~1900
     chars (the driver keeps only the last ~2000 chars of stdout — round 2's
     all-in-one line exceeded that and the headline went unrecorded), so it
-    carries only the contract fields, per-query seconds, and one-level
-    probe summaries; everything nested lives in BENCH_DETAIL.json. Pinned
-    by tests/test_bench_line.py."""
+    carries only the contract fields, per-query seconds, and the scaling
+    summary; everything nested lives in BENCH_DETAIL.json. Pinned by
+    tests/test_bench_line.py."""
     line = {
         "metric": "urls_fetched_deduped_per_sec",
         "value": value,
@@ -574,17 +376,17 @@ def build_compact_line(result: dict, value, total, sf) -> str:
         "detail_file": "BENCH_DETAIL.json",
     }
     if "big_crawl" in result:
-        line["big_crawl"] = _compact_probe(
-            result["big_crawl"], "throughput_urls_per_sec"
-        )
-    if "crawl" in result:
-        line["crawl"] = _compact_probe(result["crawl"], "throughput_urls_per_sec")
-    if "docproc_scaling" in result:
-        line["docproc"] = _compact_probe(result["docproc_scaling"], "docs_per_sec")
-    if "hardware_calibration" in result:
-        line["hw_ceiling"] = result["hardware_calibration"][
-            "hardware_ceiling_efficiency"
-        ]
+        probe = result["big_crawl"]
+        line["big_crawl"] = {
+            "levels": probe["levels"],
+            "n": probe["n"]["throughput_urls_per_sec"],
+            "n4": probe["n4"]["throughput_urls_per_sec"],
+            "scaling_efficiency": probe["scaling_efficiency"],
+            "efficiency_vs_hw_ceiling": probe["efficiency_vs_hw_ceiling"],
+            "deterministic": all(
+                probe[f"{k}_equal"] for k in ("rounds", "fetched", "deduped", "seen")
+            ),
+        }
     if result.get("skipped_parts"):
         line["skipped_parts"] = result["skipped_parts"]
     encoded = json.dumps(line)

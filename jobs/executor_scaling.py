@@ -2,15 +2,14 @@
 
 BASELINE.json's north_rule asks for throughput scaling efficiency >= 0.8
 between N and 4N *executors*. bench.py's big-crawl probe approximates that
-with thread counts inside ONE JVM; this probe runs the SAME big-round crawl
-on Spark's `local-cluster[n, cores, mem]` master — n real executor JVMs
-with their own memory, python workers, netty shuffle and broadcast — at
-n=1 and n=4 executors. Each executor gets max(1, cpus // 4) cores, where
-cpus is SPARK_GRAFT_CPUS or else the CPUs this process may run on, so the
-4N level fills the machine without oversubscribing it. That is as close
-to a real two-size cluster as one machine can get; the remaining gap is
-that all executor JVMs share its cores, which is why runs are interleaved
-(4,1,1,4 executors) best-of-2 like bench.py.
+with task slots inside ONE JVM; this script runs the same probe
+(``bench.scaling_probe``: same-slot silicon ceiling first, then levels
+interleaved 4N,N,N,4N, best of 2 per level, budget-guarded) on Spark's
+`local-cluster[n, cores, mem]` master — real executor JVMs with their own
+memory, python workers, netty shuffle and broadcast — at 1 and 4
+executors. Each executor gets max(1, cpus // 4) cores (cpus from
+``bench.usable_cpus``), so the 4N level fills the machine without
+oversubscribing it.
 
 The package ships to executors via addPyFile(zip) — nothing relies on the
 repo being on the executors' filesystem path (same discipline as
@@ -20,14 +19,11 @@ jobs/submit_demo.sh).
 per-URL CPU burn inside the distributed fetch stage with ZERO output
 effect (test_fetch_cpu_work_does_not_change_results) — the realistic
 parallel fraction that separates the engine's scaling from the machine's
-fixed per-round cost. `--work 0` reproduces the round-3/4 bare probe. The
-same-slot mp.Pool silicon ceiling (cores → 4*cores processes) is measured
-FIRST so the efficiency can be read against what the machine's cores can
-physically deliver.
+fixed per-round cost. `--work 0` is the bare crawl bench.py runs.
 
 Usage: python jobs/executor_scaling.py [--budget SEC] [--work N]
                                        [--seeds S] [--hosts H]
-Prints one JSON line: per-level throughput, scaling efficiency, the
+Prints one JSON line: the probe's per-level runs, scaling efficiency, the
 same-slot silicon ceiling, determinism.
 """
 
@@ -39,12 +35,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-from bench import make_spark, run_crawl, silicon_ceiling  # noqa: E402
+from bench import crawl_at, scaling_probe, usable_cpus  # noqa: E402
 from crawlspark.config import (  # noqa: E402
     non_negative_float,
     non_negative_int,
@@ -62,38 +57,13 @@ def _make_pyfiles_zip() -> str:
 
 
 def run_level(
-    n_executors: int, cores_per_exec: int, zip_path: str, work: int,
-    seeds_n: int, hosts: int,
+    cores: int, cores_per_exec: int, zip_path: str, work: int, seeds: int, hosts: int
 ) -> dict:
-    from crawlspark.config import CrawlConfig
-    from crawlspark.sources import synthweb
-
-    total_cores = n_executors * cores_per_exec
-    cfg = CrawlConfig(
-        max_depth=3,
-        max_rounds=8,
-        web_hosts=hosts,
-        round_seconds=1e9,
-        shuffle_partitions=max(8, total_cores),
-        # realistic per-URL parallel fraction; outputs byte-identical at
-        # any value. Fetch partitions auto-size from it
-        # (engine._fetch_rows_target), so heavy rounds saturate width.
-        fetch_cpu_work=work,
+    """One crawl on ``cores // cores_per_exec`` executor JVMs."""
+    master = f"local-cluster[{cores // cores_per_exec},{cores_per_exec},4096]"
+    return crawl_at(
+        cores, master, seeds=seeds, hosts=hosts, work=work, py_file=zip_path
     )
-    spark = make_spark(
-        f"local-cluster[{n_executors},{cores_per_exec},4096]", cfg.shuffle_partitions
-    )
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-        with tempfile.TemporaryDirectory(
-            prefix=f"execscale-{n_executors}x{cores_per_exec}-"
-        ) as root:
-            _, summary = run_crawl(
-                spark, cfg, synthweb.seed_list(cfg, n=seeds_n), root
-            )
-    finally:
-        spark.stop()
-    return {"executors": n_executors, "cores_per_executor": cores_per_exec, **summary}
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -102,7 +72,7 @@ def main(argv: list[str] | None = None) -> None:
                     help="skip the mirrored pair past this many seconds")
     ap.add_argument("--work", type=non_negative_int, default=2000,
                     help="fetch_cpu_work (~2 us per unit per URL); 0 = the "
-                    "bare round-3/4 probe")
+                    "bare crawl")
     # a smaller web x heavier per-URL work holds total compute (seconds of
     # distributed burn) constant while shrinking the rows every fixed-cost
     # stage (shuffles, windows, sinks) must push — i.e. it raises the
@@ -112,50 +82,23 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--hosts", type=positive_int, default=2000)
     args = ap.parse_args(argv)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    cores_per_exec = max(1, cpus // 4)  # the 4N level fills the machine
-    _, _, ceiling = silicon_ceiling(cores_per_exec)  # same slot, FIRST
+    n = max(1, usable_cpus() // 4)  # cores per executor
     zip_path = _make_pyfiles_zip()
-    t0 = time.time()
-    runs = []
-    # interleaved 4,1,1,4 (wide first = freshest credits to the level the
-    # throttle punishes hardest), best-of-2 per level, budget-guarded
-    for n in (4, 1, 1, 4):
-        if len(runs) >= 2 and time.time() - t0 > args.budget:
-            break
-        runs.append(
-            run_level(n, cores_per_exec, zip_path, args.work,
-                      seeds_n=args.seeds, hosts=args.hosts)
-        )
-    by = lambda n: [r for r in runs if r["executors"] == n]  # noqa: E731
-    best = {
-        n: max(by(n), key=lambda r: r["throughput_urls_per_sec"])
-        for n in (1, 4) if by(n)
-    }
-    out: dict = {
+    probe = scaling_probe(
+        lambda cores: run_level(
+            cores, n, zip_path, args.work, args.seeds, args.hosts
+        ),
+        n,
+        args.budget,
+    )
+    print(json.dumps({
         "mode": "local-cluster (separate executor JVMs, netty shuffle)",
         "work": args.work,
         "seeds": args.seeds,
         "hosts": args.hosts,
-        "silicon_ceiling": {
-            "procs": [cores_per_exec, 4 * cores_per_exec],
-            "ceiling_efficiency": ceiling,
-        },
-        "n_executors": best.get(1),
-        "n4_executors": best.get(4),
-        "all_walls_sec": [r["wall_sec"] for r in runs],
-        "run_order_executors": [r["executors"] for r in runs],
-        "rounds_equal": len({r["rounds"] for r in runs}) == 1,
-        "fetched_equal": len({r["fetched"] for r in runs}) == 1,
-        "seen_equal": len({r["seen"] for r in runs}) == 1,
-    }
-    if 1 in best and 4 in best:
-        eff = best[4]["throughput_urls_per_sec"] / (
-            4 * best[1]["throughput_urls_per_sec"]
-        )
-        out["scaling_efficiency_1_to_4_executors"] = round(eff, 3)
-        out["efficiency_vs_silicon_ceiling"] = round(eff / ceiling, 3)
-    print(json.dumps(out))
+        "cores_per_executor": n,
+        **probe,
+    }))
 
 
 if __name__ == "__main__":

@@ -22,7 +22,7 @@ crawls ~10^7 URLs), so per-URL cost can be compared across 10^5 / 10^6 /
 design point.
 
 Usage:
-    python jobs/scale_demo.py [--skew-only | --balanced-only] [--cores 32]
+    python jobs/scale_demo.py [--skew-only | --balanced-only] [--cores C]
                               [--hosts H] [--seeds S] [--maintenance]
 """
 
@@ -44,7 +44,7 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-from bench import make_spark, run_crawl  # noqa: E402
+from bench import make_spark, run_crawl, usable_cpus  # noqa: E402
 from crawlspark.config import positive_int  # noqa: E402
 
 
@@ -108,7 +108,9 @@ def run_demo(
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=positive_int, default=32)
+    ap.add_argument("--cores", type=positive_int,
+                    help="task slots (default: SPARK_GRAFT_CPUS, else the "
+                    "CPUs this process may run on)")
     ap.add_argument("--skew-only", action="store_true")
     ap.add_argument("--balanced-only", action="store_true")
     # order-of-magnitude sweep knobs: 10x both (--hosts 100000 --seeds
@@ -127,6 +129,7 @@ def main(argv: list[str] | None = None) -> None:
         "hot-host file skew too)",
     )
     args = ap.parse_args(argv)
+    args.cores = args.cores or usable_cpus()
 
     def check_maintenance_twin(name: str, results: dict) -> None:
         plain, maint = results[name], results[f"{name}_maintenance"]

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 
@@ -11,8 +9,10 @@ import pytest
 def spark():
     from pyspark.sql import SparkSession
 
+    from bench import usable_cpus
+
     # one task slot per CPU this process may use
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cores = usable_cpus()
     s = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("crawlspark-tests")

@@ -19,32 +19,25 @@ def _fat_result() -> dict:
         f"a_quite_long_query_name_number_{i:02d}": round(123.456 + i, 3)
         for i in range(50)
     }
-    probe = {
-        "local8": {"throughput_urls_per_sec": 4215.7, "wall_sec": 37.01,
-                   "fetched": 133641, "seen": 147253, "rounds": 4},
-        "local32": {"throughput_urls_per_sec": 5136.2, "wall_sec": 29.23,
-                    "fetched": 133641, "seen": 147253, "rounds": 4},
-        "all_walls_sec": [29.2, 37.0, 35.6, 31.7],
-        "run_order_cores": [32, 8, 8, 32],
-        "scaling_efficiency": 0.305,
-        "efficiency_vs_hw_ceiling": 0.345,
-        "rounds_equal": True,
-        "fetched_equal": True,
-        "seen_equal": True,
-    }
     return {
         "queries": queries,
-        "big_crawl": dict(probe),
-        "crawl": dict(probe),
-        "docproc_scaling": {
-            "local8": {"docs_per_sec": 15000.1},
-            "local32": {"docs_per_sec": 33300.9},
-            "scaling_efficiency": 0.53,
-            "efficiency_vs_hw_ceiling": 0.67,
-        },
-        "hardware_calibration": {
-            "hardware_ceiling_efficiency": 0.806,
-            "raw": {"n8": 1.0, "n32": 0.8},
+        "big_crawl": {
+            "levels": [8, 32],
+            "n": {"cores": 8, "throughput_urls_per_sec": 4215.7,
+                  "wall_sec": 37.01, "fetched": 133641, "seen": 147253,
+                  "rounds": 4},
+            "n4": {"cores": 32, "throughput_urls_per_sec": 5136.2,
+                   "wall_sec": 29.23, "fetched": 133641, "seen": 147253,
+                   "rounds": 4},
+            "all_walls_sec": [29.2, 37.0, 35.6, 31.7],
+            "run_order": [32, 8, 8, 32],
+            "hw_ceiling": 0.884,
+            "scaling_efficiency": 0.305,
+            "efficiency_vs_hw_ceiling": 0.345,
+            "rounds_equal": True,
+            "fetched_equal": True,
+            "deduped_equal": True,
+            "seen_equal": True,
         },
         "skipped_parts": [],
     }
@@ -63,8 +56,9 @@ def test_compact_line_headline_fields_parse():
     assert d["unit"] == "urls/sec"
     assert d["sf"] == 0.1
     # scaling evidence for the contract's two-cluster-size criterion
-    assert d["big_crawl"]["local8"] == 4215.7
-    assert d["big_crawl"]["local32"] == 5136.2
+    assert d["big_crawl"]["levels"] == [8, 32]
+    assert d["big_crawl"]["n"] == 4215.7
+    assert d["big_crawl"]["n4"] == 5136.2
     assert d["big_crawl"]["scaling_efficiency"] == 0.305
     assert d["big_crawl"]["deterministic"] is True
 
@@ -124,7 +118,7 @@ def test_bad_env_knob_is_rejected_by_name(monkeypatch, tmp_path, name, text):
     def no_crawl(*args, **kwargs):
         raise AssertionError(f"{name}={text!r} reached a crawl")
 
-    monkeypatch.setattr(bench, "_crawl_at", no_crawl)
+    monkeypatch.setattr(bench, "crawl_at", no_crawl)
     run = bench.bench_big_crawl if name == "SPARK_GRAFT_BIGCRAWL_BUDGET" else bench.main
     with pytest.raises(ValueError, match=name):
         run()

@@ -90,3 +90,24 @@ def test_job_rejects_out_of_range_values(monkeypatch, capsys, name, flag, value,
         job.main([*argv, flag, value])
     assert exc.value.code == 2
     assert f"{flag}: {message}" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("text", ["0", "-3", "four"])
+def test_executor_scaling_rejects_bad_cpu_count(monkeypatch, text):
+    """SPARK_GRAFT_CPUS went through a bare ``int()``: ``0`` and ``-3``
+    silently ran 1-core executors and ``four`` died with an error that did
+    not name the variable. It must stop before the silicon burn or any Spark
+    work with an error naming the variable."""
+    import bench
+
+    job = _load_job(monkeypatch, "executor_scaling")
+
+    def no_work(*args, **kwargs):
+        raise AssertionError(f"SPARK_GRAFT_CPUS={text!r} reached the probe")
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", text)
+    monkeypatch.setattr(bench, "silicon_ceiling", no_work)
+    monkeypatch.setattr(job, "run_level", no_work)
+    monkeypatch.setattr(job, "_make_pyfiles_zip", no_work)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        job.main([])
