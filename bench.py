@@ -114,6 +114,10 @@ def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
     try:
         for name in names:
             df = q[name](spark, sf_dir)
+            # one untimed run first: a query's first execution in the JVM
+            # carries codegen, JIT and worker warm-up (url_canonicalize read
+            # ~2x in a cold session), not the operator
+            df.write.mode("overwrite").format("noop").save()
             t0 = time.time()
             df.write.mode("overwrite").format("noop").save()
             out[name] = round(time.time() - t0, 3)
@@ -219,27 +223,44 @@ def crawl_at(
 
 
 def silicon_ceiling(n: int) -> float:
-    """The MACHINE's own n→4n process-parallel scaling ceiling, from a
-    2-second pure-python CPU burn per process in an mp.Pool (no Spark):
-    the efficiency (w4n / wn) / 4, where wk is the work units k processes
-    do. On SMT hardware the ceiling is well below 1.0, and Spark cannot
-    scale better than the silicon under it."""
+    """The MACHINE's own n→4n process-parallel scaling ceiling, from
+    pure-python CPU burns (``pool_burn``, no Spark): the efficiency
+    (w4n / wn) / 4, where wk is the work units k processes do. On SMT
+    hardware the ceiling is well below 1.0, and Spark cannot scale better
+    than the silicon under it. A shared machine slows single burns, so the
+    levels run interleaved n, 4n, 4n, n and the best burn per level counts
+    (``scaling_probe``'s rule): one burn per level read 0.64-1.33 here."""
+    work = {n: 0, 4 * n: 0}
+    for k in (n, 4 * n, 4 * n, n):
+        work[k] = max(work[k], pool_burn(k))
+    return round(work[4 * n] / work[n] / 4, 3)
+
+
+def pool_burn(k: int, seconds: float = 2.0) -> int:
+    """Work units ``k`` processes do in one shared ``seconds``-long window:
+    each counts loop turns, and a barrier starts every count once all
+    ``k`` processes are up, so start-up does not overlap the window."""
     import multiprocessing as mp
 
-    def measure(k: int) -> int:
-        with mp.Pool(k) as p:
-            return int(sum(p.map(_burn, [2.0] * k)))
+    ctx = mp.get_context("spawn")
+    barrier, done = ctx.Barrier(k), ctx.Queue()
+    procs = [ctx.Process(target=_burn, args=(seconds, barrier, done)) for _ in range(k)]
+    for p in procs:
+        p.start()
+    try:
+        return sum(done.get(timeout=60 + seconds) for _ in procs)
+    finally:
+        for p in procs:
+            p.join(timeout=10)
 
-    wn = measure(n)
-    return round(measure(4 * n) / wn / 4, 3)
 
-
-def _burn(seconds: float) -> int:
+def _burn(seconds: float, barrier, done) -> None:
+    barrier.wait(timeout=60)
     t0 = time.time()
     x = 0
     while time.time() - t0 < seconds:
         x += 1
-    return x
+    done.put(x)
 
 
 def usable_cpus() -> int:

@@ -79,13 +79,25 @@ DISCOVERY_ORDER = [
 _DISCOVERY_SQL = ", ".join(DISCOVERY_ORDER)
 FRONTIER_COLS = TABLE_SCHEMAS["frontier"].names
 
-# Adaptive fetch-stage parallelism: the mapInPandas fetch repartitions to
-# ceil(frontier_size / rows target), clamped to [4, shuffle_partitions]; the
-# target is this many rows unless per-URL work is heavy (_fetch_rows_target).
-# Python-stage tasks carry real per-task cost (worker attach + Arrow setup),
-# so small rounds want few fat partitions — measured 2.4x round latency from
-# oversizing — while big rounds open up to the full shuffle_partitions. AQE
-# cannot re-plan Python stages.
+# Two partition counts per round, both sized from the frontier size the
+# previous manifest records (no counting job). Every task carries fixed cost
+# (scheduling, a shuffle-block fetch per map output, a file per sink task),
+# and most round tasks hold a few hundred rows.
+#
+# The round's JVM width — its windows, joins and groupBy (the session's
+# shuffle partitions), the next-frontier sink and the counter union — is
+# one wave on the task slots until rows outgrow JVM_ROWS_PER_TASK per task,
+# capped at shuffle_partitions (CrawlEngine._set_width). A second wave of
+# few-millisecond tasks only adds fixed cost: a traced polite round ran 92
+# tasks at two waves and 45 at one.
+JVM_ROWS_PER_TASK = 20_000
+# The mapInPandas fetch repartitions to ceil(frontier_size / rows target),
+# clamped to [4, shuffle_partitions]; the target is this many rows unless
+# per-URL work is heavy (_fetch_rows_target). Python-stage tasks carry more
+# per-task cost (worker attach + Arrow setup), so small rounds want few fat
+# partitions — measured 2.4x round latency from oversizing — while big
+# rounds open up to the full shuffle_partitions. AQE cannot re-plan Python
+# stages.
 FETCH_ROWS_PER_PARTITION = 2000
 
 # mapInPandas fetch output: spans come back as parallel primitive arrays and
@@ -178,6 +190,21 @@ class CrawlEngine:
         # R2 robots match over the joined dim's rules: round-invariant, and
         # building it is ~410 py4j round trips, so it is built once here
         self._allowed = allowed_col(path_col(F.col("url_canon")), F.col("rules"))
+        # task slots of the session, read once (py4j round trips per read)
+        self._slots = spark.sparkContext.defaultParallelism
+
+    def _set_width(self, rows: int) -> int:
+        """Set and return the shuffle width for a plan over ``rows`` frontier
+        rows: one wave on the task slots, opened past it at
+        JVM_ROWS_PER_TASK rows per task and capped at shuffle_partitions.
+        Results are partition-count invariant (pinned by
+        test_pagerank_mode_partitioning_invariance)."""
+        width = min(
+            self.cfg.shuffle_partitions,
+            max(self._slots, -(-rows // JVM_ROWS_PER_TASK)),
+        )
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        return width
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
@@ -262,7 +289,9 @@ class CrawlEngine:
     def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
         """Seed list → frontier rows: canonicalized, depth 0 / priority 0.0,
         discovered in round ``rnd``, first-wins deduplicated by seed
-        position (``d_rank``)."""
+        position (``d_rank``); the window's width is sized from the seed
+        count."""
+        self._set_width(len(seeds))
         fr = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
         )
@@ -377,21 +406,12 @@ class CrawlEngine:
 
         frontier = self.storage.read_round("frontier", rnd - 1)
 
-        # Size this round's shuffle width from the (already known) frontier
-        # size: every job barrier costs latency proportional to task count,
-        # and small rounds at full configured width are pure scheduling
-        # overhead (a 1.4k-URL round does not need 32-partition windows).
-        # At cluster scale rounds are large and this clamps to the
-        # configured width. Applies to window/join/groupBy stages planned
-        # this round; results are partition-count invariant (pinned by the
-        # cross-parallelism determinism tests).
+        # This round's JVM width, from the frontier size the previous
+        # manifest records: it sizes every window, join and groupBy planned
+        # below, and the frontier sink and counter union coalesce to it.
         prev_m = self.storage.manifest(rnd - 1) or {}
         approx = _next_frontier_size(prev_m) or 0
-        round_parts = max(
-            8,
-            min(cfg.shuffle_partitions, -(-approx * 4 // FETCH_ROWS_PER_PARTITION)),
-        )
-        sp.conf.set("spark.sql.shuffle.partitions", str(round_parts))
+        width = self._set_width(approx)
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
         fr = self._admission_frame(frontier, rnd).persist()
@@ -457,9 +477,10 @@ class CrawlEngine:
         ).persist()
 
         # S3 documents append (contract schema + bookkeeping)
-        docs = fetched.withColumn("spans", F.expr(_SPANS_EXPR)).selectExpr(
+        # (content_sha2 reads ``spans`` as a lateral alias of this projection)
+        docs = fetched.selectExpr(
             "url_canon AS doc_id",
-            "spans",
+            f"{_SPANS_EXPR} AS spans",
             "url_hash",
             "host",
             "host_hash",
@@ -594,7 +615,8 @@ class CrawlEngine:
             next_frontier = next_frontier.unionByName(
                 fr.filter("is_banned").selectExpr(*FRONTIER_COLS)
             )
-        next_frontier = next_frontier.unionByName(new)
+        # one sink task per width slot, not one per partition of each part
+        next_frontier = next_frontier.unionByName(new).coalesce(width)
 
         # G1 counters: ONE groupBy(host_hash) sum over the round's cached
         # frames gives every RoundMetrics counter per host-hash bucket. Its
@@ -619,6 +641,7 @@ class CrawlEngine:
             .unionByName(flags(cand_rows, candidates="true"))
             .unionByName(flags(new, new_urls="true"))
             .unionByName(flags(deferred, skipped_politeness="true"))
+            .coalesce(width)
             .groupBy("host_hash")
             .agg(*[F.expr(f"sum({c}) AS {c}") for c in COUNTERS])
         )
@@ -763,9 +786,9 @@ def _fetch_rows_target(cfg: CrawlConfig) -> int:
     calibration (~2 us per unit per URL, BASELINE.md's round-5
     parallel-fraction probe), floored at 8 rows so pathological work levels
     never degenerate to 1-row tasks.
-    Pure sizing: partition count never changes results (pinned by the
-    cross-parallelism determinism tests and
-    test_fetch_cpu_work_does_not_change_results)."""
+    Pure sizing: partition count never changes results
+    (test_pagerank_mode_partitioning_invariance crawls at JVM width 1 with
+    a 4-partition fetch, and with both widths opened to 13)."""
     if cfg.fetch_cpu_work <= 0:
         return FETCH_ROWS_PER_PARTITION
     target_us = 100_000.0  # >= 100 ms of work per partition

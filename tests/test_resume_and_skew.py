@@ -135,12 +135,18 @@ def test_hot_domain_skew_equality(spark, tmp_path):
     assert counts.get("host00.example", 0) >= 0.3 * sum(counts.values())
 
 
-def test_pagerank_mode_partitioning_invariance(spark, tmp_path):
+def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
     """The "pagerank" priority ranks with exact fixed-point-integer math,
     which the module docstring claims is bit-identical across
-    partitionings — pin it IN THE LOOP: the same pagerank-mode crawl at
-    shuffle width 4 and an awkward prime width 13 must produce
-    byte-identical seen and documents tables (order, clock, spans)."""
+    partitionings — pin it IN THE LOOP: the same pagerank-mode crawl with
+    its windows, joins and sinks one partition wide (the fetch at its
+    4-partition floor) and with every shuffle up to an awkward prime 13
+    wide must produce byte-identical seen and documents tables (order,
+    clock, spans). This fixture's frontiers hold at most a few
+    hundred rows, so the wide crawl lowers JVM_ROWS_PER_TASK and
+    FETCH_ROWS_PER_PARTITION to one row: its JVM width opens past the task
+    slots to the 13 cap, and its fetch past the 4-partition floor."""
+    import crawlspark.engine as engine
 
     def state(width: int, sub: str):
         cfg = CrawlConfig(
@@ -150,7 +156,17 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path):
         )
         seeds = synthweb.seed_list(cfg, n=20)
         store = CrawlStorage(spark, tmp_path / sub)
-        summary = CrawlEngine(spark, cfg, store).run(seeds)
+        eng = CrawlEngine(spark, cfg, store)
+        widths = []
+        run_round = eng.run_round
+
+        def recording_round(rnd):
+            m = run_round(rnd)
+            widths.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
+            return m
+
+        eng.run_round = recording_round
+        summary = eng.run(seeds)
         seen = sorted(
             (r["url_hash"], r["url_canon"], r["round"])
             for r in store.read_table("seen").collect()
@@ -160,9 +176,16 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path):
              r["doc_id"], str(r["spans"]))
             for r in store.read_table("documents").collect()
         )
-        return summary["totals"], summary["rounds"], seen, docs
+        return widths, (summary["totals"], summary["rounds"], seen, docs)
 
-    assert state(4, "w4") == state(13, "w13")
+    narrow_widths, narrow = state(1, "w1")
+    monkeypatch.setattr(engine, "JVM_ROWS_PER_TASK", 1)
+    monkeypatch.setattr(engine, "FETCH_ROWS_PER_PARTITION", 1)
+    wide_widths, wide = state(13, "w13")
+    assert narrow_widths == [1] * len(narrow_widths)
+    assert len(wide_widths) == len(narrow_widths)
+    assert all(w > 1 for w in wide_widths) and 13 in wide_widths, wide_widths
+    assert narrow == wide
 
 
 def test_deletable_ban_equality(spark, tmp_path):

@@ -1,5 +1,6 @@
 """bench.scaling_probe, the one N→4N probe behind bench.py's big crawl and
-jobs/executor_scaling.py, driven by a fake crawl: no Spark, no CPU burn."""
+jobs/executor_scaling.py, driven by a fake crawl, and its silicon ceiling
+driven by a fake burn: no Spark, and one 0.05-second burn."""
 
 from __future__ import annotations
 
@@ -71,6 +72,23 @@ def test_big_crawl_levels_follow_the_cpu_count(monkeypatch, no_burn, cpus, level
     out = bench.bench_big_crawl()
     assert out["levels"] == levels
     assert out["run_order"][:2] == [levels[1], levels[0]]
+
+
+def test_silicon_ceiling_interleaves_levels_and_keeps_best_burn(monkeypatch):
+    calls: list[int] = []
+    burns = {1: [100, 130], 4: [360, 440]}
+
+    def fake_burn(k: int) -> int:
+        calls.append(k)
+        return burns[k].pop(0)
+
+    monkeypatch.setattr(bench, "pool_burn", fake_burn)
+    assert bench.silicon_ceiling(1) == round(440 / 130 / 4, 3)
+    assert calls == [1, 4, 4, 1]
+
+
+def test_pool_burn_counts_in_spawned_processes():
+    assert bench.pool_burn(2, seconds=0.05) > 0
 
 
 def test_cpu_count_defaults_to_the_affinity_set(monkeypatch):
