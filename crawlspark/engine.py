@@ -79,25 +79,26 @@ DISCOVERY_ORDER = [
 _DISCOVERY_SQL = ", ".join(DISCOVERY_ORDER)
 FRONTIER_COLS = TABLE_SCHEMAS["frontier"].names
 
-# Two partition counts per round, both sized from the frontier size the
-# previous manifest records (no counting job). Every task carries fixed cost
+# Two partition counts per round. Every task carries fixed cost
 # (scheduling, a shuffle-block fetch per map output, a file per sink task),
 # and most round tasks hold a few hundred rows.
 #
 # The round's JVM width — its windows, joins and groupBy (the session's
 # shuffle partitions), the next-frontier sink and the counter union — is
-# one wave on the task slots until rows outgrow JVM_ROWS_PER_TASK per task,
-# capped at shuffle_partitions (CrawlEngine._set_width). A second wave of
-# few-millisecond tasks only adds fixed cost: a traced polite round ran 92
-# tasks at two waves and 45 at one.
-JVM_ROWS_PER_TASK = 20_000
+# one wave on the task slots, capped at shuffle_partitions
+# (CrawlEngine._width). A second wave only adds fixed cost: a traced polite
+# round ran 92 tasks at two waves and 45 at one, and bench.py's big crawl
+# (rounds of 10^4-10^5 URLs) ran 8% faster at 4 partitions on 4 slots
+# than at 8.
+#
 # The mapInPandas fetch repartitions to ceil(frontier_size / rows target),
-# clamped to [4, shuffle_partitions]; the target is this many rows unless
-# per-URL work is heavy (_fetch_rows_target). Python-stage tasks carry more
-# per-task cost (worker attach + Arrow setup), so small rounds want few fat
-# partitions — measured 2.4x round latency from oversizing — while big
-# rounds open up to the full shuffle_partitions. AQE cannot re-plan Python
-# stages.
+# sized from the frontier size the previous manifest records (no counting
+# job) and clamped to [4, shuffle_partitions]; the target is this many rows
+# unless per-URL work is heavy (_fetch_rows_target). Python-stage tasks
+# carry more per-task cost (worker attach + Arrow setup), so small rounds
+# want few fat partitions — measured 2.4x round latency from oversizing —
+# while big rounds open up to the full shuffle_partitions. AQE cannot
+# re-plan Python stages.
 FETCH_ROWS_PER_PARTITION = 2000
 
 # mapInPandas fetch output: spans come back as parallel primitive arrays and
@@ -190,21 +191,11 @@ class CrawlEngine:
         # R2 robots match over the joined dim's rules: round-invariant, and
         # building it is ~410 py4j round trips, so it is built once here
         self._allowed = allowed_col(path_col(F.col("url_canon")), F.col("rules"))
-        # task slots of the session, read once (py4j round trips per read)
-        self._slots = spark.sparkContext.defaultParallelism
-
-    def _set_width(self, rows: int) -> int:
-        """Set and return the shuffle width for a plan over ``rows`` frontier
-        rows: one wave on the task slots, opened past it at
-        JVM_ROWS_PER_TASK rows per task and capped at shuffle_partitions.
-        Results are partition-count invariant (pinned by
-        test_pagerank_mode_partitioning_invariance)."""
-        width = min(
-            self.cfg.shuffle_partitions,
-            max(self._slots, -(-rows // JVM_ROWS_PER_TASK)),
-        )
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        return width
+        # the round's JVM width: one wave on the session's task slots
+        # (read once: each read is py4j round trips), capped at
+        # shuffle_partitions. Results are partition-count invariant (pinned
+        # by test_pagerank_mode_partitioning_invariance).
+        self._width = min(cfg.shuffle_partitions, spark.sparkContext.defaultParallelism)
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
@@ -289,9 +280,8 @@ class CrawlEngine:
     def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
         """Seed list → frontier rows: canonicalized, depth 0 / priority 0.0,
         discovered in round ``rnd``, first-wins deduplicated by seed
-        position (``d_rank``); the window's width is sized from the seed
-        count."""
-        self._set_width(len(seeds))
+        position (``d_rank``), the window at the round's JVM width."""
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(self._width))
         fr = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
         )
@@ -406,12 +396,11 @@ class CrawlEngine:
 
         frontier = self.storage.read_round("frontier", rnd - 1)
 
-        # This round's JVM width, from the frontier size the previous
-        # manifest records: it sizes every window, join and groupBy planned
+        # The round's JVM width sizes every window, join and groupBy planned
         # below, and the frontier sink and counter union coalesce to it.
+        sp.conf.set("spark.sql.shuffle.partitions", str(self._width))
         prev_m = self.storage.manifest(rnd - 1) or {}
         approx = _next_frontier_size(prev_m) or 0
-        width = self._set_width(approx)
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
         fr = self._admission_frame(frontier, rnd).persist()
@@ -616,7 +605,7 @@ class CrawlEngine:
                 fr.filter("is_banned").selectExpr(*FRONTIER_COLS)
             )
         # one sink task per width slot, not one per partition of each part
-        next_frontier = next_frontier.unionByName(new).coalesce(width)
+        next_frontier = next_frontier.unionByName(new).coalesce(self._width)
 
         # G1 counters: ONE groupBy(host_hash) sum over the round's cached
         # frames gives every RoundMetrics counter per host-hash bucket. Its
@@ -641,7 +630,7 @@ class CrawlEngine:
             .unionByName(flags(cand_rows, candidates="true"))
             .unionByName(flags(new, new_urls="true"))
             .unionByName(flags(deferred, skipped_politeness="true"))
-            .coalesce(width)
+            .coalesce(self._width)
             .groupBy("host_hash")
             .agg(*[F.expr(f"sum({c}) AS {c}") for c in COUNTERS])
         )
@@ -788,7 +777,8 @@ def _fetch_rows_target(cfg: CrawlConfig) -> int:
     never degenerate to 1-row tasks.
     Pure sizing: partition count never changes results
     (test_pagerank_mode_partitioning_invariance crawls at JVM width 1 with
-    a 4-partition fetch, and with both widths opened to 13)."""
+    a 4-partition fetch, and at 13 task slots with both widths opened to
+    13)."""
     if cfg.fetch_cpu_work <= 0:
         return FETCH_ROWS_PER_PARTITION
     target_us = 100_000.0  # >= 100 ms of work per partition

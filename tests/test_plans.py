@@ -271,7 +271,9 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
         task. Past spark.ui.retainedStages the status store evicts stages
         in completion-time order, skipped ones (no completion time) first,
         so late in a long shared-session suite this round's skipped stages
-        are gone while its run stages, the newest, stay."""
+        are gone while its run stages, the newest, stay; a round that
+        reads as no stage or no task ran has been evicted whole, and fails
+        below rather than passing with nothing checked."""
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = spark.sparkContext.statusTracker()
         infos = [tracker.getStageInfo(sid) for sid in range(first, end)]
@@ -289,6 +291,7 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     assert n0 - nb <= 4, f"bootstrap launched {n0-nb} driver jobs (budget 4)"
     assert n1 - n0 == n2 - n1, f"per-round job count not flat: {n1-n0} vs {n2-n1}"
     assert n1 - n0 <= 9, f"round launched {n1-n0} driver jobs (budget 9)"
+    assert r1 > 0 and t1 > 0, f"round 1 ran {r1} stages, {t1} tasks: status store evicted it"
     assert r1 == r2, f"per-round stage count not flat: {r1} vs {r2}"
     assert r1 <= 12, f"round ran {r1} stages (budget 12)"
     assert t1 == t2, f"per-round task count not flat: {t1} vs {t2}"

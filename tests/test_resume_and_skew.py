@@ -142,11 +142,13 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
     its windows, joins and sinks one partition wide (the fetch at its
     4-partition floor) and with every shuffle up to an awkward prime 13
     wide must produce byte-identical seen and documents tables (order,
-    clock, spans). This fixture's frontiers hold at most a few
-    hundred rows, so the wide crawl lowers JVM_ROWS_PER_TASK and
-    FETCH_ROWS_PER_PARTITION to one row: its JVM width opens past the task
-    slots to the 13 cap, and its fetch past the 4-partition floor."""
+    clock, spans). The JVM width is one wave on the task slots capped at
+    shuffle_partitions, and this fixture's frontiers hold at most a few
+    hundred rows, so the wide crawl reports 13 task slots and lowers
+    FETCH_ROWS_PER_PARTITION to one row: its JVM width opens to the 13 cap,
+    and its fetch past the 4-partition floor."""
     import crawlspark.engine as engine
+    from pyspark import SparkContext
 
     def state(width: int, sub: str):
         cfg = CrawlConfig(
@@ -179,12 +181,11 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
         return widths, (summary["totals"], summary["rounds"], seen, docs)
 
     narrow_widths, narrow = state(1, "w1")
-    monkeypatch.setattr(engine, "JVM_ROWS_PER_TASK", 1)
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 13))
     monkeypatch.setattr(engine, "FETCH_ROWS_PER_PARTITION", 1)
     wide_widths, wide = state(13, "w13")
-    assert narrow_widths == [1] * len(narrow_widths)
-    assert len(wide_widths) == len(narrow_widths)
-    assert all(w > 1 for w in wide_widths) and 13 in wide_widths, wide_widths
+    assert narrow_widths and narrow_widths == [1] * len(narrow_widths)
+    assert wide_widths == [13] * len(narrow_widths), wide_widths
     assert narrow == wide
 
 
