@@ -37,6 +37,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import tempfile
 import time
@@ -61,7 +62,10 @@ def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
     """The one session factory of bench.py and the scripts under jobs/.
     ``master`` is any Spark master string: ``local[N]`` or
     ``local-cluster[n,cores,mem]``, whose executors read
-    ``spark.executor.memory``."""
+    ``spark.executor.memory``. A local-cluster session is returned once
+    its n executors have registered: the context starts before they do,
+    and until then ``defaultParallelism`` reads the cores registered so
+    far (at least 2), which CrawlEngine reads once as its task slots."""
     from pyspark.sql import SparkSession
 
     spark = (
@@ -76,7 +80,20 @@ def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cluster = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,.*\]", master)
+    if cluster:
+        _await_executors(spark.sparkContext, int(cluster.group(1)))
     return spark
+
+
+def _await_executors(sc, n: int, timeout: float = 120.0) -> None:
+    """Block until ``n`` executors have registered with ``sc`` (its
+    executor memory status also lists the driver)."""
+    deadline = time.time() + timeout
+    while (got := sc._jsc.sc().getExecutorMemoryStatus().size() - 1) < n:
+        if time.time() > deadline:
+            raise RuntimeError(f"{got} of {n} executors registered in {timeout:.0f} s")
+        time.sleep(0.1)
 
 
 def bench_queries(sf_dir: str, cpus: int) -> dict[str, float]:
@@ -199,8 +216,8 @@ def crawl_at(
     effectively unbounded, so rounds hold 10^4-10^5 URLs and per-URL python
     fetch+parse work dominates the fixed per-round cost (BASELINE.md scale
     demonstration). ``master`` defaults to ``local[cores]``; ``work`` sets
-    ``CrawlConfig.fetch_cpu_work`` (outputs are identical at any value, and
-    fetch partitions size from it, so heavy rounds fill the width);
+    ``CrawlConfig.fetch_cpu_work`` (outputs are identical at any value; the
+    fetch, like every stage of a round, runs one wave on the task slots);
     ``py_file`` ships a package zip to executors that do not share this
     process's path."""
     from crawlspark.config import CrawlConfig

@@ -79,27 +79,16 @@ DISCOVERY_ORDER = [
 _DISCOVERY_SQL = ", ".join(DISCOVERY_ORDER)
 FRONTIER_COLS = TABLE_SCHEMAS["frontier"].names
 
-# Two partition counts per round. Every task carries fixed cost
-# (scheduling, a shuffle-block fetch per map output, a file per sink task),
-# and most round tasks hold a few hundred rows.
-#
-# The round's JVM width — its windows, joins and groupBy (the session's
-# shuffle partitions), the next-frontier sink and the counter union — is
-# one wave on the task slots, capped at shuffle_partitions
-# (CrawlEngine._width). A second wave only adds fixed cost: a traced polite
-# round ran 92 tasks at two waves and 45 at one, and bench.py's big crawl
-# (rounds of 10^4-10^5 URLs) ran 8% faster at 4 partitions on 4 slots
-# than at 8.
-#
-# The mapInPandas fetch repartitions to ceil(frontier_size / rows target),
-# sized from the frontier size the previous manifest records (no counting
-# job) and clamped to [4, shuffle_partitions]; the target is this many rows
-# unless per-URL work is heavy (_fetch_rows_target). Python-stage tasks
-# carry more per-task cost (worker attach + Arrow setup), so small rounds
-# want few fat partitions — measured 2.4x round latency from oversizing —
-# while big rounds open up to the full shuffle_partitions. AQE cannot
-# re-plan Python stages.
-FETCH_ROWS_PER_PARTITION = 2000
+# One partition count per round, CrawlEngine._width: one wave on the task
+# slots, capped at shuffle_partitions. It sizes the round's windows, joins
+# and groupBy (the session's shuffle partitions), the salted fetch
+# repartition, the next-frontier sink and the counter union. Every task
+# carries fixed cost (scheduling, a shuffle-block fetch per map output, a
+# file per sink task, a Python worker and Arrow setup in the fetch), and a
+# second wave only adds that cost: a traced polite round ran 92 tasks at
+# two waves and 45 at one, and bench.py's big crawl (rounds of 10^4-10^5
+# URLs) ran 8% faster at 4 partitions on 4 slots than at 8. Tables do not
+# depend on the width (test_pagerank_mode_partitioning_invariance).
 
 # mapInPandas fetch output: spans come back as parallel primitive arrays and
 # are zipped into array<struct> JVM-side (arrays_zip stays in codegen and
@@ -191,10 +180,10 @@ class CrawlEngine:
         # R2 robots match over the joined dim's rules: round-invariant, and
         # building it is ~410 py4j round trips, so it is built once here
         self._allowed = allowed_col(path_col(F.col("url_canon")), F.col("rules"))
-        # the round's JVM width: one wave on the session's task slots
-        # (read once: each read is py4j round trips), capped at
-        # shuffle_partitions. Results are partition-count invariant (pinned
-        # by test_pagerank_mode_partitioning_invariance).
+        # the round's width (module note above FETCH_SCHEMA); the slot
+        # count is read once, since each read is py4j round trips, so on a
+        # cluster build the engine after its executors have registered
+        # (bench.make_spark waits for local-cluster executors)
         self._width = min(cfg.shuffle_partitions, spark.sparkContext.defaultParallelism)
 
     # ------------------------------------------------------------ robots
@@ -280,7 +269,7 @@ class CrawlEngine:
     def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
         """Seed list → frontier rows: canonicalized, depth 0 / priority 0.0,
         discovered in round ``rnd``, first-wins deduplicated by seed
-        position (``d_rank``), the window at the round's JVM width."""
+        position (``d_rank``), the window at the round's width."""
         self.spark.conf.set("spark.sql.shuffle.partitions", str(self._width))
         fr = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
@@ -396,11 +385,11 @@ class CrawlEngine:
 
         frontier = self.storage.read_round("frontier", rnd - 1)
 
-        # The round's JVM width sizes every window, join and groupBy planned
-        # below, and the frontier sink and counter union coalesce to it.
+        # The round's width sizes every window, join and groupBy planned
+        # below and the fetch repartition; the frontier sink and counter
+        # union coalesce to it.
         sp.conf.set("spark.sql.shuffle.partitions", str(self._width))
         prev_m = self.storage.manifest(rnd - 1) or {}
-        approx = _next_frontier_size(prev_m) or 0
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
         fr = self._admission_frame(frontier, rnd).persist()
@@ -425,27 +414,13 @@ class CrawlEngine:
         )
         deferred = ranked.filter("host_rank > host_budget")
 
-        # G3 salted repartition → F1/F2 fetch+parse (mapInPandas).
-        # Partition count adapts to the frontier size (known exactly from
-        # the previous manifest — no counting job): python-stage tasks have
-        # real fixed cost, so small rounds use few fat partitions, big
-        # rounds the full configured width. The rows-per-partition target is
-        # itself derived from the per-URL CPU cost (_fetch_rows_target), so
-        # heavy-work rounds saturate the configured width instead of running
-        # 16-wide on 32 cores (the round-4 probe's finding).
-        fetch_parts = max(
-            4,
-            min(
-                cfg.shuffle_partitions,
-                -(-max(approx, 1) // _fetch_rows_target(cfg)),
-            ),
-        )
-        # salt cardinality must be MUCH larger than the partition count:
-        # with only ~fetch_parts salts a hot host maps to ~fetch_parts keys
+        # G3 salted repartition → F1/F2 fetch+parse (mapInPandas), at the
+        # round's width. Salt cardinality must be MUCH larger than the
+        # partition count: with only ~width salts a hot host maps to ~width keys
         # and balls-in-bins collisions leave 2-3x stragglers (measured);
         # 64x oversalting gives each host ~64 keys per partition so the
         # per-partition key-count variance (std ~ sqrt(keys)) stays small
-        salt_n = fetch_parts * 64
+        salt_n = self._width * 64
         # only the columns the fetcher reads cross into Python
         admitted = (
             ranked.filter("host_rank <= host_budget")
@@ -459,7 +434,7 @@ class CrawlEngine:
                 "host_rank",
                 f"pmod(xxhash64(url_canon), {salt_n}) AS salt",
             )
-            .repartition(fetch_parts, "host_hash", "salt")
+            .repartition(self._width, "host_hash", "salt")
         )
         fetched = admitted.mapInPandas(
             _make_fetcher(cfg), FETCH_SCHEMA
@@ -757,33 +732,6 @@ def _next_frontier_size(manifest: dict | None) -> int | None:
     if not manifest:
         return None
     return manifest.get("next_frontier_size", manifest.get("frontier_size"))
-
-
-def _fetch_rows_target(cfg: CrawlConfig) -> int:
-    """Rows-per-partition target for the fetch stage, derived from per-URL
-    CPU cost instead of a fixed row count.
-
-    Light-work crawls (fetch_cpu_work=0) keep the measured-on-this-sandbox
-    default (FETCH_ROWS_PER_PARTITION): python tasks shorter
-    than ~0.5 s lose to worker-attach overhead, so small rounds want few
-    fat partitions. When per-URL work is heavy the same row count makes
-    partitions far fatter than they need to be to amortize attach cost and
-    mid-size rounds under-fill the configured width (the round-4 scaling
-    probe measured round 3 running 16-wide on 32 cores at ~4 ms/URL). Here
-    the target is sized so each partition carries >= TARGET_US of python
-    work — comfortably above attach cost — using the fetch_cpu_work burn
-    calibration (~2 us per unit per URL, BASELINE.md's round-5
-    parallel-fraction probe), floored at 8 rows so pathological work levels
-    never degenerate to 1-row tasks.
-    Pure sizing: partition count never changes results
-    (test_pagerank_mode_partitioning_invariance crawls at JVM width 1 with
-    a 4-partition fetch, and at 13 task slots with both widths opened to
-    13)."""
-    if cfg.fetch_cpu_work <= 0:
-        return FETCH_ROWS_PER_PARTITION
-    target_us = 100_000.0  # >= 100 ms of work per partition
-    per_url_us = 2.0 * cfg.fetch_cpu_work
-    return max(8, min(FETCH_ROWS_PER_PARTITION, int(target_us // per_url_us)))
 
 
 def _make_fetcher(cfg: CrawlConfig):

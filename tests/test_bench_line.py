@@ -122,3 +122,34 @@ def test_bad_env_knob_is_rejected_by_name(monkeypatch, tmp_path, name, text):
     run = bench.bench_big_crawl if name == "SPARK_GRAFT_BIGCRAWL_BUDGET" else bench.main
     with pytest.raises(ValueError, match=name):
         run()
+
+
+class _FakeContext:
+    """Stands in for a SparkContext whose executors register one per poll
+    until ``total``; the executor memory status also lists the driver."""
+
+    def __init__(self, total: int):
+        self.total, self.registered, self.polls = total, 0, 0
+        self._jsc = self
+
+    def sc(self):
+        return self
+
+    def getExecutorMemoryStatus(self):
+        return self
+
+    def size(self) -> int:
+        self.polls += 1
+        self.registered = min(self.total, self.registered + 1)
+        return self.registered + 1
+
+
+def test_await_executors_blocks_until_all_registered():
+    sc = _FakeContext(total=3)
+    bench._await_executors(sc, 3)
+    assert sc.registered == 3 and sc.polls == 3
+
+
+def test_await_executors_raises_when_executors_never_register():
+    with pytest.raises(RuntimeError, match="1 of 4 executors registered"):
+        bench._await_executors(_FakeContext(total=1), 4, timeout=0.3)

@@ -194,23 +194,3 @@ def test_fetch_cpu_work_does_not_change_results(spark, tmp_path):
         return summary["totals"], summary["rounds"], seen, docs
 
     assert state(0, "off") == state(50, "on")
-
-
-def test_fetch_rows_target_sizes_from_per_url_cost():
-    """_fetch_rows_target: heavy per-URL work shrinks the rows-per-partition
-    target so mid-size rounds saturate the configured width (round-4 probe
-    finding: 2000-row targets left a ~4 ms/URL round 16-wide on 32 cores);
-    light work keeps the measured sandbox default; pathological work levels
-    are floored so tasks never degenerate to single rows."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import FETCH_ROWS_PER_PARTITION, _fetch_rows_target
-
-    assert _fetch_rows_target(CrawlConfig()) == FETCH_ROWS_PER_PARTITION
-    # ~4 ms/URL (the round-4 probe's level): 100 ms target -> 25 rows
-    assert _fetch_rows_target(CrawlConfig(fetch_cpu_work=2000)) == 25
-    # with that target a 1000-URL round on 32 cores opens the full width
-    assert -(-1000 // 25) >= 32
-    # ~0.2 ms/URL: still fatter partitions, never above the light default
-    assert 8 <= _fetch_rows_target(CrawlConfig(fetch_cpu_work=100)) <= 2000
-    # absurd per-URL cost floors at 8 rows, not 0/1
-    assert _fetch_rows_target(CrawlConfig(fetch_cpu_work=10**9)) == 8

@@ -109,6 +109,55 @@ def test_resume_overwrites_orphan_round_dirs(spark, tmp_path, full_run):
     assert resumed_sum["rounds"] == full_sum["rounds"]
 
 
+class _Crash(Exception):
+    pass
+
+
+class _CrashingStorage(CrawlStorage):
+    """Raises during round 2 at one point of the round tail: right after
+    the ``edges`` or ``seen`` sink returns, or in the manifest commit."""
+
+    def __init__(self, spark, root, point):
+        super().__init__(spark, root)
+        self.point = point
+
+    def write_round(self, table, df, rnd):
+        super().write_round(table, df, rnd)
+        if rnd == 2 and table == self.point:
+            raise _Crash(table)
+
+    def commit_manifest(self, rnd, payload):
+        if rnd == 2 and self.point == "manifest":
+            # the tail sinks ran and wrote real rows before the commit
+            for table in ("documents", "frontier", "metrics"):
+                assert self.read_round(table, 2).count() > 0, table
+            raise _Crash("manifest")
+        super().commit_manifest(rnd, payload)
+
+
+@pytest.mark.parametrize("point", ["edges", "seen", "manifest"])
+def test_resume_after_crash_in_round_tail(spark, tmp_path, full_run, point):
+    """A crash at a point of round 2's tail leaves real (not garbage)
+    uncommitted round-2 files: a fresh engine on a plain storage must
+    redo round 2 over them and end in the uninterrupted run's exact
+    state."""
+    full_store, full_sum, cfg, seeds = full_run
+
+    eng = CrawlEngine(spark, cfg, _CrashingStorage(spark, tmp_path, point))
+    with pytest.raises(_Crash, match=point):
+        eng.run(seeds)
+    # the crashed process's cached frames die with it
+    spark.catalog.clearCache()
+    store = CrawlStorage(spark, tmp_path)
+    assert store.latest_manifest()["round"] == 1
+
+    resumed_sum = CrawlEngine(spark, cfg, store).run()
+    assert _engine_state(full_store) == _engine_state(CrawlStorage(spark, tmp_path))
+    assert resumed_sum["totals"] == full_sum["totals"]
+    assert resumed_sum["rounds"] == full_sum["rounds"]
+    assert resumed_sum["rounds_run_this_session"] == full_sum["rounds"] - 1
+
+
 def test_hot_domain_skew_equality(spark, tmp_path):
     """G3 salting is a physical change only: with ~50% of links hitting one
     host, results must still match the oracle exactly."""
@@ -138,16 +187,14 @@ def test_hot_domain_skew_equality(spark, tmp_path):
 def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
     """The "pagerank" priority ranks with exact fixed-point-integer math,
     which the module docstring claims is bit-identical across
-    partitionings — pin it IN THE LOOP: the same pagerank-mode crawl with
-    its windows, joins and sinks one partition wide (the fetch at its
-    4-partition floor) and with every shuffle up to an awkward prime 13
-    wide must produce byte-identical seen and documents tables (order,
-    clock, spans). The JVM width is one wave on the task slots capped at
-    shuffle_partitions, and this fixture's frontiers hold at most a few
-    hundred rows, so the wide crawl reports 13 task slots and lowers
-    FETCH_ROWS_PER_PARTITION to one row: its JVM width opens to the 13 cap,
-    and its fetch past the 4-partition floor."""
-    import crawlspark.engine as engine
+    partitionings — pin it IN THE LOOP: the same pagerank-mode crawl one
+    partition wide and an awkward prime 13 wide must produce byte-identical
+    seen and documents tables (order, clock, spans). The round's width (its
+    windows, joins, fetch and sinks) is one wave on the task slots capped
+    at shuffle_partitions, so the wide crawl reports 13 task slots. Each
+    round's documents and edges dirs hold at most ``width`` files: the
+    fetch, which both sinks write as partitioned, runs at the round's
+    width too."""
     from pyspark import SparkContext
 
     def state(width: int, sub: str):
@@ -169,6 +216,11 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
 
         eng.run_round = recording_round
         summary = eng.run(seeds)
+        for table in ("documents", "edges"):
+            for rnd in range(1, summary["rounds"] + 1):
+                rnd_dir = store.root / table / f"round={rnd:05d}"
+                n_files = len(list(rnd_dir.glob("*.parquet")))
+                assert 0 < n_files <= width, (table, rnd, n_files)
         seen = sorted(
             (r["url_hash"], r["url_canon"], r["round"])
             for r in store.read_table("seen").collect()
@@ -182,7 +234,6 @@ def test_pagerank_mode_partitioning_invariance(spark, tmp_path, monkeypatch):
 
     narrow_widths, narrow = state(1, "w1")
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 13))
-    monkeypatch.setattr(engine, "FETCH_ROWS_PER_PARTITION", 1)
     wide_widths, wide = state(13, "w13")
     assert narrow_widths and narrow_widths == [1] * len(narrow_widths)
     assert wide_widths == [13] * len(narrow_widths), wide_widths
