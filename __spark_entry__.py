@@ -471,8 +471,8 @@ def q_media_meta(spark, sf_dir):
 # registered query gets a driver row. Folded out in round 4 to make room:
 #   - lang_id (rows-only)  → covered by lang_id_eval (driver-green goldens
 #     over the same ops.text.with_lang_id path);
-#   - winnow_fingerprint (rows-only) → covered by
-#     tests/test_ops_semantics.py::test_winnow_fingerprints_guarantee.
+#   - winnow_fingerprint (rows-only) → the winnowing operator itself was
+#     later deleted as unused; `fingerprint` is the checked fingerprint.
 
 def q_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH candidate pairs at est_jaccard >= 0.5, hash-checked

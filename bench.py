@@ -62,15 +62,20 @@ def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
     """The one session factory of bench.py and the scripts under jobs/.
     ``master`` is any Spark master string: ``local[N]`` or
     ``local-cluster[n,cores,mem]``, whose executors read
-    ``spark.executor.memory``. A local-cluster session is returned once
-    its n executors have registered: the context starts before they do,
-    and until then ``defaultParallelism`` reads the cores registered so
-    far (at least 2), which CrawlEngine reads once as its task slots."""
+    ``spark.executor.memory``. On local-cluster, ``defaultParallelism``
+    (which CrawlEngine reads once as its task slots) is pinned to the
+    cluster's n × cores: unset, the standalone backend floors it at 2,
+    and until the executors register it reads the cores registered so
+    far. The session is returned once all n executors have registered,
+    so the Python-worker warm-up reaches each of them."""
     from pyspark.sql import SparkSession
 
+    cluster = _local_cluster_shape(master)
+    builder = SparkSession.builder.master(master)
+    if cluster:
+        builder = builder.config("spark.default.parallelism", str(cluster[0] * cluster[1]))
     spark = (
-        SparkSession.builder.master(master)
-        .appName("crawlspark-bench")
+        builder.appName("crawlspark-bench")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", str(aqe).lower())
         .config("spark.ui.enabled", "false")
@@ -80,10 +85,16 @@ def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    cluster = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,.*\]", master)
     if cluster:
-        _await_executors(spark.sparkContext, int(cluster.group(1)))
+        _await_executors(spark.sparkContext, cluster[0])
     return spark
+
+
+def _local_cluster_shape(master: str) -> tuple[int, int] | None:
+    """(executors, cores per executor) of a ``local-cluster[n, c, m]``
+    master; None for any other master."""
+    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,.*\]", master)
+    return (int(m.group(1)), int(m.group(2))) if m else None
 
 
 def _await_executors(sc, n: int, timeout: float = 120.0) -> None:

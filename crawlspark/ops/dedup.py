@@ -3,13 +3,17 @@
 Scale design (the reason these are built this way):
 
 - exact: one hash-groupBy shuffle on md5(text) — map-side partial agg free.
-- MinHash+LSH: signatures in one Arrow pass; the candidate-pair join is on
-  (band, band_hash) buckets, so its shuffle moves only (doc_id, bucket) pairs
-  — never text — and hot buckets are bounded by the banding parameters.
-- SimHash: 64-bit signature per doc; near-pair search joins Manku-style
-  block-combination keys (C(h+3, 3) tables of wide packed keys — exhaustive
-  for hamming ≤ h by pigeonhole) over DISTINCT signatures, so duplicate-heavy
-  corpora cannot blow up a bucket; again a key-only shuffle.
+- banded near-duplicate join (_band_sig_pairs, shared by MinHash+LSH,
+  SimHash and ops/similarity.embedding_near_dup_pairs): a self-join of
+  the DISTINCT signatures on (band, band_hash), so duplicate-heavy
+  corpora cannot blow up a bucket and the shuffle moves only (signature
+  identity, band, band_hash) — never text; doc ids re-attach per
+  signature pair (_id_pairs).
+- MinHash+LSH: signatures in one Arrow pass; bands are hashes of
+  `num_perm/bands`-slot slices, keyed by a 64-bit hash of the signature.
+- SimHash: 64-bit signature per doc; bands are Manku-style
+  block-combination keys (C(h+3, 3) tables of wide packed keys —
+  exhaustive for hamming ≤ h by pigeonhole).
 - n-gram Jaccard: exact verification on a *blocked* pair set; blocking keys
   bound the quadratic term.
 - cluster_pairs: iterative min-label connected components turning the pair
@@ -144,6 +148,64 @@ def with_minhash(
     return df.withColumn("minhash", minhash_udf(num_perm, shingle_k)(F.col(text_col)))
 
 
+def _band_sig_pairs(sigs: DataFrame, sig_col: str, key_expr: str) -> DataFrame:
+    """The banded self-join of lsh_candidate_pairs and simhash_near_pairs
+    (and so of ops/similarity.embedding_near_dup_pairs): the distinct
+    colliding signature pairs (sig_a < sig_b) of ``sigs``, which holds the
+    signature identity ``sig_col`` plus the columns the SQL array
+    expression ``key_expr`` (one key per band) reads.
+
+    Banding runs over DISTINCT signatures: D exact copies of a document put
+    one row, not D, into each of its band buckets, so bucket populations
+    are bounded by distinct-signature collisions, never by corpus
+    duplication. The band exchange carries only (``sig_col``, band,
+    band_hash)."""
+    banded = sigs.distinct().select(
+        sig_col, F.posexplode(F.expr(key_expr)).alias("band", "band_hash")
+    )
+    l, r = banded.alias("l"), banded.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col(f"l.{sig_col}") < F.col(f"r.{sig_col}")),
+        )
+        .select(F.col(f"l.{sig_col}").alias("sig_a"),
+                F.col(f"r.{sig_col}").alias("sig_b"))
+        .dropDuplicates(["sig_a", "sig_b"])
+    )
+
+
+def _id_pairs(
+    sig_pairs: DataFrame, ids: DataFrame, sig_col: str, score: str, same_score: float
+) -> DataFrame:
+    """Doc-id pairs (id_a < id_b, ``score``) from scored signature pairs
+    (sig_a, sig_b, ``score``): ids (id, ``sig_col``) re-attach per
+    signature pair, and docs with identical signatures pair within their
+    group at ``same_score``."""
+    cross_sig = (
+        sig_pairs.join(ids.select(F.col("id").alias("id_a"),
+                                  F.col(sig_col).alias("sig_a")), "sig_a")
+        .join(ids.select(F.col("id").alias("id_b"),
+                         F.col(sig_col).alias("sig_b")), "sig_b")
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            score,
+        )
+    )
+    same_sig = (
+        ids.alias("a")
+        .join(ids.alias("b"),
+              (F.col(f"a.{sig_col}") == F.col(f"b.{sig_col}"))
+              & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                F.lit(same_score).alias(score))
+    )
+    return cross_sig.unionByName(same_sig).dropDuplicates(["id_a", "id_b"])
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str = "doc_id",
@@ -153,21 +215,13 @@ def lsh_candidate_pairs(
     """LSH banding: split each signature into `bands` rows of `num_perm/bands`
     values, bucket-join on (band, hash(rows)), emit distinct candidate pairs
     with the MinHash Jaccard estimate (fraction of equal signature slots).
-    Pure DataFrame ops: posexplode + self-join + zip_with aggregate.
 
-    Banding runs over DISTINCT signatures (same recipe as
-    simhash_near_pairs and ops/similarity.embedding_near_dup_pairs):
-    duplicate-heavy corpora — the case that motivates dedup — contribute ONE
-    row per signature per band to the self-join, so bucket populations are
-    bounded by distinct-signature collisions, never by corpus duplication
-    (a corpus with D exact copies would otherwise put D rows into every one
-    of its 16 band buckets → D²·16 candidates). Pinned by
-    test_lsh_buckets_bounded_under_duplicates. Signature identity is a
-    64-bit xxhash64 of the full signature array (`sig_key`); the banding
-    join ships only (sig_key, band, band_hash); `est_jaccard` is computed
-    once per DISTINCT signature pair, then doc ids re-attach per sig_key
-    (identical-signature docs pair within their group at est_jaccard 1.0,
-    the exact value the slot comparison yields for equal arrays).
+    The bucket join is _band_sig_pairs over the distinct signatures,
+    identified by a 64-bit xxhash64 of the full signature array
+    (`sig_key`), so the band shuffle moves 24 bytes per row, never the
+    64x8-byte signature. `est_jaccard` is computed once per DISTINCT
+    signature pair; identical-signature docs pair at est_jaccard 1.0, the
+    exact value the slot comparison yields for equal arrays.
 
     Collision caveat: sig_key is a 64-bit hash OF the signature, so two
     DISTINCT signatures colliding on it are silently merged — the same_sig
@@ -181,76 +235,37 @@ def lsh_candidate_pairs(
     same_sig join and the dmap/ids re-attach on the minhash array itself —
     the 24-byte band shuffle can keep the hash either way."""
     r = num_perm // bands
-    dsig = (
-        sig_df.select("minhash")
-        .distinct()
-        .withColumn("sig_key", F.xxhash64("minhash"))
-    )
-    # Band rows carry ONLY (sig_key, band, band_hash): the banding join
-    # shuffles 24 bytes per row, never the 64x8-byte signature (pinned by
-    # test_lsh_band_join_is_key_only).
-    banded = dsig.select(
+    sigs = sig_df.select(F.xxhash64("minhash").alias("sig_key"), "minhash")
+    key_pairs = _band_sig_pairs(
+        sigs,
         "sig_key",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> hash(slice(minhash, b*{r}+1, {r})))"
-            )
-        ).alias("band", "band_hash"),
+        f"transform(sequence(0, {bands - 1}), "
+        f"b -> hash(slice(minhash, b*{r}+1, {r})))",
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    key_pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.sig_key") < F.col("r.sig_key")),
-        )
-        .select(F.col("l.sig_key").alias("key_a"), F.col("r.sig_key").alias("key_b"))
-        .dropDuplicates(["key_a", "key_b"])
-    )
-    dmap = dsig.select("sig_key", "minhash")
+    dmap = sigs.distinct()
     sig_pairs = (
         key_pairs.join(
-            dmap.select(F.col("sig_key").alias("key_a"),
-                        F.col("minhash").alias("sig_a")), "key_a")
+            dmap.select(F.col("sig_key").alias("sig_a"),
+                        F.col("minhash").alias("mh_a")), "sig_a")
         .join(
-            dmap.select(F.col("sig_key").alias("key_b"),
-                        F.col("minhash").alias("sig_b")), "key_b")
-        .withColumn(
-            "est_jaccard",
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)), "
-                "0, (acc, v) -> acc + v)"
-            ).cast("double")
-            / F.lit(num_perm),
+            dmap.select(F.col("sig_key").alias("sig_b"),
+                        F.col("minhash").alias("mh_b")), "sig_b")
+        .select(
+            "sig_a",
+            "sig_b",
+            (
+                F.expr(
+                    "aggregate(zip_with(mh_a, mh_b, (x, y) -> CAST(x = y AS INT)), "
+                    "0, (acc, v) -> acc + v)"
+                ).cast("double")
+                / F.lit(num_perm)
+            ).alias("est_jaccard"),
         )
-        .select("key_a", "key_b", "est_jaccard")
     )
     ids = sig_df.select(
         F.col(id_col).alias("id"), F.xxhash64("minhash").alias("sig_key")
     )
-    cross_sig = (
-        sig_pairs.join(ids.select(F.col("id").alias("id_a"),
-                                  F.col("sig_key").alias("key_a")), "key_a")
-        .join(ids.select(F.col("id").alias("id_b"),
-                         F.col("sig_key").alias("key_b")), "key_b")
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "est_jaccard",
-        )
-    )
-    same_sig = (
-        ids.alias("a")
-        .join(ids.alias("b"),
-              (F.col("a.sig_key") == F.col("b.sig_key"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.lit(1.0).alias("est_jaccard"))
-    )
-    return cross_sig.unionByName(same_sig).dropDuplicates(["id_a", "id_b"])
+    return _id_pairs(sig_pairs, ids, "sig_key", "est_jaccard", 1.0)
 
 
 def simhash_udf(seed: int = 42):
@@ -335,15 +350,12 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance ≤ max_hamming.
 
-    Two-level scale design:
-    - the banding join runs over DISTINCT signatures, so duplicate-heavy
-      corpora (the common case that motivates dedup) contribute one row per
-      signature to the candidate join, not a quadratic bucket;
-    - keys are block-combinations (6 choose 3 → 20 tables of ~32-bit keys
-      for hamming ≤ 3), exhaustive by pigeonhole: ≤3 dirty blocks leave ≥3
-      clean ones, and that exact combination collides.
-    Doc-level pairs are then expanded by joining ids back per signature;
-    identical-signature docs (hamming 0) pair within their signature group.
+    The bucket join is _band_sig_pairs over the distinct signatures, keyed
+    by block-combinations (6 choose 3 → 20 tables of ~32-bit keys for
+    hamming ≤ 3), exhaustive by pigeonhole: ≤3 dirty blocks leave ≥3 clean
+    ones, and that exact combination collides. Doc-level pairs are then
+    expanded by joining ids back per signature pair; identical-signature
+    docs (hamming 0) pair within their signature group.
 
     ``num_blocks`` trades table count against key width (any value >
     max_hamming is exhaustive by the same pigeonhole): the default
@@ -357,56 +369,15 @@ def simhash_near_pairs(
     if not (max_hamming < num_blocks <= 16):
         raise ValueError(f"need max_hamming < num_blocks <= 16, got {num_blocks}")
     choose = num_blocks - max_hamming
-    keyed = (
-        sim_df.select("simhash")
-        .distinct()
-        .select(
-            "simhash",
-            F.posexplode(F.expr(_simhash_key_expr(num_blocks, choose))).alias(
-                "tbl", "key"
-            ),
-        )
-    )
-    l, r = keyed.alias("l"), keyed.alias("r")
     sig_pairs = (
-        l.join(
-            r,
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.simhash") < F.col("r.simhash")),
+        _band_sig_pairs(
+            sim_df.select("simhash"), "simhash", _simhash_key_expr(num_blocks, choose)
         )
-        .select(
-            F.col("l.simhash").alias("sig_a"),
-            F.col("r.simhash").alias("sig_b"),
-            F.bit_count(
-                F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-            ).alias("hamming"),
-        )
+        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
         .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["sig_a", "sig_b"])
     )
     ids = sim_df.select(F.col(id_col).alias("id"), "simhash")
-    cross_sig = (
-        sig_pairs.join(ids.select(F.col("id").alias("id_a"),
-                                  F.col("simhash").alias("sig_a")), "sig_a")
-        .join(ids.select(F.col("id").alias("id_b"),
-                         F.col("simhash").alias("sig_b")), "sig_b")
-        .select("id_a", "id_b", "hamming")
-    )
-    same_sig = (
-        ids.alias("a")
-        .join(ids.alias("b"),
-              (F.col("a.simhash") == F.col("b.simhash"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.lit(0).alias("hamming"))
-    )
-    cross_sig = cross_sig.select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        "hamming",
-    )
-    return cross_sig.unionByName(same_sig).dropDuplicates(["id_a", "id_b"])
+    return _id_pairs(sig_pairs, ids, "simhash", "hamming", 0)
 
 
 def ngram_jaccard_pairs(

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawlspark.ops.dedup import simhash_near_pairs
+
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -118,99 +120,33 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs at scale: random-hyperplane LSH
     (Charikar 2002 [pub]) — 64 sign bits of projections onto seeded Gaussian
     hyperplanes pack into one BIGINT signature whose hamming distance
-    estimates the angle. Candidate pairs come from the same Manku-style
-    block-combination join as SimHash (C(h+3, 3) tables of wide packed keys,
-    exhaustive for hamming ≤ h by pigeonhole — dedup._simhash_key_expr),
-    banded over DISTINCT signatures with ids re-attached per signature pair,
-    so the banding shuffle carries only (signature, key) and duplicate-heavy
-    corpora cannot blow a bucket. Vectors re-attach once per candidate id
-    pair for the exact cosine verify. No candidate pair is trusted
-    unverified.
+    estimates the angle. Candidate pairs are dedup.simhash_near_pairs over
+    those signatures (its distinct-signature Manku block-combination join,
+    exhaustive for hamming ≤ h by pigeonhole, and its ``num_blocks``
+    check). Vectors re-attach once per candidate id pair for the exact
+    cosine verify; identical signatures do NOT imply cosine >= threshold,
+    so no candidate pair is trusted unverified.
 
     Recall semantics: exhaustive in signature-hamming, probabilistic in
     cosine — hamming/64 estimates angle/pi, so h=4 targets near-duplicates
     (cos >= ~0.98); raise max_hamming (more, narrower tables) to chase
     looser thresholds, or use brute_force_topk/ivf_topk for general ANN."""
-    from crawlspark.ops.dedup import _simhash_key_expr
-
-    if num_blocks is None:
-        num_blocks = max_hamming + 3
-    if not (max_hamming < num_blocks <= 16):
-        raise ValueError(f"need max_hamming < num_blocks <= 16, got {num_blocks}")
-    choose = num_blocks - max_hamming
     # localCheckpoint (not persist): the signature UDF pass is referenced
-    # five times below (distinct, two id re-attaches, the same-signature
-    # self-join) and an unpersisted UDF subtree re-executes per reference.
-    # persist() would pin the cache entry for the session lifetime (the
-    # CacheManager holds it by plan, not by reference — a leak across a
-    # many-query bench session); localCheckpoint blocks are reclaimed by the
-    # ContextCleaner once the driver-side reference goes away. eager=False
-    # keeps the scan inside the caller's action (honest bench timing);
-    # multi-reference dedup is preserved (localCheckpoint caches
-    # MEMORY_AND_DISK under the hood).
+    # several times by the near-pair join (distinct, two id re-attaches,
+    # the same-signature self-join) and an unpersisted UDF subtree
+    # re-executes per reference. persist() would pin the cache entry for the
+    # session lifetime (the CacheManager holds it by plan, not by reference
+    # — a leak across a many-query bench session); localCheckpoint blocks
+    # are reclaimed by the ContextCleaner once the driver-side reference
+    # goes away. eager=False keeps the scan inside the caller's action
+    # (honest bench timing); multi-reference dedup is preserved
+    # (localCheckpoint caches MEMORY_AND_DISK under the hood).
     sig = vectors.select(
         F.col(id_col).alias("id"), rh_sig_udf(seed)(F.col(vec_col)).alias("simhash")
     ).localCheckpoint(eager=False)
-    # Band over DISTINCT signatures (exactly like dedup.simhash_near_pairs):
-    # duplicate-heavy vector sets — the case that motivates near-dup removal —
-    # contribute ONE row per signature per table to the banding self-join, so
-    # bucket populations are bounded by distinct-signature collisions, never
-    # by corpus duplication (pinned by
-    # test_embedding_buckets_bounded_under_duplicates).
-    keyed = (
-        sig.select("simhash")
-        .distinct()
-        .select(
-            "simhash",
-            F.posexplode(F.expr(_simhash_key_expr(num_blocks, choose))).alias(
-                "tbl", "key"
-            ),
-        )
+    cand = simhash_near_pairs(
+        sig, id_col="id", max_hamming=max_hamming, num_blocks=num_blocks
     )
-    l, r = keyed.alias("l"), keyed.alias("r")
-    sig_pairs = (
-        l.join(
-            r,
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.simhash") < F.col("r.simhash")),
-        )
-        .filter(
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
-            <= max_hamming
-        )
-        .select(
-            F.col("l.simhash").alias("sig_a"), F.col("r.simhash").alias("sig_b")
-        )
-        .dropDuplicates(["sig_a", "sig_b"])
-    )
-    cross_sig = (
-        sig_pairs.join(
-            sig.select(F.col("id").alias("id_a"), F.col("simhash").alias("sig_a")),
-            "sig_a",
-        )
-        .join(
-            sig.select(F.col("id").alias("id_b"), F.col("simhash").alias("sig_b")),
-            "sig_b",
-        )
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-    )
-    # identical signatures (hamming 0) pair within their signature group; the
-    # exact-cosine verify below still gates them (equal signs do NOT imply
-    # cosine >= threshold)
-    same_sig = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.simhash") == F.col("b.simhash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    cand = cross_sig.unionByName(same_sig).dropDuplicates(["id_a", "id_b"])
     vecs = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     return (
         cand.join(vecs.select(F.col("id").alias("id_a"),

@@ -149,50 +149,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("lang_pred", lang_id_udf()(F.col(text_col)))
 
 
-def winnow_udf(k: int = 16, window: int = 8):
-    """Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003
-    [pub]): a polynomial ROLLING HASH over every k-char window, then the
-    minimum hash per `window` consecutive positions — guarantees any match
-    of length >= k + window - 1 shares a fingerprint, at ~2/(window+1)
-    density. Vectorized numpy (sliding-window views over the byte codes);
-    returns the sorted distinct fingerprint array per doc."""
-    import numpy as np
-
-    B = np.uint64(1_000_003)
-    powers = np.array([int(pow(1_000_003, k - 1 - j, 2**64)) for j in range(k)],
-                      dtype=np.uint64)
-
-    @F.pandas_udf("array<long>")
-    def _winnow(texts: pd.Series) -> pd.Series:
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        def one(t: str | None):
-            if not t or len(t) < k:
-                return []
-            codes = np.frombuffer(t.encode("utf-8", "replace"), dtype=np.uint8)
-            if len(codes) < k:
-                return []
-            with np.errstate(over="ignore"):
-                grams = sliding_window_view(codes, k).astype(np.uint64)
-                hashes = (grams * powers[None, :]).sum(axis=1, dtype=np.uint64)
-                if len(hashes) >= window:
-                    mins = sliding_window_view(hashes, window).min(axis=1)
-                else:
-                    mins = hashes.min(keepdims=True)
-            fps = np.unique(mins).astype(np.int64)  # two's-complement view
-            return fps.tolist()
-
-        return texts.map(one)
-
-    return _winnow
-
-
-def with_winnow_fingerprints(
-    df: DataFrame, text_col: str = "text", k: int = 16, window: int = 8
-) -> DataFrame:
-    return df.withColumn("winnow_fps", winnow_udf(k, window)(F.col(text_col)))
-
-
 def with_hash_split(
     df: DataFrame,
     id_col: str = "doc_id",

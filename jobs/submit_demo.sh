@@ -13,13 +13,15 @@ ROOT="${1:-${TMPDIR:-/tmp}/crawlspark-submit-demo}"
 rm -f "$ZIP"
 zip -qr "$ZIP" crawlspark
 
+# one task slot per CPU this process may use (bench.usable_cpus's rule);
+# each round sets spark.sql.shuffle.partitions to its own width
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 SPARK_SUBMIT="$(command -v spark-submit || echo /opt/spark/bin/spark-submit)"
 "$SPARK_SUBMIT" \
-  --master "local[${SPARK_GRAFT_CPUS:-8}]" \
+  --master "local[$CPUS]" \
   --py-files "$ZIP" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-8}" \
   --conf spark.ui.enabled=false \
   jobs/run_crawl.py \
   --root "$ROOT" \
   --seed-count 40 --web-hosts 12 --max-depth 2 --max-rounds 8 \
-  --shuffle-partitions "${SPARK_GRAFT_CPUS:-8}"
+  --shuffle-partitions "$CPUS"

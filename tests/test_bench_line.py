@@ -153,3 +153,20 @@ def test_await_executors_blocks_until_all_registered():
 def test_await_executors_raises_when_executors_never_register():
     with pytest.raises(RuntimeError, match="1 of 4 executors registered"):
         bench._await_executors(_FakeContext(total=1), 4, timeout=0.3)
+
+
+@pytest.mark.parametrize(
+    "master, shape",
+    [
+        ("local-cluster[4,1,4096]", (4, 1)),
+        ("local-cluster[ 2 , 3 , 1024 ]", (2, 3)),
+        ("local[4]", None),
+        ("local[*]", None),
+        ("spark://host:7077", None),
+    ],
+)
+def test_local_cluster_shape_parses_executors_and_cores(master, shape):
+    """make_spark pins spark.default.parallelism to executors × cores of a
+    local-cluster master (the standalone backend otherwise floors it at 2)
+    and awaits that many executors; other masters are left as they are."""
+    assert bench._local_cluster_shape(master) == shape

@@ -386,30 +386,6 @@ def test_curation_pipeline_fates(spark):
     assert kept == {1, 5}
 
 
-def test_winnow_fingerprints_guarantee(spark):
-    """Winnowing property: documents sharing a long substring share a
-    fingerprint; identical docs share all; unrelated docs share ~none."""
-    from crawlspark.ops.text import with_winnow_fingerprints
-
-    common = "this exact shared passage survives edits around it " * 2
-    rows = [
-        (1, "prefix one " + common + " suffix alpha"),
-        (2, "totally different opening " + common + " and another ending"),
-        (3, "no overlap here at all just distinct words and content shape"),
-        (4, "prefix one " + common + " suffix alpha"),  # identical to 1
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = {
-        r["doc_id"]: set(r["winnow_fps"])
-        for r in with_winnow_fingerprints(df).collect()
-    }
-    assert fps[1] == fps[4]  # identical docs -> identical fingerprint sets
-    shared = len(fps[1] & fps[2]) / len(fps[1] | fps[2])
-    assert shared > 0.2, f"shared passage not detected: {shared}"
-    disjoint = len(fps[1] & fps[3]) / len(fps[1] | fps[3])
-    assert disjoint < 0.05, f"unrelated docs overlap: {disjoint}"
-
-
 def test_bmp_pixels_and_resize_roundtrip():
     """Pixel decode must invert the generator exactly (padding stripped,
     bottom-up flip applied) and resize must pick real source pixels."""

@@ -137,6 +137,65 @@ def test_lsh_band_join_is_key_only(spark):
         )
 
 
+def _band_exchange_subtree(plan: str) -> list[str]:
+    """The operator lines below the (band, band_hash) hash exchange of a
+    physical plan tree string, down to the next exchange."""
+    lines = plan.splitlines()
+    i = next(
+        i for i, line in enumerate(lines)
+        if "Exchange hashpartitioning(band#" in line and "ReusedExchange" not in line
+    )
+    depth = lines[i].index("+-")
+    sub = []
+    for line in lines[i + 1:]:
+        if line.find("+-") <= depth:
+            break
+        sub.append(line)
+        if "Exchange" in line:
+            break
+    return sub
+
+
+def _near_dup_pairs(spark, op: str):
+    """One of the three banded near-duplicate operators on 100 copies of
+    one document (or vector) plus 30 distinct ones."""
+    import numpy as np
+
+    from crawlspark.ops import dedup, similarity
+
+    if op == "embedding":
+        rng = np.random.default_rng(11)
+        base = rng.standard_normal(32).astype(float).tolist()
+        rows = [(i, base) for i in range(100)]
+        rows += [(1000 + i, rng.standard_normal(32).astype(float).tolist())
+                 for i in range(30)]
+        vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        return similarity.embedding_near_dup_pairs(vecs, threshold=0.95)
+    rows = [(i, "the same exact duplicated document body " * 4) for i in range(100)]
+    rows += [(1000 + i, f"distinct text number {i} with filler words") for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    if op == "minhash":
+        return dedup.lsh_candidate_pairs(dedup.with_minhash(docs))
+    return dedup.simhash_near_pairs(dedup.with_simhash(docs))
+
+
+@pytest.mark.parametrize(
+    "op, sig", [("minhash", "sig_key"), ("simhash", "simhash"), ("embedding", "simhash")]
+)
+def test_near_dup_band_join_reads_distinct_signatures(spark, op, sig):
+    """The (band, band_hash) exchange feeding each near-duplicate
+    operator's banded self-join is fed by a distinct on the signature
+    (HashAggregate keyed on it over an exchange partitioned on it), so 100
+    copies of one document put one row, not 100, into each band bucket."""
+    out = _near_dup_pairs(spark, op)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    sub = _band_exchange_subtree(plan)
+    assert any(f"HashAggregate(keys=[{sig}#" in line for line in sub), (
+        "band exchange not fed by a distinct on the signature:\n" + "\n".join(sub)
+    )
+    assert f"Exchange hashpartitioning({sig}#" in sub[-1], "\n".join(sub)
+
+
 def test_quota_sample_is_window_group_limit(spark):
     """quota_sample's row_number()<=k filter must collapse to a
     WindowGroupLimit (map-side partial top-k BEFORE the group exchange) so a
