@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` — flagship: one crawl round (canonicalize → dedup → robots →
-politeness admission → synthetic fetch → interleaved spans) over a frontier
-derived from the sf0.001 ``documents`` table.
+``entry(spark)`` — flagship: one crawl round (canonicalize → dedup →
+politeness admission → synthetic fetch → interleaved spans; no robots or ban
+step) over a frontier derived from the sf0.001 ``documents`` table.
 
 ``queries()`` / ``oracle_sql()`` — operator corpus from SURVEY.md §2 plus the
 training-data-pipeline operators (dedup / similarity / text analysis /

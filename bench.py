@@ -61,40 +61,46 @@ def env_knob(name: str, parse, default: str):
 def make_spark(master: str, shuffle_partitions: int, aqe: bool = False):
     """The one session factory of bench.py and the scripts under jobs/.
     ``master`` is any Spark master string: ``local[N]`` or
-    ``local-cluster[n,cores,mem]``, whose executors read
-    ``spark.executor.memory``. On local-cluster, ``defaultParallelism``
-    (which CrawlEngine reads once as its task slots) is pinned to the
-    cluster's n × cores: unset, the standalone backend floors it at 2,
-    and until the executors register it reads the cores registered so
-    far. The session is returned once all n executors have registered,
-    so the Python-worker warm-up reaches each of them."""
+    ``local-cluster[n,cores,mem]``. On local-cluster, each executor's
+    ``spark.executor.memory`` is the master's ``mem`` MiB (a larger
+    setting stops the executors from starting; ``local[N]`` ignores it),
+    and ``defaultParallelism`` (which CrawlEngine reads once as its task
+    slots) is pinned to the cluster's n × cores: unset, the standalone
+    backend floors it at 2, and until the executors register it reads
+    the cores registered so far. The session is returned once all n
+    executors have registered, so the Python-worker warm-up reaches each
+    of them."""
     from pyspark.sql import SparkSession
 
     cluster = _local_cluster_shape(master)
     builder = SparkSession.builder.master(master)
     if cluster:
-        builder = builder.config("spark.default.parallelism", str(cluster[0] * cluster[1]))
+        n, cores, mem = cluster
+        builder = builder.config("spark.default.parallelism", str(n * cores)).config(
+            "spark.executor.memory", f"{mem}m"
+        )
     spark = (
         builder.appName("crawlspark-bench")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", str(aqe).lower())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", "4g")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
     if cluster:
-        _await_executors(spark.sparkContext, cluster[0])
+        _await_executors(spark.sparkContext, n)
     return spark
 
 
-def _local_cluster_shape(master: str) -> tuple[int, int] | None:
-    """(executors, cores per executor) of a ``local-cluster[n, c, m]``
-    master; None for any other master."""
-    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,.*\]", master)
-    return (int(m.group(1)), int(m.group(2))) if m else None
+def _local_cluster_shape(master: str) -> tuple[int, int, int] | None:
+    """(executors, cores per executor, MiB per executor) of a
+    ``local-cluster[n, c, m]`` master; None for any other master."""
+    m = re.fullmatch(
+        r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]", master
+    )
+    return tuple(int(g) for g in m.groups()) if m else None
 
 
 def _await_executors(sc, n: int, timeout: float = 120.0) -> None:

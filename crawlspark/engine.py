@@ -2,12 +2,14 @@
 
 One driver loop iteration = one crawl round:
 
-  frontier snapshot → [broadcast robots join (cuckoo ban flag probed per
-  host at dim build) → JVM robots path match] → [per-host priority ranking →
-  crawl-delay budget admission] → [salted repartition → mapInPandas
-  fetch/parse] → documents + edges appends → [canonicalize extracted links
-  → intra-round dedup → exact seen anti-join] → next frontier snapshot →
-  atomic manifest commit.
+  frontier snapshot → admission frame, cached once [broadcast robots join
+  (cuckoo ban flag probed per host at dim build) → JVM robots path match →
+  per-host priority rank of the eligible rows → each row's fate: banned,
+  robots, fetch (within the host's crawl-delay budget) or defer] → [fetch
+  rows → repartition(host_hash, url_hash) → mapInPandas fetch/parse] →
+  documents + edges appends → [canonicalize extracted links → intra-round
+  dedup → exact seen anti-join] → next frontier snapshot (deferred rows,
+  banned rows while an unban is coming, new rows) → atomic manifest commit.
 
 Crawl-ordering determinism (BASELINE.json:14 "matching the reference's crawl
 ordering"): the reference is sequential, so a parallel engine reproduces its
@@ -31,8 +33,8 @@ multi-column sort key costs nothing and is exactly as deterministic.
 Skew (G3): hot domains concentrate in one host partition. The *politeness*
 path (per-host window P2) must stay whole-host, but its per-row work is a
 comparison, so skew there is benign; the *fetch/parse* path is the expensive
-one and is salted — ``repartition(host_hash, salt)`` with
-``salt = pmod(xxhash64(url_canon), S)`` — safe because fetch is per-URL pure
+one and is keyed per URL — ``repartition(host_hash, url_hash)``, and every
+admitted row has its own ``url_hash`` — safe because fetch is per-URL pure
 and happens after admission.
 
 Plan construction is driver time that no executor overlaps: every
@@ -78,14 +80,16 @@ DISCOVERY_ORDER = [
 ]
 _DISCOVERY_SQL = ", ".join(DISCOVERY_ORDER)
 FRONTIER_COLS = TABLE_SCHEMAS["frontier"].names
+# G3: the fetch repartitions per URL, so a hot host spreads (docstring)
+FETCH_KEY = ["host_hash", "url_hash"]
 
 # One partition count per round, CrawlEngine._width: one wave on the task
 # slots, capped at shuffle_partitions. It sizes the round's windows, joins
-# and groupBy (the session's shuffle partitions), the salted fetch
-# repartition, the next-frontier sink and the counter union. Every task
-# carries fixed cost (scheduling, a shuffle-block fetch per map output, a
-# file per sink task, a Python worker and Arrow setup in the fetch), and a
-# second wave only adds that cost: a traced polite round ran 92 tasks at
+# and groupBy (the session's shuffle partitions), the fetch repartition,
+# the next-frontier sink and the counter union. Every task carries fixed
+# cost (scheduling, a shuffle-block fetch per map output, a file per sink
+# task, a Python worker and Arrow setup in the fetch), and a second wave
+# only adds that cost: a traced polite round ran 92 tasks at
 # two waves and 45 at one, and bench.py's big crawl (rounds of 10^4-10^5
 # URLs) ran 8% faster at 4 partitions on 4 slots than at 8. Tables do not
 # depend on the width (test_pagerank_mode_partitioning_invariance).
@@ -248,20 +252,36 @@ class CrawlEngine:
                 self.cuckoo.delete(key)
 
     def _admission_frame(self, frontier: DataFrame, rnd: int) -> DataFrame:
-        """A4 ban + R2 robots admission flags, JVM-only: the frontier joins
-        the broadcast robots dim, and both flags are column expressions. The
-        exact ban state (robots.banned AND the unban clock) backstops the
-        cuckoo answer, so a false positive never bans."""
+        """Every frontier row with its ``crawl_delay``, ``host_rank`` and
+        ``fate`` this round, JVM-only (a broadcast robots join and column
+        expressions): ``'banned'`` while the exact ban (robots.banned AND
+        the unban clock) and the cuckoo answer hold (A4: a false positive
+        never bans), ``'robots'`` where the rules disallow the row (R2),
+        else ``'fetch'`` within the host's crawl-delay budget and
+        ``'defer'`` past it (P2-P4). ``host_rank`` numbers the host's
+        eligible rows in discovery order; a skipped row ranks in its own
+        window partition, so it never takes a budget slot."""
         bans_active = self.cfg.unban_round is None or rnd < self.cfg.unban_round
+        budget = (
+            f"greatest(1, floor(CAST({self.cfg.round_seconds!r} AS DOUBLE)"
+            " / crawl_delay))"
+        )
         return (
             frontier.join(F.broadcast(self._robots_df()), "host", "left")
             .withColumn("is_allowed", self._allowed)
             .selectExpr(
                 *FRONTIER_COLS,
                 "coalesce(crawl_delay, 1.0D) AS crawl_delay",
-                "coalesce(maybe_banned AND banned, false) "
-                f"AND {bans_active} AS is_banned",
-                "is_allowed",
+                "CASE WHEN coalesce(maybe_banned AND banned, false) AND "
+                f"{bans_active} THEN 'banned' WHEN NOT is_allowed THEN 'robots' "
+                "END AS skip",
+            )
+            .selectExpr(
+                *FRONTIER_COLS,
+                "crawl_delay",
+                f"row_number() OVER (PARTITION BY host, skip ORDER BY {_DISCOVERY_SQL})"
+                " AS host_rank",
+                f"coalesce(skip, IF(host_rank <= {budget}, 'fetch', 'defer')) AS fate",
             )
         )
 
@@ -392,38 +412,18 @@ class CrawlEngine:
         prev_m = self.storage.manifest(rnd - 1) or {}
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
-        fr = self._admission_frame(frontier, rnd).persist()
-        # No counting here: the round's counters come from ONE per-bucket
-        # sum in the round tail, and nothing on the fetch path needs them.
+        # The round's one frontier cache: the fetch, the next frontier and
+        # the counters all read their rows from it by fate. No counting
+        # here: the round's counters come from ONE per-bucket sum in the
+        # round tail, and nothing on the fetch path needs them.
+        adm = self._admission_frame(frontier, rnd).persist()
 
         tick("admission_plan")
 
-        # P2–P4: per-host ranking, budget admission, virtual fetch clock.
-        # Banned and robots-disallowed rows are not ranked; banned rows stay
-        # in the frontier when an unban is coming (below).
-        ranked = (
-            fr.filter("NOT is_banned AND is_allowed")
-            .selectExpr(
-                "*",
-                f"row_number() OVER (PARTITION BY host ORDER BY {_DISCOVERY_SQL})"
-                " AS host_rank",
-                f"greatest(1, floor(CAST({cfg.round_seconds!r} AS DOUBLE)"
-                " / crawl_delay)) AS host_budget",
-            )
-            .persist()
-        )
-        deferred = ranked.filter("host_rank > host_budget")
-
-        # G3 salted repartition → F1/F2 fetch+parse (mapInPandas), at the
-        # round's width. Salt cardinality must be MUCH larger than the
-        # partition count: with only ~width salts a hot host maps to ~width keys
-        # and balls-in-bins collisions leave 2-3x stragglers (measured);
-        # 64x oversalting gives each host ~64 keys per partition so the
-        # per-partition key-count variance (std ~ sqrt(keys)) stays small
-        salt_n = self._width * 64
-        # only the columns the fetcher reads cross into Python
+        # G3 fetch repartition → F1/F2 fetch+parse (mapInPandas) at the
+        # round's width; only the columns the fetcher reads cross into Python
         admitted = (
-            ranked.filter("host_rank <= host_budget")
+            adm.filter("fate = 'fetch'")
             .selectExpr(
                 "url_canon",
                 "url_hash",
@@ -432,13 +432,10 @@ class CrawlEngine:
                 "depth",
                 "host_rank * crawl_delay AS fetch_time",
                 "host_rank",
-                f"pmod(xxhash64(url_canon), {salt_n}) AS salt",
             )
-            .repartition(self._width, "host_hash", "salt")
+            .repartition(self._width, *FETCH_KEY)
         )
-        fetched = admitted.mapInPandas(
-            _make_fetcher(cfg), FETCH_SCHEMA
-        ).persist()
+        fetched = admitted.mapInPandas(_make_fetcher(cfg), FETCH_SCHEMA).persist()
 
         # S3 documents append (contract schema + bookkeeping)
         # (content_sha2 reads ``spans`` as a lateral alias of this projection)
@@ -571,16 +568,17 @@ class CrawlEngine:
         new = self._append_unseen(cand, rnd)
         tick("seen_antijoin_write")
 
-        # U1: next frontier snapshot = deferred ∪ banned-deferred ∪ new.
-        # Banned rows are deferred when an unban is coming and dropped
-        # when the ban is forever (else the crawl never exhausts).
-        next_frontier = deferred.selectExpr(*FRONTIER_COLS)
-        if cfg.unban_round is not None:
-            next_frontier = next_frontier.unionByName(
-                fr.filter("is_banned").selectExpr(*FRONTIER_COLS)
-            )
-        # one sink task per width slot, not one per partition of each part
-        next_frontier = next_frontier.unionByName(new).coalesce(self._width)
+        # U1: next frontier snapshot = deferred ∪ banned ∪ new. Banned rows
+        # are kept when an unban is coming and dropped when the ban is
+        # forever (else the crawl never exhausts). One sink task per width
+        # slot, not one per partition of each part.
+        unban_coming = cfg.unban_round is not None
+        next_frontier = (
+            adm.filter(f"fate = 'defer' OR (fate = 'banned' AND {unban_coming})")
+            .selectExpr(*FRONTIER_COLS)
+            .unionByName(new)
+            .coalesce(self._width)
+        )
 
         # G1 counters: ONE groupBy(host_hash) sum over the round's cached
         # frames gives every RoundMetrics counter per host-hash bucket. Its
@@ -596,15 +594,15 @@ class CrawlEngine:
 
         per_bucket = (
             flags(
-                fr,
+                adm,
                 frontier_size="true",
-                skipped_banned="is_banned",
-                skipped_robots="NOT is_banned AND NOT is_allowed",
+                skipped_banned="fate = 'banned'",
+                skipped_robots="fate = 'robots'",
+                skipped_politeness="fate = 'defer'",
             )
             .unionByName(flags(fetched, fetched="true", ok_200="status = 200"))
             .unionByName(flags(cand_rows, candidates="true"))
             .unionByName(flags(new, new_urls="true"))
-            .unionByName(flags(deferred, skipped_politeness="true"))
             .coalesce(self._width)
             .groupBy("host_hash")
             .agg(*[F.expr(f"sum({c}) AS {c}") for c in COUNTERS])
@@ -667,7 +665,7 @@ class CrawlEngine:
             self.storage.expire_frontier_snapshots(keep_upto=rnd)
         m.extras["next_frontier_size"] = next_size
         m.extras["timings"] = timings
-        for df in (fr, ranked, fetched, edges, new):
+        for df in (adm, fetched, edges, new):
             df.unpersist()
         self.history.append(m)
         return m

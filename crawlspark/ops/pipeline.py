@@ -64,9 +64,12 @@ def curation_audit(
         F.col("_quality_ok") & (F.col(id_col) == F.col("_keep_id"))
     ).select(id_col, text_col)
 
-    pairs = simhash_near_pairs(
-        with_simhash(exact_reps, text_col), id_col=id_col, max_hamming=max_hamming
-    )
+    # localCheckpoint: the pair join reads the signatures several times, and
+    # Spark re-runs an unpersisted UDF subtree per reference (eager=False:
+    # the signature pass runs with the first action, as __spark_entry__'s
+    # simhash_near_pairs query does)
+    sigs = with_simhash(exact_reps, text_col).localCheckpoint(eager=False)
+    pairs = simhash_near_pairs(sigs, id_col=id_col, max_hamming=max_hamming)
     clusters = cluster_pairs(pairs).select(
         F.col("id").alias("_cid"), "cluster_rep"
     )

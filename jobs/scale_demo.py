@@ -6,8 +6,8 @@ unbounded politeness budget), then the SAME crawl with the skew fixture
 enabled (``CrawlConfig.hot_host`` routes ~50% of every page's out-links to
 one host — the hot-domain shape that breaks naive host-partitioned crawls
 at 10^10 scale). The demo asserts the skewed run's wall time stays within
-2x the balanced run: the engine's salted fetch repartition (64x oversalt)
-and url_hash-keyed dedup window are the mechanisms under test.
+2x the balanced run: the engine's fetch repartition on (host_hash,
+url_hash) and url_hash-keyed dedup window are the mechanisms under test.
 
 Per-round tables print for BASELINE.md; at the default size (10,000 hosts,
 25,000 seeds) the balanced run's per-round numbers must be bit-identical to
@@ -171,7 +171,7 @@ def main(argv: list[str] | None = None) -> None:
         # space — so wall times aren't directly comparable; per-URL
         # throughput (fetched+deduped per second) is. A straggler-bound
         # engine would crater under skew (one host's candidates pile into
-        # one partition); the salted fetch repartition and url_hash-keyed
+        # one partition); the per-URL fetch repartition and url_hash-keyed
         # dedup window must hold throughput within 2x of balanced.
         thr_b = results["balanced"]["throughput_urls_per_sec"]
         thr_s = results["skew"]["throughput_urls_per_sec"]

@@ -158,8 +158,9 @@ def test_await_executors_raises_when_executors_never_register():
 @pytest.mark.parametrize(
     "master, shape",
     [
-        ("local-cluster[4,1,4096]", (4, 1)),
-        ("local-cluster[ 2 , 3 , 1024 ]", (2, 3)),
+        ("local-cluster[4,1,4096]", (4, 1, 4096)),
+        ("local-cluster[ 2 , 3 , 1024 ]", (2, 3, 1024)),
+        ("local-cluster[2,1,4g]", None),
         ("local[4]", None),
         ("local[*]", None),
         ("spark://host:7077", None),
@@ -167,6 +168,7 @@ def test_await_executors_raises_when_executors_never_register():
 )
 def test_local_cluster_shape_parses_executors_and_cores(master, shape):
     """make_spark pins spark.default.parallelism to executors × cores of a
-    local-cluster master (the standalone backend otherwise floors it at 2)
-    and awaits that many executors; other masters are left as they are."""
+    local-cluster master (the standalone backend otherwise floors it at 2),
+    gives each executor the master's MiB as spark.executor.memory and
+    awaits that many executors; other masters are left as they are."""
     assert bench._local_cluster_shape(master) == shape

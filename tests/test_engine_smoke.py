@@ -83,8 +83,10 @@ def test_banned_hosts_never_fetched(crawl):
 
 def assert_round_counters_match_tables(storage, summary) -> None:
     """Every committed round: the frontier snapshot is unique per url_hash
-    and as large as the manifest says; the metrics (S7) table's per-round
-    column sums are the manifest's counters, and it has no all-zero row."""
+    and as large as the manifest says; in every fetch round the four
+    admission fates (banned, robots, defer, fetch) partition the frontier;
+    the metrics (S7) table's per-round column sums are the manifest's
+    counters, and it has no all-zero row."""
     rounds = range(summary["rounds"] + 1)
     manifests = {r: storage.manifest(r) for r in rounds}
     frontier = {
@@ -107,8 +109,11 @@ def assert_round_counters_match_tables(storage, summary) -> None:
         .agg(*[F.sum(c).alias(c) for c in cols])
         .collect()
     }
+    fates = ["skipped_banned", "skipped_robots", "skipped_politeness", "fetched"]
     for rnd in rounds[1:]:
-        want = {c: manifests[rnd][c] for c in cols}
+        m = manifests[rnd]
+        assert m["frontier_size"] == sum(m[c] for c in fates), rnd
+        want = {c: m[c] for c in cols}
         assert sums.get(rnd, dict.fromkeys(cols, 0)) == want, rnd
 
 

@@ -41,6 +41,31 @@ def test_robots_join_is_broadcast(spark, tmp_path):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
+def test_curation_audit_runs_simhash_once(spark, monkeypatch):
+    """curation_audit hands simhash_near_pairs checkpointed signatures:
+    the pair join reads them several times, and an unpersisted SimHash
+    UDF subtree plans (and runs) once per reference (12 Python eval nodes
+    on this fixture without the checkpoint)."""
+    import crawlspark.ops.pipeline as pipeline
+
+    pair_frames = []
+    real = pipeline.simhash_near_pairs
+
+    def capture(sigs, **kw):
+        pair_frames.append(real(sigs, **kw))
+        return pair_frames[-1]
+
+    monkeypatch.setattr(pipeline, "simhash_near_pairs", capture)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        "doc_id long, text string",
+    )
+    pipeline.curation_audit(docs, min_chars=10, min_tokens=2)
+    (pairs,) = pair_frames
+    plan = _plan(pairs)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_round_partition_pruning(spark, tmp_path, seen_rows):
     """S2: a `round <= k` predicate must prune to the matching partition
     dirs (Iceberg-snapshot-style pruning via the parquet facade)."""
@@ -357,6 +382,32 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     assert t1 <= 45, f"round ran {t1} tasks (budget 45)"
 
 
+def test_round_caches_frontier_once(spark, tmp_path, monkeypatch):
+    """A bfs round persists four frames: the admission frame (every
+    frontier row with its fate, read by the fetch, the next frontier and
+    the counters), the fetch output, the edges and the new rows."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.engine import CrawlEngine
+    from crawlspark.sources import synthweb
+    from crawlspark.storage import CrawlStorage
+
+    cfg = CrawlConfig(max_depth=2, max_rounds=2, web_hosts=6,
+                      shuffle_partitions=4)
+    eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
+    eng.bootstrap(synthweb.seed_list(cfg, n=20))
+    frame = type(spark.range(1))
+    persists = []
+    persist = frame.persist
+
+    def counting(self, *args, **kwargs):
+        persists.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "persist", counting)
+    eng.run_round(1)
+    assert len(persists) == 4, f"round persisted {len(persists)} frames (want 4)"
+
+
 def _py4j_counter(monkeypatch):
     """Returns ``commands(step)``: runs ``step()`` and returns how many py4j
     commands it sent. Object releases ("m\nd\n…") are not counted: they
@@ -392,9 +443,10 @@ def test_round_driver_round_trips_are_flat_and_bounded(spark, tmp_path, monkeypa
     call costs several commands (PySpark records each call site over
     py4j). The round writes its projections, filters, windows and
     counters as SQL text and builds the robots match expression once, at
-    engine construction (~410 commands, before these counts): 526
-    commands per bfs round and 178 for the bootstrap measured on this
-    fixture (3,664 and 439 with Column-API plans). Pins <= 800 per round,
+    engine construction (~410 commands, before these counts): 510
+    commands in round 1, 486 from round 2 and 161 for the bootstrap
+    measured on this fixture (3,664 per round and 439 for the bootstrap
+    with Column-API plans). Pins <= 800 per round,
     flat from round 2 (round 1 also builds the robots dim), and <= 439
     for the bootstrap."""
     from crawlspark.config import CrawlConfig

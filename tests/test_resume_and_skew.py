@@ -294,26 +294,23 @@ def test_deletable_ban_equality(spark, tmp_path):
 def test_salting_balances_hot_host_partitions(spark):
     """G3 physical check (SURVEY.md §5 layer 5): with one host holding 50%
     of URLs, a plain host partition has a 0.5-fraction straggler; the
-    (host_hash, salt) repartition must spread the hot host's rows so the
-    max/mean partition ratio stays bounded."""
+    engine's fetch repartition on ``FETCH_KEY`` (host_hash, url_hash) must
+    spread the hot host's rows so the max/mean partition ratio stays
+    bounded."""
     from pyspark.sql import functions as F
 
+    from crawlspark.engine import FETCH_KEY
+    from crawlspark.functions.canon import with_url_identity
+
     n = 20_000
-    df = (
-        spark.range(n)
-        .withColumn(
-            "host",
-            F.when(F.col("id") % 2 == 0, F.lit("hot.example")).otherwise(
-                F.format_string("host%03d.example", (F.col("id") % 100))
-            ),
+    df = with_url_identity(
+        spark.range(n).selectExpr(
+            "format_string('http://%s/p%d', IF(id % 2 = 0, 'hot.example', "
+            "format_string('host%03d.example', id % 100)), id) AS url_canon"
         )
-        .withColumn("url_canon", F.format_string("http://%s/p%d", "host", "id"))
-        .withColumn("host_hash", F.pmod(F.xxhash64("host"), F.lit(32)).cast("int"))
     )
     parts = 16
-    salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64("url_canon"), F.lit(parts * 64))
-    ).repartition(parts, "host_hash", "salt")
+    salted = df.repartition(parts, *FETCH_KEY)
     sizes = [
         r["count"]
         for r in salted.groupBy(F.spark_partition_id().alias("pid")).count().collect()
